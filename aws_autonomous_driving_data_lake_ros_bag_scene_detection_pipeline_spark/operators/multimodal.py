@@ -441,7 +441,9 @@ def _gif_iter_frames(payload: bytes):
         pos += 3 * n
     bg_rgb = (gct[bg] if gct is not None and bg < len(gct)
               else np.zeros(3, dtype=np.uint8))
-    canvas = np.broadcast_to(bg_rgb, (h, w, 3)).astype(np.uint8).copy()
+    # allocated at the first decoded frame: the header alone may claim
+    # a 65535x65535 screen (12.9 GB) that no frame ever backs
+    canvas = None
     transparent = None
     disposal = 0
     delay_cs = 0
@@ -508,6 +510,9 @@ def _gif_iter_frames(payload: bytes):
             raise ValueError(
                 f"GIF: pixel index {int(idx.max())} outside the "
                 f"{len(pal)}-entry palette")
+        if canvas is None:
+            canvas = np.empty((h, w, 3), dtype=np.uint8)
+            canvas[...] = bg_rgb
         region = canvas[top:top + fh, left:left + fw]
         prev_region = region.copy() if disposal == 3 else None
         frame = pal[idx]

@@ -5,10 +5,10 @@ a driver-side ``collect()`` + per-bag ``spark.range`` loop
 (synchronize_topics.py:111-157), then forward-fills each topic column
 with a window ``last(ignorenulls)`` (synchronize_topics.py:160-167).
 
-Here the spine is pure plan — ``groupBy().agg(min,max)`` +
-``explode(sequence(...))`` — so it scales with the cluster instead of
-the driver, and forward fill / as-of join are expressed as single
-window passes over data partitioned by the entity key.
+Here the grid is pure plan — ``explode(sequence(...))`` of tick ids —
+so it scales with the cluster instead of the driver, and grid LOCF,
+forward fill and as-of join are expressed as single window passes over
+data partitioned by the entity key.
 """
 
 from __future__ import annotations
@@ -17,6 +17,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .caching import register_persist
+
+
+def _tick(c: Column, step: float) -> Column:
+    """Grid tick id ``floor(c/step)`` with 6-dp tolerance: binary float
+    division artifacts (20.0/0.1 == 199.99999999999997) must not shift
+    the grid by a tick."""
+    return F.floor(F.round(c / F.lit(step), 6)).cast("long")
 
 
 def time_spine(df: DataFrame, keys: list[str], time_col: str, step: float,
@@ -34,13 +41,9 @@ def time_spine(df: DataFrame, keys: list[str], time_col: str, step: float,
     """
     spine_col = spine_col or time_col
     t = F.col(time_col)
-    # floor(t/step) with 6-dp tolerance: binary float division artifacts
-    # (20.0/0.1 == 199.99999999999997) must not shift the grid by a tick
-    def tick(c):
-        return F.floor(F.round(c / F.lit(step), 6)).cast("long")
     bounds = df.groupBy(*keys).agg(
-        tick(F.min(t)).alias("_t0"),
-        tick(F.max(t)).alias("_t1"),
+        _tick(F.min(t), step).alias("_t0"),
+        _tick(F.max(t), step).alias("_t1"),
     )
     return bounds.select(
         *keys,
@@ -72,28 +75,56 @@ def resample_asof(df: DataFrame, keys: list[str], time_col: str, step: float,
     → keep grid rows; synchronize_topics.py:170-197) as one composable
     operator.
 
-    Plan shape: spine (agg + explode) unioned with the signal rows, one
-    window pass partitioned by ``keys`` ordered by (time, is_spine), a
-    filter keeping spine rows. Two shuffles total on ``keys`` — no
-    global sort (the reference's global ``orderBy`` at
-    synchronize_topics.py:184 is unnecessary; the window sort suffices).
+    The grid is :func:`time_spine`'s: ticks ``tick(min t) ..
+    tick(max t)`` per key. A signal at ``t`` is visible from the first
+    tick ``k`` with ``k·step >= t``, so a signal exactly on a tick
+    lands on that tick. Rows with a NULL time are ignored.
 
-    Ties: a signal row exactly on a tick sorts *before* the spine row
-    (``_is_spine`` ascending), so its value is visible at that tick —
-    matching the reference's union-then-fill behavior.
+    Plan shape: ONE window pass partitioned by ``keys`` ordered by time
+    — one shuffle, no global sort (the reference's global ``orderBy``
+    at synchronize_topics.py:184 is unnecessary). In that pass each
+    signal row fills every value column (``last``/``first`` with
+    ``ignorenulls`` up to the current row) and reads its neighbours'
+    times (``lag``/``lead``); it then ``explode``s the ticks it owns,
+    from its own first visible tick up to the next row's minus one (the
+    last row stops at ``tick(t)``). A key's first row also emits the
+    pre-tick ``tick(t)`` when ``t`` is off-grid, with all values NULL.
+    No spine aggregate, no union with the signals, no filter.
+
+    The output time column has the type a union of the signals with
+    ``tick · step`` would have (e.g. long times with an integer step
+    stay long; any fractional step makes them double).
     """
-    spine = time_spine(df, keys, time_col, step).withColumn("_is_spine", F.lit(1))
-    signals = df.select(*keys, time_col, *value_cols).withColumn("_is_spine", F.lit(0))
-    unioned = spine.unionByName(signals, allowMissingColumns=True)
+    t = F.col(time_col)
+    out_type = df.select(
+        F.coalesce(t, F.lit(0).cast("long") * F.lit(step))).schema[0].dataType
 
-    w = (Window.partitionBy(*keys).orderBy(F.col(time_col).asc(), F.col("_is_spine").asc())
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    def grid(k: Column) -> Column:
+        return (k * F.lit(step)).cast(out_type)
+
+    def lo(c: Column) -> Column:
+        k = _tick(c, step)
+        return k + F.when(grid(k) < c.cast(out_type), 1).otherwise(0)
+
+    order = Window.partitionBy(*keys).orderBy(time_col)
+    upto = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     agg = F.last if how == "last" else F.first
-    filled = unioned.select(
-        *keys, time_col, F.col("_is_spine"),
-        *[agg(c, ignorenulls=True).over(w).alias(c) for c in value_cols],
+    rows = df.where(t.isNotNull()).select(
+        *keys, time_col,
+        F.lag(t).over(order).alias("_prev"),
+        F.lead(t).over(order).alias("_next"),
+        *[agg(c, ignorenulls=True).over(upto).alias(c) for c in value_cols],
     )
-    return filled.where(F.col("_is_spine") == 1).drop("_is_spine")
+    nxt = F.col("_next")
+    start = F.when(F.col("_prev").isNull(), _tick(t, step)).otherwise(lo(t))
+    end = F.when(nxt.isNull(), _tick(t, step)).otherwise(lo(nxt) - 1)
+    owned = rows.select(
+        *keys, lo(t).alias("_lo"), *value_cols,
+        F.explode(F.when(start <= end, F.sequence(start, end))).alias("_k"))
+    k = F.col("_k")
+    return owned.select(
+        *keys, grid(k).alias(time_col),
+        *[F.when(k >= F.col("_lo"), F.col(c)).alias(c) for c in value_cols])
 
 
 def asof_join(left: DataFrame, right: DataFrame, on: str, by: list[str],

@@ -7,24 +7,25 @@ single lazy Catalyst plan:
 |---|---|
 | per-file loop + union (44-75) | one multi-path read / ``union_by_name`` |
 | ``to_json(struct)`` payload (93-98) | optional — typed values by default |
-| driver ``collect()`` + per-bag ``spark.range`` grid (111-157) | ``groupBy().agg(min,max)`` + ``sequence``/``explode`` (pure plan) |
-| pivot without values (173-178) | pivot with explicit topic list (no distinct scan) |
+| union of the topics + pivot (173-178) | typed union: one column per topic, NULL on the other topics' rows (no pivot aggregate, no struct merge) |
+| driver ``collect()`` + per-bag ``spark.range`` grid (111-157) | each signal row ``explode``s the grid ticks it owns (``sequence`` of tick ids, pure plan) |
 | global ``orderBy(Time)`` (184) | dropped — the window sort suffices |
 | per-topic window fill loop (189-191) | one Window operator (shared spec) |
 
-Scale: two shuffles on the bag keys (bounds agg, window) + the pivot
-agg; no driver round trip, no Python. Works unchanged for millions of
-bags at 100 TB because the spine is generated executor-side.
+Scale: one shuffle on the bag keys (the window); no driver round trip,
+no Python. Works unchanged for millions of bags at 100 TB because the
+grid is generated executor-side. The grid fill itself is
+:func:`~..operators.timeseries.resample_asof`.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.timeseries import time_spine
+from ..operators.timeseries import resample_asof
 
 
 def pack_payload(df: DataFrame, keys: list[str], time_col: str,
@@ -47,37 +48,26 @@ def synchronize_topics(topic_dfs: dict[str, DataFrame], keys: list[str],
     group, forward-filling each topic's latest payload — the whole sync
     job (synchronize_topics.py:200-223) as one composable transform.
 
-    Output: ``keys + [time_col] + [<topic> ...]`` with one payload column
-    per topic (struct, or JSON string with ``as_json`` for reference
-    parity), one row per (keys, tick)."""
+    Output: ``keys + [time_col] + [<topic> ...]`` (topics sorted) with
+    one payload column per topic, one row per (keys, tick). Each topic
+    column holds only its own topic's fields: a struct, or a JSON
+    string with ``as_json`` for reference parity.
+
+    Each topic frame is tagged with every topic column — its own
+    payload in its own column, a typed NULL in the others — so the
+    plain ``unionByName`` merges no struct types and each column stays
+    as narrow as its topic. Several samples of one topic at the same
+    instant keep one of them, arbitrarily — like the reference's pivot
+    ``first()`` (synchronize_topics.py:177)."""
     topics = sorted(topic_dfs)
-    long = reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True),
-        [pack_payload(df, keys, time_col, as_json=as_json)
-         .withColumn("topic", F.lit(t))
-         for t, df in topic_dfs.items()])
-
-    # wide signal rows: one column per topic at observed times.
-    # first() matches the reference's dedup policy for multiple samples in
-    # one tick instant (synchronize_topics.py:177); values=topics skips
-    # the pivot's distinct scan.
-    wide = (long.groupBy(*keys, time_col)
-            .pivot("topic", topics)
-            .agg(F.first("payload")))
-
-    spine = (time_spine(long, keys, time_col, step)
-             .withColumn("_is_spine", F.lit(1)))
-    unioned = wide.withColumn("_is_spine", F.lit(0)).unionByName(
-        spine, allowMissingColumns=True)
-
-    # one Window spec → Catalyst evaluates all topic fills in a single
-    # physical Window operator. Signal rows at exactly a tick time sort
-    # before the spine row (_is_spine asc) so their value lands on it.
-    w = (Window.partitionBy(*keys)
-         .orderBy(F.col(time_col).asc(), F.col("_is_spine").asc())
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    filled = unioned.select(
-        *keys, time_col, "_is_spine",
-        *[F.last(t, ignorenulls=True).over(w).alias(t) for t in topics])
-
-    return (filled.where(F.col("_is_spine") == 1).drop("_is_spine"))
+    packed = {t: pack_payload(df, keys, time_col, as_json=as_json)
+              for t, df in topic_dfs.items()}
+    types = {t: packed[t].schema["payload"].dataType for t in topics}
+    tagged = [
+        packed[t].select(
+            *keys, time_col,
+            *[(F.col("payload") if u == t
+               else F.lit(None).cast(types[u])).alias(u) for u in topics])
+        for t in topics]
+    signals = reduce(DataFrame.unionByName, tagged)
+    return resample_asof(signals, keys, time_col, step, topics)

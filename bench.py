@@ -57,6 +57,17 @@ def _loadavg() -> float | None:
         return None
 
 
+def _clear_cache(spark) -> None:
+    """Drop cached blocks between measurements. A failure that killed
+    the session must not abort the loop: the next query reports its
+    own error instead."""
+    try:
+        spark.catalog.clearCache()
+    except Exception as e:  # pragma: no cover - bench robustness
+        print(f"bench clearCache failed: {type(e).__name__}: {e}",
+              file=sys.stderr)
+
+
 def _one_session(sf_dir: str, sf: float) -> dict:
     """One isolated measurement session (the pre-r12 harness body)."""
     import __spark_entry__ as entry
@@ -109,7 +120,7 @@ def _one_session(sf_dir: str, sf: float) -> dict:
             # operators persist() their signature relation; the CALLER
             # owns the lifetime, dedup.py:24-29) — don't let it skew the
             # next query's measurement
-            spark.catalog.clearCache()
+            _clear_cache(spark)
 
     # per-variant attribution for folded (tagged-union) entries
     # (r14 — VERDICT r13 item 6): one filtered steady-state run per
@@ -137,11 +148,13 @@ def _one_session(sf_dir: str, sf: float) -> dict:
                 df.where(F.col(tag) == v) \
                     .write.format("noop").mode("overwrite").save()
                 vt[v] = round(time.time() - t0, 3)
+                # each variant builds its own cache, like the main loop
+                _clear_cache(spark)
             variants[name] = vt
         except Exception as e:  # pragma: no cover
             print(f"bench variant error in {name}: "
                   f"{type(e).__name__}: {e}", file=sys.stderr)
-        spark.catalog.clearCache()
+        _clear_cache(spark)
     spark.stop()
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)

@@ -230,6 +230,24 @@ def test_decoder_total_on_hostile_bytes(blob):
         pass
 
 
+def test_header_screen_size_allocates_nothing_without_a_frame():
+    """The logical screen is allocated only once a frame decodes: a
+    header claiming a 4096x4096 screen and no image (or a broken one)
+    raises without touching 50 MB."""
+    import tracemalloc
+
+    header = b"GIF89a" + (4096).to_bytes(2, "little") * 2 + b"\x00\x00\x00"
+    tracemalloc.start()
+    try:
+        for tail in (b"\x3b", b"\x2c" + bytes(9) + b"\x02\x00"):
+            with pytest.raises(ValueError):
+                _decode_gif(header + tail)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20
+
+
 def test_decode_image_dispatch_and_provenance(spark):
     from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark import decode_image, pack_media
 

@@ -171,6 +171,89 @@ def test_synchronize_topics_json_mode(topic_dfs):
     assert r.steering == '{"angle":0.1}'
 
 
+def test_synchronize_topics_columns_keep_own_fields(spark):
+    """Each synced column is its own topic's payload struct — no
+    superset struct merged from the other topics' fields."""
+    gps = spark.createDataFrame([("b1", 0.0, 1.0, 2.0)],
+                                "bag_file string, Time double, lat double, lon double")
+    imu = spark.createDataFrame([("b1", 0.05, [1.0, 2.0], 7)],
+                                "bag_file string, Time double, acc array<double>, seq int")
+    steer = spark.createDataFrame([("b1", 0.1, "left")],
+                                  "bag_file string, Time double, mode string")
+    out = synchronize_topics({"steering": steer, "imu": imu, "gps": gps},
+                             KEYS, step=0.1)
+    assert out.columns == ["bag_file", "Time", "gps", "imu", "steering"]
+    fields = {c: [(f.name, f.dataType.simpleString())
+                  for f in out.schema[c].dataType.fields]
+              for c in ("gps", "imu", "steering")}
+    assert fields == {"gps": [("lat", "double"), ("lon", "double")],
+                      "imu": [("acc", "array<double>"), ("seq", "int")],
+                      "steering": [("mode", "string")]}
+    rows = {round(r.Time, 1): r for r in out.collect()}
+    assert rows[0.1].gps.lat == 1.0 and rows[0.1].imu.seq == 7
+    assert rows[0.1].steering.mode == "left"
+    assert rows[0.0].imu is None and rows[0.0].steering is None
+
+
+def test_synchronize_topics_grid_edge_cases(spark):
+    a = spark.createDataFrame(
+        [("b1", 0.05, 1.0),                 # first observation off-grid
+         ("b1", 0.30000000000000004, 2.0),  # == 3 * 0.1 exactly
+         ("b1", 0.4, 3.0),                  # 0.4 / 0.1 float artifact
+         ("b1", 0.47, 4.0)],                # after the last tick (0.4)
+        "bag_file string, Time double, va double")
+    b = spark.createDataFrame(
+        [("b1", 0.2, 10.0),                 # exactly on a tick
+         ("b1", 0.4, 20.0)],                # same instant as a's 0.4
+        "bag_file string, Time double, vb double")
+    out = synchronize_topics({"a": a, "b": b}, KEYS, step=0.1)
+    got = sorted((r.Time, r.a and r.a.va, r.b and r.b.vb)
+                 for r in out.collect())
+    assert [round(t, 9) for t, _, _ in got] == [0.0, 0.1, 0.2, 0.3, 0.4]
+    assert [(va, vb) for _, va, vb in got] == [
+        (None, None),     # pre-tick before the first observation
+        (1.0, None),
+        (1.0, 10.0),      # b on the tick lands on it
+        (2.0, 10.0),      # 0.30000000000000004 lands on tick 3
+        (3.0, 20.0),      # both topics at 0.4 land together; 0.47 is past
+    ]
+
+
+def test_synchronize_topics_time_ns_integer_step(spark):
+    step = 100_000_000
+    t0 = 1_700_000_000_000_000_000
+    a = spark.createDataFrame(
+        [("b1", t0 + 50_000_000, 1.0), ("b1", t0 + 200_000_000, 2.0),
+         ("b1", t0 + 200_000_001, 3.0)],
+        "bag_file string, time_ns long, v double")
+    b = spark.createDataFrame([("b1", t0 + 100_000_000, 5)],
+                              "bag_file string, time_ns long, n int")
+    out = synchronize_topics({"a": a, "b": b}, KEYS, time_col="time_ns",
+                             step=step)
+    assert out.schema["time_ns"].dataType.simpleString() == "bigint"
+    got = sorted((r.time_ns, r.a and r.a.v, r.b and r.b.n)
+                 for r in out.collect())
+    assert got == [(t0, None, None), (t0 + step, 1.0, 5),
+                   (t0 + 2 * step, 2.0, 5)]
+
+
+@pytest.mark.parametrize("ttype,step,expect", [
+    ("double", 0.1, "double"), ("float", 0.1, "double"),
+    ("bigint", 100, "bigint"), ("int", 100, "bigint"),
+    ("bigint", 0.5, "double"),
+])
+def test_synchronize_topics_time_type_unchanged(spark, ttype, step, expect):
+    """The grid time column keeps the type the signals ∪ ``tick·step``
+    union gives: long times with an integer step stay long, a
+    fractional step makes them double."""
+    df = spark.createDataFrame([("b1", 1, 1.0), ("b1", 2, 2.0)],
+                               "bag_file string, Time int, v double") \
+        .withColumn("Time", F.col("Time").cast(ttype))
+    out = synchronize_topics({"a": df, "b": df}, KEYS, step=step)
+    assert out.schema["Time"].dataType.simpleString() == expect
+    assert out.count() == round(1 / step) + 1
+
+
 # ---------- scene summarization ----------
 
 def test_summarize_person_scenes(spark):

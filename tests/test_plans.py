@@ -66,6 +66,27 @@ def test_resample_locf_no_extra_shuffles(spark):
         out._jdf.queryExecution(), "formatted")
 
 
+def test_grid_locf_one_exchange_one_window(spark):
+    """The grid fill is one window pass over one hash(keys) shuffle:
+    no spine aggregate, no pivot aggregate — for resample_asof and for
+    synchronize_topics, whatever the number of topics."""
+    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.pipeline import (
+        synchronize_topics,
+    )
+    raw = spark.read.parquet(f"{SF_DIR}/events.parquet")
+    ev = raw.select("user_id", entry._ts_us(raw).alias("t"), "value",
+                    "event_type")
+    locf = resample_asof(ev, ["user_id"], "t", 3_600_000_000, ["value"])
+    topics = {typ: ev.where(F.col("event_type") == typ)
+              .select("user_id", "t", "value")
+              for typ in ("click", "view", "purchase")}
+    synced = synchronize_topics(topics, ["user_id"], time_col="t",
+                                step=3_600_000_000)
+    for df in (locf, synced):
+        assert count_exchanges(df) == 1
+        assert count_window_ops(df) == 1
+
+
 def test_window_running_one_exchange_two_frames(spark):
     """The folded rows+range+chunked query's exchange budget: the two
     classic frames share ONE hash(user_id) exchange and the r6 chunked

@@ -165,6 +165,61 @@ TEXTS = st.lists(
     min_size=0, max_size=12)
 
 
+# one topic stream: a sample period and (key, sample index, value)
+# rows, unique per (key, index) — no duplicate timestamps in a topic
+topic_stream = st.tuples(
+    st.integers(1, 9),
+    st.lists(st.tuples(st.integers(0, 2), st.integers(0, 12),
+                       st.integers(-50, 50)),
+             max_size=12, unique_by=lambda r: (r[0], r[1])))
+
+
+@SETTINGS
+@given(streams=st.lists(topic_stream, min_size=3, max_size=3),
+       step=st.sampled_from([1, 3, 5]), scale=st.sampled_from([1, 0.25]))
+def test_synchronize_topics_matches_python_locf_oracle(spark, streams,
+                                                        step, scale):
+    """Random multi-key, multi-rate topics vs a pure-Python grid LOCF:
+    per key, ticks ``floor(min t/step) .. floor(max t/step)`` over all
+    topics; each tick carries every topic's latest sample at or before
+    ``tick·step`` (NULL before the topic's first sample). ``scale=1``
+    runs long times on an integer step, ``0.25`` double times on a
+    fractional one (dyadic, so the oracle's float arithmetic is exact).
+    """
+    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.pipeline import (
+        synchronize_topics,
+    )
+
+    ttype = "long" if scale == 1 else "double"
+    step = step * scale
+    topics = {}
+    for name, (period, rows) in zip(("gps", "imu", "steer"), streams):
+        samples = [(k, i * period * scale, v) for k, i, v in rows]
+        topics[name] = spark.createDataFrame(
+            samples, f"k int, t {ttype}, {name}_v long")
+    out = synchronize_topics(topics, ["k"], time_col="t", step=step)
+    got = {(r.k, r.t): tuple(r[n] and r[n][f"{n}_v"] for n in sorted(topics))
+           for r in out.collect()}
+
+    expect = {}
+    for key in range(3):
+        per_topic = {n: sorted((i * p * scale, v) for k, i, v in rows
+                               if k == key)
+                     for n, (p, rows) in zip(("gps", "imu", "steer"),
+                                             streams)}
+        times = [t for obs in per_topic.values() for t, _ in obs]
+        if not times:
+            continue
+        for tick in range(math.floor(min(times) / step),
+                          math.floor(max(times) / step) + 1):
+            at = tick * step
+            expect[(key, at)] = tuple(
+                next((v for t, v in reversed(per_topic[n]) if t <= at),
+                     None)
+                for n in sorted(topics))
+    assert got == expect
+
+
 @SETTINGS
 @given(texts=TEXTS)
 def test_incremental_minhash_equals_full_remine_cross_pairs(spark, texts):

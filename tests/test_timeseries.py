@@ -259,8 +259,9 @@ def test_resample_interpolate_linear_values(spark):
 
 def test_resample_interpolate_single_exchange(spark):
     """Both window directions share one partitioning: the plan carries
-    exactly the two shuffles of resample_asof (spine agg + window), not
-    an extra exchange for the forward pass."""
+    the spine agg's shuffle and ONE window shuffle — at most one more
+    than resample_asof's single window shuffle, not an extra exchange
+    for the forward pass."""
     from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark import (
         resample_asof, resample_interpolate,
     )
