@@ -4094,14 +4094,15 @@ from events a join events b
 
 
 def q_scene_geometry(spark, sf_dir):
-    """Object-in-lane geometry (detect_scenes.py:13-112) via the
-    relational explode→join→aggregate plan (objects_in_lane_by_key) —
-    whole-stage codegen end to end, no interpreted array lambdas —
-    driven by deterministic synthetic scenes derived from lineitem.
-    Oracle-checked: under this fixture's vertical-lane layout the
-    geometry reduces to a closed-form SQL predicate (Q_SCENE_SQL); the
-    general argmin/cutoff semantics are differentially tested against a
-    Python oracle and the expression form in tests/test_pipeline.py."""
+    """Object-in-lane geometry (detect_scenes.py:13-112) via
+    objects_in_lane_by_key — one numpy kernel over Arrow batches, a
+    single narrow stage after the detection aggregate — driven by
+    deterministic synthetic scenes derived from lineitem. The key
+    argument is unused by the kernel. Oracle-checked: under this
+    fixture's vertical-lane layout the geometry reduces to a closed-form
+    SQL predicate (Q_SCENE_SQL); the general argmin/cutoff/null
+    semantics are tested against a Python oracle in
+    tests/test_properties.py and tests/test_pipeline.py."""
     li = _t("lineitem")(spark, sf_dir).where(F.col("l_orderkey") <= 2000)
     dets = (li.groupBy("l_orderkey")
             .agg(F.collect_list(F.struct(
@@ -4139,7 +4140,7 @@ def q_scene_geometry(spark, sf_dir):
 # in-lane iff x_min or x_max (= x∓5) lands in that band. No boundary
 # float risk: l_quantity is integral, so 4·q ∓ 5 never equals 60 or
 # 140. The argmin/cutoff/label machinery this fixture can't exercise is
-# differentially tested against a Python oracle in tests/test_pipeline.py.
+# tested against a Python oracle in tests/test_properties.py.
 Q_SCENE_SQL = """
 with det as (
   select l_orderkey,

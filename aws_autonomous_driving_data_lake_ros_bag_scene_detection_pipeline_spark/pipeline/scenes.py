@@ -4,12 +4,14 @@ Re-expresses the reference's second EMR job (detect_scenes.py) Spark-first:
 
 - The reference leaves Catalyst for per-row Python three times
   (``df.rdd.map`` at detect_scenes.py:115-117 and 185-190, a scalar UDF at
-  192-193). Here every step is a Catalyst expression: the geometric
-  object-in-lane test is nested higher-order array functions
-  (``transform``/``filter``/``aggregate``), people counting is
-  ``size(filter(...))``, and the state machine is ``when/otherwise`` +
-  window lag/lead — so the whole job stays inside whole-stage codegen and
-  survives a 100 TB scan without a Python worker round trip.
+  192-193). Here people counting is ``size(filter(...))`` and the state
+  machine is ``when/otherwise`` + window lag/lead, both Catalyst
+  expressions. The object-in-lane test is the one per-row kernel: a
+  scalar Arrow UDF that runs numpy over each Arrow batch's buffers, one
+  row at a time. It replaced two Catalyst forms. Higher-order array
+  lambdas are interpreted per row (~3.6 ms a row), and the relational
+  explode → join → argmin-aggregate plan cost 7 Spark jobs and ~2 s of a
+  ~4 s dense benchmark pass; the kernel is one narrow stage, no shuffle.
 
 - Inputs are *typed* columns (``array<struct<...>>``), not the reference's
   double-nested JSON strings (detect_scenes.py:96). ``from_json`` adapters
@@ -29,15 +31,20 @@ Semantics parity (documented against detect_scenes.py):
   ``corners_in_lane`` count and distinct pair labels in corner order
   (detect_scenes.py:67-90).
 - rows where either input column is null → ``objects_in_lane`` null
-  (detect_scenes.py:93-112).
+  (detect_scenes.py:93-112); a row with no hit → ``[]``.
 - The reference crashes (KeyError) when a lane has no points; here an
   empty/point-free lane simply never matches — identical results on all
-  inputs the reference can process.
+  inputs the reference can process. Likewise a null lane, null
+  ``image_points`` or null point never matches, and a null detection or
+  one with a null or NaN coordinate is never in a lane.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -60,219 +67,128 @@ LANES_SCHEMA = T.ArrayType(T.StructType([
 
 MAX_NEAREST_DIST = 1000.0
 
-
-def _nearest_xs(lanes: Column, cx: Column, cy: Column) -> Column:
-    """x of the nearest image point per lane (null when the lane has no
-    point within MAX_NEAREST_DIST) — detect_scenes.py:19-44 as one
-    ``transform`` + running-argmin ``aggregate``."""
-    init = F.lit(None).cast("struct<d:double,px:double>")
-
-    def per_lane(lane):
-        def step(acc, p):
-            d = F.sqrt((p["x"] - cx) * (p["x"] - cx) + (p["y"] - cy) * (p["y"] - cy))
-            better = d < F.coalesce(acc["d"], F.lit(MAX_NEAREST_DIST))
-            return F.when(better, F.struct(d.alias("d"), p["x"].alias("px"))).otherwise(acc)
-
-        return F.aggregate(lane["image_points"], init, step)["px"]
-
-    return F.transform(lanes, per_lane)
+#: ``objects_in_lane`` element type: the detection plus its corner hits
+OBJECTS_IN_LANE_SCHEMA = T.ArrayType(T.StructType([
+    *DETECTIONS_SCHEMA.elementType.fields,
+    T.StructField("corners_in_lane", T.IntegerType()),
+    T.StructField("lanes", T.ArrayType(T.StringType())),
+]))
 
 
-def _corner_label(nearest: Column, cx: Column) -> Column:
-    """First adjacent-lane pair whose nearest-point xs bracket ``cx``;
-    null when none — detect_scenes.py:47-64."""
-    n = F.size(nearest)
-    idx = F.sequence(F.lit(0), n - 2)
+def _fields(arr: pa.StructArray) -> dict[str, pa.Array]:
+    """Children of a struct array by name, the struct's nulls merged in."""
+    return dict(zip((f.name for f in arr.type), arr.flatten()))
 
-    def brackets(i):
-        a = F.element_at(nearest, (i + 1).cast("int"))
-        b = F.element_at(nearest, (i + 2).cast("int"))
-        return (a.isNotNull() & b.isNotNull()
-                & (((cx >= a) & (cx <= b)) | ((cx <= a) & (cx >= b))))
 
-    hits = F.filter(idx, brackets)
-    first = F.element_at(hits, 1)
-    return F.when(
-        (n >= 2) & (F.size(hits) > 0),
-        F.concat(F.lit("between_"), first.cast("string"),
-                 F.lit("_and_"), (first + 1).cast("string")))
+def _f64(arr: pa.Array) -> np.ndarray:
+    """float64 numpy copy of a numeric array; null reads as NaN."""
+    return pc.cast(arr, pa.float64()).to_numpy(zero_copy_only=False)
+
+
+def _objects_in_lane_kernel(dets: pa.ListArray,
+                            lanes: pa.ListArray) -> pa.ListArray:
+    """The object-in-lane test over one Arrow batch, one row at a time.
+
+    Per row, every corner of every detection is measured against every
+    point of every lane at once (one row's dets × points × 4 corners is
+    the largest temporary). Null coordinates read as NaN: a NaN
+    distance is never below the cutoff and a NaN x never brackets, so
+    null and NaN inputs never match."""
+    det_raw = _fields(dets.values)
+    x, y, w, h = (_f64(det_raw[c]) for c in ("x", "y", "width", "height"))
+    x0, x1, y0, y1 = x - w / 2, x + w / 2, y - h / 2, y + h / 2
+    # corner order of detect_scenes.py:68-79
+    cxs = np.stack([x0, x1, x0, x1], axis=1)
+    cys = np.stack([y0, y0, y1, y1], axis=1)
+    ip = _fields(lanes.values)["image_points"]
+    pts = _fields(ip.values)
+    px, py = _f64(pts["x"]), _f64(pts["y"])
+    ip_off = ip.offsets.to_numpy()
+    ip_null = ip.is_null().to_numpy(zero_copy_only=False)
+    d_off, l_off = dets.offsets.to_numpy(), lanes.offsets.to_numpy()
+    row_null = pc.or_(dets.is_null(), lanes.is_null()).to_numpy(
+        zero_copy_only=False)
+
+    out_off, kept, hits, lane_off, labels = [0], [], [], [0], []
+    for r in range(len(dets)):
+        ds, de, ls, le = d_off[r], d_off[r + 1], l_off[r], l_off[r + 1]
+        if row_null[r] or de == ds or le - ls < 2:
+            out_off.append(len(kept))
+            continue
+        cx, cy = cxs[ds:de].ravel(), cys[ds:de].ravel()
+        # x of the nearest point per (corner, lane): strict cutoff,
+        # first point wins a tie (detect_scenes.py:19-44)
+        near = np.full((len(cx), le - ls), np.nan)
+        for j, lane in enumerate(range(ls, le)):
+            s, e = ip_off[lane], ip_off[lane + 1]
+            if ip_null[lane] or s == e:
+                continue
+            dx, dy = px[s:e] - cx[:, None], py[s:e] - cy[:, None]
+            d = np.sqrt(dx * dx + dy * dy)
+            d = np.where(d < MAX_NEAREST_DIST, d, np.inf)
+            k = d.argmin(axis=1)
+            ok = np.isfinite(d[np.arange(len(cx)), k])
+            near[ok, j] = px[s:e][k[ok]]
+        # first adjacent-lane pair whose xs bracket the corner; y is
+        # ignored (detect_scenes.py:47-64)
+        a, b = near[:, :-1], near[:, 1:]
+        inside = ((np.minimum(a, b) <= cx[:, None])
+                  & (cx[:, None] <= np.maximum(a, b)))
+        pair = np.where(inside.any(axis=1), inside.argmax(axis=1), -1)
+        for i, corners in enumerate(pair.reshape(-1, 4), start=ds):
+            hit = [int(c) for c in corners if c >= 0]
+            if hit:
+                kept.append(i)
+                hits.append(len(hit))
+                labels.extend(f"between_{c}_and_{c + 1}"
+                              for c in dict.fromkeys(hit))
+                lane_off.append(len(labels))
+        out_off.append(len(kept))
+
+    idx = pa.array(kept, pa.int64())
+    elem = OBJECTS_IN_LANE_SCHEMA.elementType
+    children = [pc.cast(det_raw[f.name].take(idx), pa.float64())
+                for f in elem.fields[:4]]
+    children += [
+        pc.cast(det_raw["Class"].take(idx), pa.string()),
+        pa.array(hits, pa.int32()),
+        pa.ListArray.from_arrays(pa.array(lane_off, pa.int32()),
+                                 pa.array(labels, pa.string())),
+    ]
+    return pa.ListArray.from_arrays(
+        pa.array(out_off, pa.int32()),
+        pa.StructArray.from_arrays(children, names=elem.names),
+        mask=pa.array(row_null))
+
+
+@F.arrow_udf(OBJECTS_IN_LANE_SCHEMA)
+def _objects_in_lane_udf(dets: pa.Array, lanes: pa.Array) -> pa.Array:
+    # inf - inf and overflowing squares are NaN/inf by design
+    with np.errstate(invalid="ignore", over="ignore"):
+        return _objects_in_lane_kernel(dets, lanes)
 
 
 def objects_in_lane(detections: Column | str, lanes: Column | str) -> Column:
     """``array<struct<x,y,width,height,Class,corners_in_lane,lanes>>`` of
     the detections with ≥1 bbox corner inside a lane — the reference's
-    ``obj_in_lane_detection`` (detect_scenes.py:93-112) without leaving
-    Catalyst. Null if either input is null."""
-    dets = F.col(detections) if isinstance(detections, str) else detections
-    lns = F.col(lanes) if isinstance(lanes, str) else lanes
-
-    def per_object(o):
-        x_min, x_max = o["x"] - o["width"] / 2, o["x"] + o["width"] / 2
-        y_min, y_max = o["y"] - o["height"] / 2, o["y"] + o["height"] / 2
-        corner_labels = F.array(*[
-            _corner_label(_nearest_xs(lns, cx, cy), cx)
-            for cx, cy in ((x_min, y_min), (x_max, y_min),
-                           (x_min, y_max), (x_max, y_max))
-        ])
-        in_lane = F.filter(corner_labels, lambda v: v.isNotNull())
-        return F.struct(
-            o["x"].alias("x"), o["y"].alias("y"),
-            o["width"].alias("width"), o["height"].alias("height"),
-            o["Class"].alias("Class"),
-            F.size(in_lane).alias("corners_in_lane"),
-            F.array_distinct(in_lane).alias("lanes"),
-        )
-
-    enriched = F.transform(dets, per_object)
-    kept = F.filter(enriched, lambda s: s["corners_in_lane"] > 0)
-    return F.when(dets.isNotNull() & lns.isNotNull(), kept)
+    ``obj_in_lane_detection`` (detect_scenes.py:93-112) as a scalar
+    Arrow UDF over :func:`_objects_in_lane_kernel`. Null if either input
+    is null; ``[]`` when no detection is in a lane."""
+    return _objects_in_lane_udf(detections, lanes)
 
 
 def objects_in_lane_by_key(df: DataFrame, detections_col: str,
-                           lanes_col: str, keys: list[str],
+                           lanes_col: str, keys: list[str] | None = None,
                            out_col: str = "objects_in_lane") -> DataFrame:
-    """:func:`objects_in_lane` as a relational plan (explode → join →
-    aggregate) instead of nested array expressions.
+    """``df``'s columns plus :func:`objects_in_lane` as ``out_col``.
 
-    Same semantics, different physical strategy: higher-order array
-    functions are CodegenFallback in Spark — evaluated row-at-a-time by
-    the interpreter — and the nested argmin-per-lane-per-corner tree
-    costs ~3.6 ms/row, which cannot survive a 100 TB scan. This
-    formulation joins lane points to exploded *detections* (not corners:
-    all four corner↔point distances are evaluated in one whole-stage-
-    codegen projection per joined row, 4× fewer join rows than a corner
-    explode), takes the per-(detection, lane) argmin for each corner as
-    four ``min(struct(d, pi, px))`` hash aggregates, finds the first
-    adjacent-lane pair bracketing each corner with a window ``lead``
-    over the lane index (replacing a lanes×lanes self-join), and
-    rebuilds the per-row array with ``collect_list`` + position sort.
-    Every heavy operator is codegen'd; the only higher-order calls left
-    run on ≤4-element arrays.
-
-    All shuffles share the ``keys`` prefix (join on keys → aggregate on
-    (keys, det, lane) → window + aggregate on (keys, det) → aggregate on
-    keys), so AQE coalesces them into co-partitioned exchanges; the
-    dets × lane-points row multiplication is the inherent work of the
-    geometry, spread across the cluster instead of nested inside one
-    interpreted expression. Detection attributes ride through the
-    aggregates as ``first()``s, so nothing joins back to the exploded
-    detections.
-
-    ``keys`` must uniquely identify rows of ``df`` (the reference keys
-    scenes by bag + timestamp: detect_scenes.py:197-201); otherwise
-    detections of distinct rows would merge.
-
-    Returns ``df``'s columns plus ``out_col``; row order is not
-    preserved (it is never meaningful to the downstream window, which
-    re-sorts by time). Null detections/lanes → null, exactly like
-    :func:`objects_in_lane` (detect_scenes.py:93-112).
-    """
-    dets = F.col(detections_col)
-    lns = F.col(lanes_col)
-    valid = dets.isNotNull() & lns.isNotNull()
-    base = df.withColumn("_valid", valid)
-    vb = base.where(F.col("_valid")).select(*keys, dets.alias("_dets"),
-                                            lns.alias("_lanes"))
-
-    # detections, exploded with their position (order restored at the
-    # end); corner xs/ys precomputed — corner i's coordinates are
-    # (_cx{i}, _cy{i}) in the fixed reference order (detect_scenes.py:
-    # 68-79: (x_min,y_min), (x_max,y_min), (x_min,y_max), (x_max,y_max))
-    o = F.col("_o")
-    x_min, x_max = o["x"] - o["width"] / 2, o["x"] + o["width"] / 2
-    y_min, y_max = o["y"] - o["height"] / 2, o["y"] + o["height"] / 2
-    corner_xy = [(x_min, y_min), (x_max, y_min), (x_min, y_max), (x_max, y_max)]
-    d = (vb.select(*keys, F.posexplode("_dets").alias("_di", "_o"))
-         .select(*keys, "_di",
-                 o["x"].alias("_x"), o["y"].alias("_y"),
-                 o["width"].alias("_w"), o["height"].alias("_h"),
-                 o["Class"].alias("_cls"),
-                 *[c.alias(f"_c{a}{i}")
-                   for i, (cx, cy) in enumerate(corner_xy)
-                   for a, c in (("x", cx), ("y", cy))]))
-
-    # lane points, exploded; point-free lanes survive with a null point
-    lane_pts = (vb.select(*keys, F.posexplode("_lanes").alias("_li", "_lane"))
-                .select(*keys, "_li",
-                        F.posexplode_outer("_lane.image_points").alias("_pi", "_p"))
-                .select(*keys, "_li",
-                        F.col("_pi"),
-                        F.col("_p.x").alias("_px"), F.col("_p.y").alias("_py")))
-
-    # nearest point per (detection, lane) for all 4 corners at once:
-    # argmin with the reference's strict 1000.0 cutoff
-    # (detect_scenes.py:19-28); min(struct) tie-breaks on point index =
-    # first-point-wins, like the reference's strict '<'
-    def corner_np(i):
-        dx = F.col("_px") - F.col(f"_cx{i}")
-        dy = F.col("_py") - F.col(f"_cy{i}")
-        dist = F.sqrt(dx * dx + dy * dy)
-        return F.min(F.when(dist < MAX_NEAREST_DIST,
-                            F.struct(dist.alias("d"),
-                                     F.col("_pi").alias("pi"),
-                                     F.col("_px").alias("px")))).alias(f"_np{i}")
-
-    passthru = ["_x", "_y", "_w", "_h", "_cls",
-                "_cx0", "_cx1", "_cx2", "_cx3"]
-    near = (d.join(lane_pts, list(keys))
-            .groupBy(*keys, "_di", "_li")
-            .agg(*[F.first(c).alias(c) for c in passthru],
-                 *[corner_np(i) for i in range(4)]))
-
-    # first adjacent-lane pair whose nearest xs bracket each corner
-    # (detect_scenes.py:47-64: x-only, first pair wins) — the "next
-    # lane" comes from a window lead, not a self-join
-    w = Window.partitionBy(*keys, "_di").orderBy("_li")
-    withnext = near.select(
-        *keys, "_di", "_li", *passthru,
-        *[F.col(f"_np{i}")["px"].alias(f"_pxa{i}") for i in range(4)],
-        *[F.lead(F.col(f"_np{i}")["px"]).over(w).alias(f"_pxb{i}")
-          for i in range(4)])
-
-    def corner_hit(i):
-        pxa, pxb = F.col(f"_pxa{i}"), F.col(f"_pxb{i}")
-        cx = F.col(f"_cx{i}")
-        brackets = (pxa.isNotNull() & pxb.isNotNull()
-                    & (((cx >= pxa) & (cx <= pxb))
-                       | ((cx <= pxa) & (cx >= pxb))))
-        return F.min(F.when(brackets, F.col("_li"))).alias(f"_hit{i}")
-
-    def label(i):
-        h = F.col(f"_hit{i}")
-        return F.when(h.isNotNull(),
-                      F.concat(F.lit("between_"), h.cast("string"),
-                               F.lit("_and_"), (h + 1).cast("string")))
-
-    # per detection: labels in corner order (≤4-element arrays — the
-    # only higher-order calls left, negligible at this size); the
-    # window's (keys, _di) partitioning is exactly this groupBy's key,
-    # so no extra exchange separates them
-    per_det = (withnext.groupBy(*keys, "_di")
-               .agg(*[F.first(c).alias(c) for c in passthru[:5]],
-                    *[corner_hit(i) for i in range(4)])
-               .withColumn("_in_lane",
-                           F.filter(F.array(*[label(i) for i in range(4)]),
-                                    lambda v: v.isNotNull()))
-               .where(F.size("_in_lane") > 0))
-
-    enriched = per_det.select(*keys, "_di", F.struct(
-        F.col("_x").alias("x"), F.col("_y").alias("y"),
-        F.col("_w").alias("width"), F.col("_h").alias("height"),
-        F.col("_cls").alias("Class"),
-        F.size("_in_lane").alias("corners_in_lane"),
-        F.array_distinct("_in_lane").alias("lanes")).alias("_s"))
-    per_row = (enriched.groupBy(*keys)
-               .agg(F.transform(
-                   F.sort_array(F.collect_list(F.struct("_di", "_s"))),
-                   lambda s: s["_s"]).alias("_oil")))
-
-    empty = F.array().cast(
-        "array<struct<x:double,y:double,width:double,height:double,"
-        "Class:string,corners_in_lane:int,lanes:array<string>>>")
-    return (base.join(per_row, list(keys), "left")
-            .select(*df.columns,
-                    F.when(F.col("_valid"),
-                           F.coalesce(F.col("_oil"), empty)).alias(out_col)))
+    The test is per row, so this is one narrow stage: no exchange, and
+    row order and partitioning are kept. ``keys`` is unused; it is kept
+    so callers that pass the scene key (bag + timestamp,
+    detect_scenes.py:197-201) keep working, and rows need not be unique
+    on it."""
+    return df.select(*df.columns, objects_in_lane(
+        detections_col, lanes_col).alias(out_col))
 
 
 def detect_scenes(df: DataFrame, detections_col: str, lanes_col: str,

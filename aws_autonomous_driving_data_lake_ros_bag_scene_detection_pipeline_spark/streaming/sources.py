@@ -52,6 +52,17 @@ _LEDGER_SCHEMA = ("path string, size long, mtime long, part string, "
                   "batch_id long")
 
 
+def _files_frame(spark: SparkSession, files: list[tuple]) -> DataFrame:
+    """``(path, size, mtime, part)`` rows as a local relation. Built from
+    pandas over Arrow, so collecting it runs no Spark job; a frame built
+    from a Python list is an RDD scan that costs a job per action."""
+    import pandas as pd
+    cols = ["path", "size", "mtime", "part"]
+    return spark.createDataFrame(pd.DataFrame(files, columns=cols),
+                                 "path string, size long, mtime long, "
+                                 "part string")
+
+
 def _seals_path(ledger_path: str) -> str:
     return ledger_path.rstrip("/") + "_seals"
 
@@ -188,8 +199,7 @@ def discover_new_files(spark: SparkSession, landing_path: str,
     else:
         # distributed anti-join: the already-ingested path set stays
         # executor-side; only the NEW files come back to the driver
-        cdf = spark.createDataFrame(
-            cands, "path string, size long, mtime long, part string")
+        cdf = _files_frame(spark, cands)
         new = [(r["path"], r["size"], r["mtime"], r["part"])
                for r in cdf.join(led.select("path"), "path",
                                  "left_anti")
@@ -256,9 +266,7 @@ def file_ingest_batch(spark: SparkSession, landing_path: str,
                               anti_join_threshold=anti_join_threshold)
     out = {"batch_id": batch_id, **disc["stats"], "sealed_now": []}
     if disc["files"]:
-        files_df = spark.createDataFrame(
-            [(p, sz, mt, part) for p, sz, mt, part in disc["files"]],
-            "path string, size long, mtime long, part string")
+        files_df = _files_frame(spark, disc["files"])
         process(files_df, batch_id)
         out["ledger_version"] = snapshot_append(
             spark, ledger_path,

@@ -74,6 +74,22 @@ def test_only_new_files_delivered_per_step(spark, tmp_path):
     assert read_snapshot(spark, led).count() == 4
 
 
+def test_files_frame_collects_without_a_job(spark, tmp_path, count_jobs):
+    """The file list handed to ``process`` is a local relation:
+    collecting it runs no Spark job."""
+    land, led = str(tmp_path / "land"), str(tmp_path / "ledger")
+    _drop(f"{land}/d=2026-01-01", "a.jsonl", "x")
+    _drop(f"{land}/d=2026-01-02", "b.jsonl", "y")
+    seen, jobs = [], []
+
+    def process(files_df, batch_id):
+        jobs.append(count_jobs(lambda: seen.extend(files_df.collect())))
+
+    file_ingest_batch(spark, land, led, process=process, partition_col="d")
+    assert jobs == [0]
+    assert sorted(r["part"] for r in seen) == ["2026-01-01", "2026-01-02"]
+
+
 def test_glob_filters_and_markers_skipped(spark, tmp_path):
     land = str(tmp_path / "land")
     led = str(tmp_path / "ledger")

@@ -1,13 +1,12 @@
 """Pipeline parity tests.
 
-The geometry test uses an independent pure-Python oracle implementing the
-documented reference semantics (detect_scenes.py:13-112 — nearest lane
-point with strict 1000 cutoff, x-only between-ness over adjacent lane
-pairs, 4 bbox corners, first pair wins) and checks the Catalyst
-expression version against it on seeded random scenes.
+The geometry tests check the Arrow kernel against an independent
+pure-Python oracle of the documented reference semantics
+(detect_scenes.py:13-112 — nearest lane point with strict 1000 cutoff,
+x-only between-ness over adjacent lane pairs, 4 bbox corners, first pair
+wins; ``tests/scene_oracle.py``) on seeded random scenes.
 """
 
-import math
 import random
 
 import pytest
@@ -19,44 +18,10 @@ from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.pip
     summarize_person_scenes,
     synchronize_topics,
 )
+from tests.conftest import SF_DIR, assert_df_matches_oracle
+from tests.scene_oracle import as_tuples, oracle_objects_in_lane
 
 KEYS = ["bag_file"]
-
-
-# ---------- independent python oracle (reference semantics) ----------
-
-def _nearest_x(points, cx, cy):
-    best, best_d = None, 1000.0
-    for p in points:
-        d = math.dist((p[0], p[1]), (cx, cy))
-        if d < best_d:
-            best, best_d = p[0], d
-    return best
-
-
-def _corner_label(lanes, cx, cy):
-    nearest = [_nearest_x(lane, cx, cy) for lane in lanes]
-    for i in range(len(nearest) - 1):
-        a, b = nearest[i], nearest[i + 1]
-        if a is None or b is None:
-            continue
-        if min(a, b) <= cx <= max(a, b):
-            return f"between_{i}_and_{i + 1}"
-    return None
-
-
-def _oracle_objects_in_lane(objects, lanes):
-    out = []
-    for o in objects:
-        x, y, w, h, cls = o
-        corners = [(x - w / 2, y - h / 2), (x + w / 2, y - h / 2),
-                   (x - w / 2, y + h / 2), (x + w / 2, y + h / 2)]
-        labels = [_corner_label(lanes, cx, cy) for cx, cy in corners]
-        hit = [v for v in labels if v is not None]
-        if hit:
-            seen = list(dict.fromkeys(hit))
-            out.append((x, y, w, h, cls, len(hit), seen))
-    return out
 
 
 def _random_scene(rng):
@@ -88,10 +53,8 @@ def test_objects_in_lane_matches_python_oracle(spark):
     got = {r.id: r.oil for r in
            df.select("id", objects_in_lane("dets", "lanes").alias("oil")).collect()}
     for i, (objs, lanes) in enumerate(scenes):
-        expect = _oracle_objects_in_lane(objs, lanes)
-        mine = [(o.x, o.y, o.width, o.height, o.Class,
-                 o.corners_in_lane, list(o.lanes)) for o in got[i]]
-        assert mine == expect, f"scene {i}"
+        assert as_tuples(got[i]) == oracle_objects_in_lane(objs, lanes), \
+            f"scene {i}"
 
 
 def test_objects_in_lane_null_inputs(spark):
@@ -105,8 +68,7 @@ def test_objects_in_lane_null_inputs(spark):
 
 
 def test_objects_in_lane_by_key_matches_oracle_and_expression(spark):
-    """The relational (explode→join→agg) plan must agree with both the
-    Python oracle and the expression formulation on random scenes,
+    """The frame form must agree with the Python oracle on random scenes,
     including empty/point-free lanes, empty detections, and null rows."""
     rng = random.Random(13)
     scenes = [_random_scene(rng) for _ in range(60)]
@@ -128,10 +90,46 @@ def test_objects_in_lane_by_key_matches_oracle_and_expression(spark):
                                   out_col="oil").collect()}
     assert got[len(scenes)] is None
     for i, (objs, lanes) in enumerate(scenes):
-        expect = _oracle_objects_in_lane(objs, lanes)
-        mine = [(o.x, o.y, o.width, o.height, o.Class,
-                 o.corners_in_lane, list(o.lanes)) for o in got[i]]
-        assert mine == expect, f"scene {i}"
+        assert as_tuples(got[i]) == oracle_objects_in_lane(objs, lanes), \
+            f"scene {i}"
+
+
+@pytest.mark.parametrize("null_at", ["image_points", "lane"])
+def test_kernel_skips_child_values_under_null_slots(null_at):
+    """Arrow lets a null list or struct slot span child values. The
+    kernel must not read them: row 0's detections are null over a
+    detection that would hit, and row 1's middle lane is null over a
+    point at x=1 that would bracket every corner."""
+    import pyarrow as pa
+
+    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.pipeline.scenes import (
+        _objects_in_lane_kernel,
+    )
+    box = {"x": 2.0, "y": 2.0, "width": 4.0, "height": 4.0, "Class": "person"}
+    det_t = pa.struct([(c, pa.float64()) for c in ("x", "y", "width", "height")]
+                      + [("Class", pa.string())])
+    dets = pa.ListArray.from_arrays(
+        pa.array([0, 1, 2], pa.int32()), pa.array([box, box], det_t),
+        mask=pa.array([True, False]))
+    pts = pa.array([{"x": px, "y": 0.0} for px in (-3.0, 10.0, -3.0, 1.0, 10.0)],
+                   pa.struct([("x", pa.float64()), ("y", pa.float64())]))
+    null = pa.array([False, False, False, True, False])
+    ip = pa.ListArray.from_arrays(
+        pa.array(range(6), pa.int32()), pts,
+        mask=null if null_at == "image_points" else None)
+    lane_structs = pa.StructArray.from_arrays(
+        [ip], names=["image_points"], mask=null if null_at == "lane" else None)
+    lanes = pa.ListArray.from_arrays(pa.array([0, 2, 5], pa.int32()),
+                                     lane_structs)
+    assert _objects_in_lane_kernel(dets, lanes).to_pylist() == [None, []]
+
+
+def test_q_scene_geometry_matches_duckdb_oracle(spark, duck):
+    """The contract query's rows against its DuckDB mirror."""
+    import __spark_entry__ as entry
+
+    assert_df_matches_oracle(entry.q_scene_geometry(spark, SF_DIR), duck,
+                             entry.oracle_sql()["q_scene_geometry"])
 
 
 # ---------- synchronize ----------

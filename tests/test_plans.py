@@ -4,6 +4,8 @@ commits to, asserted on the real plans of the driver-contract queries.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -104,7 +106,6 @@ def test_window_running_one_exchange_two_frames(spark):
         formatted_plan,
     )
     plan = formatted_plan(df)
-    import re
     data_parts = [h for h in
                   re.findall(r"hashpartitioning\([^)]*\)", plan)
                   if "_chunk" not in h]
@@ -122,19 +123,30 @@ def test_asof_nearest_chain_reuses_partitioning(spark):
     assert count_window_ops(df) == 3
 
 
-def test_scene_geometry_stays_in_codegen(spark):
-    """The geometric operator compiles to Catalyst expressions — no
-    BatchEvalPython / per-row Python in the plan (unlike the reference's
-    df.rdd.map, detect_scenes.py:115-117)."""
+def test_scene_geometry_is_one_arrow_stage(spark, count_jobs):
+    """The per-row object-in-lane test plans as one narrow stage: one
+    ArrowEvalPython over the input, no Exchange, and writing its output
+    runs exactly one Spark job."""
+    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.pipeline import (
+        objects_in_lane_by_key,
+    )
     from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.plans.inspect import (
         formatted_plan,
     )
-    df = entry.q_scene_geometry(spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # the collect_list agg runs as ObjectHashAggregate (never codegen'd);
-    # everything else is expression-evaluated JVM-side
-    assert "Scan parquet" in plan
+    det = {"x": 2.0, "y": 2.0, "width": 4.0, "height": 4.0, "Class": "person"}
+    lanes = [{"image_points": [{"x": -3.0, "y": 0.0}]},
+             {"image_points": [{"x": 10.0, "y": 0.0}]}]
+    df = spark.createDataFrame(
+        [(k, float(t), [det], lanes) for k in ("a", "b") for t in range(20)],
+        "bag_file string, t double, dets array<struct<x:double,y:double,"
+        "width:double,height:double,Class:string>>, "
+        "lanes array<struct<image_points:array<struct<x:double,y:double>>>>")
+    out = objects_in_lane_by_key(df, "dets", "lanes", ["bag_file", "t"])
+    plan = formatted_plan(out)
+    assert "Exchange" not in plan
+    assert len(re.findall(r"\(\d+\) ArrowEvalPython\b", plan)) == 1
+    assert count_jobs(
+        lambda: out.write.format("noop").mode("overwrite").save()) == 1
 
 
 def test_tfidf_broadcast_is_adaptive_not_hinted(spark):

@@ -11,7 +11,7 @@ from __future__ import annotations
 import math
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -158,6 +158,119 @@ def test_asof_nearest_matches_python_oracle(spark, mk_df, rows, probes):
         else:
             expect = None
         assert got[(k, t)] == expect
+
+
+# ---------- object-in-lane geometry ----------
+# Coordinates sit mostly on a coarse grid, so distance ties, bracketing
+# corners and the exact 1000.0 cutoff (a 600/800/1000 triangle) come up
+# often; None and NaN ride along. A lane is None (null struct),
+# "null_points" (null image_points) or a point list.
+_coord = st.one_of(
+    st.sampled_from([0.0, 2.0, 4.0, 6.0, -3.0, 3.0, 600.0, 800.0,
+                     1000.0, -1000.0, 999.9999]),
+    st.floats(-20, 20, allow_nan=False),
+    st.sampled_from([None, math.nan]))
+_det = st.one_of(st.none(), st.tuples(
+    _coord, _coord, _coord, _coord,
+    st.sampled_from(["person", "car", None])))
+_point = st.one_of(st.none(), st.tuples(_coord, _coord))
+_lane = st.one_of(st.sampled_from([None, "null_points"]),
+                  st.lists(_point, max_size=4))
+scene_rows = st.lists(
+    st.tuples(st.integers(0, 2),
+              st.one_of(st.none(), st.lists(_det, max_size=4)),
+              st.one_of(st.none(), st.lists(_lane, max_size=4))),
+    max_size=6)
+
+_BOX = (2.0, 2.0, 4.0, 4.0)  # corners (0,0) (4,0) (0,4) (4,4)
+SCENE_EDGES = [
+    # equal distances from corner (0,0): the first point (-3) wins
+    (0, [(*_BOX, "person")], [[(-3.0, 0.0), (3.0, 0.0)], [(10.0, 0.0)]]),
+    # d == 1000.0 exactly is out, just inside is in
+    (1, [(*_BOX, "car")], [[(-1000.0, 0.0)], [(999.9999, 0.0)]]),
+    (1, [(*_BOX, "car")], [[(-999.9999, 0.0)], [(999.9999, 0.0)]]),
+    # point-free, null and null-points lanes; a null point struct
+    (2, [(*_BOX, "person")], [[], None, "null_points", [None, (5.0, 0.0)],
+                              [(-5.0, 0.0)]]),
+    # null detection struct, null and NaN fields, null Class
+    (0, [None, (None, 2.0, 4.0, 4.0, "person"),
+         (math.nan, 2.0, 4.0, 4.0, "car"), (2.0, 2.0, math.nan, 4.0, "car"),
+         (*_BOX, None)], [[(-3.0, 0.0)], [(10.0, 0.0)]]),
+    # a lane with no point in reach never brackets, even where the
+    # other lane's x equals the corner's
+    (1, [(*_BOX, "car")], [[], [(0.0, 1.0)]]),
+    # both pairs bracket every corner: the first pair wins
+    (2, [(*_BOX, "person")], [[(-5.0, 0.0)], [(9.0, 0.0)], [(-5.0, 0.0)]]),
+    # empty detections, null detections, null lanes
+    (0, [], [[(-3.0, 0.0)], [(10.0, 0.0)]]),
+    (1, None, [[(-3.0, 0.0)], [(10.0, 0.0)]]),
+    (1, [(*_BOX, "person")], None),
+]
+
+
+def _spark_lane(lane):
+    if lane is None or lane == "null_points":
+        return None if lane is None else {"image_points": None}
+    return {"image_points": [None if p is None else {"x": p[0], "y": p[1]}
+                             for p in lane]}
+
+
+def _oracle_lane(lane):
+    return None if lane in (None, "null_points") else lane
+
+
+def test_scene_oracle_edge_answers():
+    """The oracle's own answers on the edge rows, written out."""
+    from tests.scene_oracle import oracle_objects_in_lane
+
+    got = [oracle_objects_in_lane(
+        dets, None if lanes is None else [_oracle_lane(ln) for ln in lanes])
+        for _, dets, lanes in SCENE_EDGES]
+    lbl = ["between_0_and_1"]
+    # with the second tied point (3) winning, corners at x=0 would miss
+    assert got[0] == [(*_BOX, "person", 4, lbl)]
+    assert got[1] == []
+    assert got[2] == [(*_BOX, "car", 1, lbl)]
+    assert got[3] == [(*_BOX, "person", 4, ["between_3_and_4"])]
+    assert got[4] == [(*_BOX, None, 4, lbl)]
+    assert got[5] == []
+    assert got[6] == [(*_BOX, "person", 4, lbl)]
+    assert got[7] == [] and got[8] is None and got[9] is None
+
+
+@SETTINGS
+@example(rows=SCENE_EDGES)
+@given(rows=scene_rows)
+def test_objects_in_lane_forms_match_python_oracle(spark, rows):
+    """``objects_in_lane`` and ``objects_in_lane_by_key`` against the
+    pure-Python port of detect_scenes.py:13-112, row by row. Rows that
+    share a key stay separate."""
+    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.pipeline import (
+        objects_in_lane, objects_in_lane_by_key,
+    )
+    from tests.scene_oracle import as_tuples, oracle_objects_in_lane
+
+    df = spark.createDataFrame(
+        [(i, k,
+          None if dets is None else [
+              None if d is None else dict(zip(
+                  ("x", "y", "width", "height", "Class"), d))
+              for d in dets],
+          None if lanes is None else [_spark_lane(ln) for ln in lanes])
+         for i, (k, dets, lanes) in enumerate(rows)],
+        "id int, k int, dets array<struct<x:double,y:double,width:double,"
+        "height:double,Class:string>>, "
+        "lanes array<struct<image_points:array<struct<x:double,y:double>>>>")
+    out = objects_in_lane_by_key(df, "dets", "lanes", ["k"],
+                                 out_col="by_key").select(
+        "id", "by_key", objects_in_lane("dets", "lanes").alias("col"))
+    got = {r.id: (as_tuples(r.by_key), as_tuples(r.col))
+           for r in out.collect()}
+    assert len(got) == len(rows)
+    for i, (_, dets, lanes) in enumerate(rows):
+        expect = oracle_objects_in_lane(
+            dets, None if lanes is None else [_oracle_lane(ln) for ln in lanes])
+        assert got[i] == (expect, expect), f"row {i}"
 
 
 TEXTS = st.lists(

@@ -882,8 +882,11 @@ def test_segment_carry_by_reference_bounds_manifest_size(spark, tmp_path,
     monkeypatch.setattr(snapmod, "_SEGMENT_ROLL", 10)
     path = str(tmp_path / "tbl")
     rows = [(i, f"p{i % 40}", i) for i in range(400)]
+    # one input partition, so one file per table partition whatever the
+    # core count: 40 files roll into 4 full groups, no inline tail
     snapshot_write(spark, path,
-                   spark.createDataFrame(rows, "id long, part string, v long"),
+                   spark.createDataFrame(rows, "id long, part string, v long")
+                   .repartition(1),
                    partition_cols=["part"])
     m0 = json.loads(open(f"{path}/_manifests/0.json").read())
     assert m0["segments"] and not m0["files"], \
