@@ -51,12 +51,12 @@ from .operators import (  # noqa: E402,F401
     decontaminate,
     detect_anomalies, detect_anomalies_multi, deterministic_shuffle, histogram_psi,
     inverted_index, probe_buckets, rrf_fuse, term_stats,
-    estimate_lag, motif_bucket_drops, motif_pairs, pattern_topk, pattern_topk_multi, repartition_for_media, xcorr_lags, resample_asof, resample_interpolate, running_agg, sliding_windows,
+    estimate_lag, motif_bucket_drops, motif_pairs, pattern_topk, pattern_topk_multi, repartition_for_media, xcorr_lags, resample_asof, running_agg, sliding_windows,
     reservoir_sample, salted_join, weighted_sample,
     remove_duplicate_spans,
     resize_pixels, sample_frames, sessionize, simhash, simhash_pairs,
     snapshot_diff, stratified_hash_sample,
-    temperature_mix_rates, tfidf_top_terms, time_spine, token_repetition,
+    temperature_mix_rates, tfidf_top_terms, token_repetition,
     top_k_per_group, union_by_name, windowed_agg_batch,
 )
 from .session import get_spark, set_state_store  # noqa: E402,F401

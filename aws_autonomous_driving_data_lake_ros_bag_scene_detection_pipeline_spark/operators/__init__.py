@@ -60,7 +60,7 @@ from .timeseries import (
     asof_join, cascade_update, detect_anomalies, detect_anomalies_multi, downsample_cascade,
     forward_fill, interpolate_poses, lag_lead,
     windowed_agg_batch,
-    resample_asof, resample_interpolate, running_agg, time_spine,
+    resample_asof, running_agg,
 )
 from .tsmatch import (  # noqa: F401
     estimate_lag, motif_bucket_drops, motif_pairs, pattern_topk, pattern_topk_multi, sliding_windows, xcorr_lags,
@@ -108,11 +108,11 @@ __all__ = [
     "minhash_signature", "near_dedup", "ngram_jaccard_pairs", "pack_media", "pack_sequences", "pivot_wide", "salted_join",
     "profile_table", "repartition_for_media", "resample_asof",
     "detect_anomalies", "detect_anomalies_multi", "inverted_index", "rrf_fuse",
-    "resample_interpolate", "resize_pixels", "running_agg",
+    "resize_pixels", "running_agg",
     "motif_bucket_drops", "motif_pairs", "pattern_topk", "pattern_topk_multi", "sliding_windows",
     "distinct_rollup_check", "distinct_sketch", "rollup_distinct",
     "media_metadata", "parse_avi", "parse_gif_frames", "parse_mp4", "sample_frames", "sessionize", "simhash", "simhash_pairs", "stratified_hash_sample",
     "corpus_report",
-    "temperature_mix_rates", "tfidf_top_terms", "time_spine",
+    "temperature_mix_rates", "tfidf_top_terms",
     "token_repetition", "top_k_per_group", "union_by_name",
 ]

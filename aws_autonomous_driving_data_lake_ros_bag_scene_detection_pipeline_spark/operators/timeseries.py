@@ -5,10 +5,10 @@ a driver-side ``collect()`` + per-bag ``spark.range`` loop
 (synchronize_topics.py:111-157), then forward-fills each topic column
 with a window ``last(ignorenulls)`` (synchronize_topics.py:160-167).
 
-Here the grid is pure plan — ``explode(sequence(...))`` of tick ids —
-so it scales with the cluster instead of the driver, and grid LOCF,
-forward fill and as-of join are expressed as single window passes over
-data partitioned by the entity key.
+Here the grid is pure plan — each signal row ``explode``s the tick ids
+it owns — so it scales with the cluster instead of the driver, and
+grid LOCF, forward fill and as-of join are expressed as single window
+passes over data partitioned by the entity key.
 """
 
 from __future__ import annotations
@@ -24,31 +24,6 @@ def _tick(c: Column, step: float) -> Column:
     division artifacts (20.0/0.1 == 199.99999999999997) must not shift
     the grid by a tick."""
     return F.floor(F.round(c / F.lit(step), 6)).cast("long")
-
-
-def time_spine(df: DataFrame, keys: list[str], time_col: str, step: float,
-               spine_col: str = None) -> DataFrame:
-    """Per-key regular time grid covering [min(time), max(time)].
-
-    Replaces synchronize_topics.py:111-157 (driver collect + spark.range
-    per bag) with ``sequence``+``explode``: one shuffle on ``keys``, no
-    driver round-trip, works for millions of keys.
-
-    Ticks are ``floor(t/step)*step`` aligned, matching the reference's
-    ``id * 0.1`` grid arithmetic (synchronize_topics.py:131-136).
-    ``step`` may be fractional; arithmetic is done on integral tick ids
-    to avoid float drift.
-    """
-    spine_col = spine_col or time_col
-    t = F.col(time_col)
-    bounds = df.groupBy(*keys).agg(
-        _tick(F.min(t), step).alias("_t0"),
-        _tick(F.max(t), step).alias("_t1"),
-    )
-    return bounds.select(
-        *keys,
-        F.explode(F.sequence("_t0", "_t1")).alias("_tick"),
-    ).select(*keys, (F.col("_tick") * F.lit(step)).alias(spine_col))
 
 
 def forward_fill(df: DataFrame, keys: list[str], order_col: str,
@@ -75,7 +50,7 @@ def resample_asof(df: DataFrame, keys: list[str], time_col: str, step: float,
     → keep grid rows; synchronize_topics.py:170-197) as one composable
     operator.
 
-    The grid is :func:`time_spine`'s: ticks ``tick(min t) ..
+    The grid is ``floor(t/step)*step`` aligned: ticks ``tick(min t) ..
     tick(max t)`` per key. A signal at ``t`` is visible from the first
     tick ``k`` with ``k·step >= t``, so a signal exactly on a tick
     lands on that tick. Rows with a NULL time are ignored.
@@ -259,7 +234,8 @@ def downsample_cascade(df: DataFrame, keys: list[str], time_col: str,
 
     Each coarser step must be an integer multiple of the previous
     (validated) so buckets nest exactly. Buckets are
-    ``floor(t/step)*step`` aligned, like :func:`time_spine`."""
+    ``floor(t/step)*step`` aligned, like :func:`resample_asof`'s
+    grid."""
     if not resolutions:
         raise ValueError("resolutions must be non-empty")
     steps = sorted(float(s) for s in resolutions)
@@ -484,59 +460,6 @@ def lag_lead(df: DataFrame, keys: list[str], order_col: str, col: str,
         out = out.withColumn(f"{col}_lag{k}", F.lag(col, k).over(w))
         out = out.withColumn(f"{col}_lead{k}", F.lead(col, k).over(w))
     return out
-
-
-def resample_interpolate(df: DataFrame, keys: list[str], time_col: str,
-                         step: float,
-                         value_cols: list[str]) -> DataFrame:
-    """Resample onto a regular grid with LINEAR interpolation between
-    the surrounding observations — the numeric-sensor companion to
-    :func:`resample_asof`'s LOCF (hold semantics are right for states
-    like gear; interpolation is right for continuous signals like
-    speed/position).
-
-    Each grid tick gets ``vp + (vn − vp)·(t − tp)/(tn − tp)`` from the
-    nearest observation at-or-before (tp, vp) and strictly-after
-    (tn, vn); a tick exactly on an observation returns that value;
-    ticks before the first or after the last observation of a key are
-    NULL (strict interpolation, no extrapolation). NULL observations
-    are transparent (skipped, like forward_fill).
-
-    Plan shape: same spine ∪ signals union as :func:`resample_asof`,
-    then TWO frames over ONE window ordering (backward `last`, forward
-    `first` — same partitioning and sort, so Catalyst plans one
-    exchange and one sort feeding both Window passes).
-    """
-    spine = time_spine(df, keys, time_col, step) \
-        .withColumn("_is_spine", F.lit(1))
-    signals = df.select(*keys, time_col, *value_cols) \
-        .withColumn("_is_spine", F.lit(0))
-    unioned = spine.unionByName(signals, allowMissingColumns=True)
-
-    order = [F.col(time_col).asc(), F.col("_is_spine").asc()]
-    wb = (Window.partitionBy(*keys).orderBy(*order)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    wf = (Window.partitionBy(*keys).orderBy(*order)
-          .rowsBetween(Window.currentRow, Window.unboundedFollowing))
-    t = F.col(time_col)
-    out_cols = []
-    proj = unioned
-    for c in value_cols:
-        obs = F.when((F.col("_is_spine") == 0) & F.col(c).isNotNull(),
-                     F.struct(t.alias("t"), F.col(c).alias("v")))
-        proj = (proj
-                .withColumn(f"_p_{c}", F.last(obs, ignorenulls=True)
-                            .over(wb))
-                .withColumn(f"_n_{c}", F.first(obs, ignorenulls=True)
-                            .over(wf)))
-        tp, vp = F.col(f"_p_{c}.t"), F.col(f"_p_{c}.v")
-        tn, vn = F.col(f"_n_{c}.t"), F.col(f"_n_{c}.v")
-        lerp = (F.when(tp == t, vp)          # exact observation on tick
-                 .when(tp.isNotNull() & tn.isNotNull() & (tn > tp),
-                       vp + (vn - vp) * (t - tp) / (tn - tp)))
-        out_cols.append(lerp.alias(c))
-    return (proj.where(F.col("_is_spine") == 1)
-            .select(*keys, time_col, *out_cols))
 
 
 def windowed_agg_batch(df: DataFrame, keys: list[str], time_col: str,

@@ -458,7 +458,7 @@ def xcorr_lags(df: DataFrame, keys: list[str], time_col: str,
     away: resample_asof aligns topics on one spine ASSUMING their
     clocks agree; this measures the residual skew so the offset can be
     corrected before alignment. Lags are in ROW units — run it on a
-    regularly-resampled signal (resample_asof / resample_interpolate),
+    regularly-resampled signal (resample_asof),
     then seconds = lag × grid step.
 
     Plan shape: all ``lead(b, lag)`` shifted copies come from ONE

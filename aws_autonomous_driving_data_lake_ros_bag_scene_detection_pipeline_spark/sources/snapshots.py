@@ -9,8 +9,10 @@ with concurrent jobs that is not an edge case; the fix is the standard
 one every table format (Iceberg/Delta/Hudi) converged on, rebuilt here
 from plain parquet + one manifest file:
 
-- **Data files are immutable.** Every commit writes NEW files under
-  ``<path>/data/<hive partition dirs>/<commit-uuid>-part-*.parquet``;
+- **Data files are immutable.** Every commit writes NEW files, each
+  Spark task straight to its final name
+  ``<path>/data/<hive partition dirs>/<uuid>.parquet`` with its zone
+  map computed in the task (one job, no scratch copy, no rename);
   nothing a published snapshot references is ever modified or deleted
   by a commit (only :func:`snapshot_prune` removes files, and only
   ones no retained snapshot references).
@@ -58,6 +60,15 @@ from plain parquet + one manifest file:
   .. [3] works (the test shim proves it over local files) but
      pointless where rename/exclusive-create are already sound —
      it exists for stores where they aren't.
+
+  The matrix covers the manifest publish only. Data files and
+  manifest segments are written through the spark-less filesystem
+  seam of :mod:`.spark_source`: local paths and ``file:`` URIs
+  natively, any other scheme (``hdfs://``, ``s3a://`` …) only through
+  an adapter installed with
+  :func:`~.spark_source.register_snapshot_filesystem`. A schemed
+  table path with no adapter fails with that function's message
+  before any Spark job runs, whichever strategy would publish.
 - **Readers are isolated**: :func:`read_snapshot` pins the file list
   at resolve time, so a query keeps reading its version's files even
   if newer versions commit mid-query; files stay on disk until
@@ -76,6 +87,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .spark_source import _local, _task_write, _write_bytes
 from .tables import _hive_partition_dir
 
 _MANIFEST_DIR = "_manifests"
@@ -519,11 +531,11 @@ def _commit_manifest(spark: SparkSession, path: str, version: int,
 _SEGMENT_ROLL = 512
 
 
-def _write_segment(spark: SparkSession, path: str,
-                   entries: list[dict]) -> dict:
+def _write_segment(path: str, entries: list[dict]) -> dict:
     name = f"seg-{uuid.uuid4().hex}.segment"
-    _write_text(spark, f"{path}/{_MANIFEST_DIR}/{name}",
-                json.dumps({"files": entries}, sort_keys=True))
+    _write_bytes(f"{_local(path)}/{_MANIFEST_DIR}/{name}",
+                 json.dumps({"files": entries},
+                            sort_keys=True).encode("utf-8"))
     return {"path": name, "n_entries": len(entries),
             "partitions": sorted({e["partition"] for e in entries})}
 
@@ -562,19 +574,20 @@ def _build_file_refs(spark: SparkSession, path: str, m_prev: dict,
                if e["partition"] not in aff]
     inline += new_entries
     if len(inline) > _SEGMENT_ROLL:
-        rolled, inline = _roll_segments(spark, path, inline)
+        rolled, inline = _roll_segments(path, inline)
         carried = carried + rolled
     return {"files": inline, "segments": carried}
 
 
-def _roll_segments(spark: SparkSession, path: str,
+def _roll_segments(path: str,
                    entries: list[dict]) -> tuple[list[dict], list[dict]]:
-    """Roll inline entries into PARTITION-GROUPED segments: each
-    partition's entries live in exactly one segment, groups close at
-    the roll threshold, the sub-threshold tail stays inline. Grouping
-    by partition is what makes carry-by-reference effective — a later
-    commit touching one partition breaks one group, not a monolithic
-    all-partitions blob."""
+    """Roll inline entries into PARTITION-GROUPED segments (the one
+    roll both the library and the ``snapshot`` data source commit
+    through): each partition's entries live in exactly one segment,
+    groups close at the roll threshold, the sub-threshold tail stays
+    inline. Grouping by partition is what makes carry-by-reference
+    effective — a later commit touching one partition breaks one
+    group, not a monolithic all-partitions blob."""
     by_part: dict[str, list[dict]] = {}
     for e in entries:
         by_part.setdefault(e["partition"], []).append(e)
@@ -582,15 +595,15 @@ def _roll_segments(spark: SparkSession, path: str,
     for part in sorted(by_part):
         group += by_part[part]
         if len(group) >= _SEGMENT_ROLL:
-            segments.append(_write_segment(spark, path, group))
+            segments.append(_write_segment(path, group))
             group = []
     return segments, group
 
 
-def _validate_stats_cols(df: DataFrame, stats_cols: list[str],
+def _validate_stats_cols(schema, stats_cols: list[str],
                          partition_cols: list[str]) -> None:
     from pyspark.sql.types import NumericType, StringType
-    by_name = {f.name: f.dataType for f in df.schema.fields}
+    by_name = {f.name: f.dataType for f in schema.fields}
     for c in stats_cols:
         if c in partition_cols:
             raise ValueError(
@@ -619,13 +632,13 @@ def _validate_stats_cols(df: DataFrame, stats_cols: list[str],
 # reading a file that was going to be read without blooms anyway;
 # correctness never depends on the rate.
 #
-# The hash must be computable IDENTICALLY on executors at write time
-# (over every row) and on the driver at prune time (over one literal):
-# double-hashed CRC-32 over the value's canonical decimal/UTF-8 string
-# — crc32 has a public fixed spec with bit-identical implementations
-# in Spark (`F.crc32`) and Python (`zlib.crc32`), unlike Spark's
-# internal xxhash64 seeding. Restricted to string and integral
-# columns, whose canonical string form is unambiguous on both sides
+# One hash, :func:`_bloom_positions`, runs in the write task (over
+# every value of the file) and on the driver at prune time (over one
+# literal): double-hashed CRC-32 over the value's canonical
+# decimal/UTF-8 string — a public fixed spec, so masks stay readable by
+# any engine that reimplements it (Spark's ``F.crc32`` gives the same
+# bits, unlike its internal xxhash64 seeding). Restricted to string
+# and integral columns, whose canonical string form is unambiguous
 # (floats' decimal rendering is not).
 
 _BLOOM_BITS = 4096                   # default mask width (512 B hex)
@@ -634,8 +647,8 @@ _BLOOM_SALT = "#g"
 
 
 def _bloom_positions(value, m_bits: int) -> list[int]:
-    """Driver-side bit positions for a literal — mirrors
-    :func:`_file_blooms`' executor-side expression exactly."""
+    """Bloom bit positions of one value — the write task's and the
+    prune check's shared hash."""
     import zlib
     s = str(value)
     h1 = zlib.crc32(s.encode("utf-8"))
@@ -660,12 +673,12 @@ def _bloom_contains(hex_mask: str, value) -> bool:
                for p in _bloom_positions(value, m_bits))
 
 
-def _validate_bloom_cols(df: DataFrame, bloom_cols: list[str],
+def _validate_bloom_cols(schema, bloom_cols: list[str],
                          partition_cols: list[str]) -> None:
     from pyspark.sql.types import (
         ByteType, IntegerType, LongType, ShortType, StringType,
     )
-    by_name = {f.name: f.dataType for f in df.schema.fields}
+    by_name = {f.name: f.dataType for f in schema.fields}
     for c in bloom_cols:
         if c in partition_cols:
             raise ValueError(
@@ -684,69 +697,10 @@ def _validate_bloom_cols(df: DataFrame, bloom_cols: list[str],
                 f"executors and the driver — floats' is not)")
 
 
-def _file_blooms(spark: SparkSession, scratch: str,
-                 bloom_cols: list[str],
-                 m_bits: int) -> dict[str, dict[str, str]]:
-    """Per-data-file bloom masks for ``bloom_cols``, keyed like
-    :func:`_file_stats` by scratch-relative path. One column-pruned
-    pass per bloom column: positions are exploded and
-    ``collect_set``-aggregated per file (map-side partial dedup keeps
-    the shuffle at <= _BLOOM_BITS ints per file per partition); the
-    driver packs the set into the hex mask — the same
-    metadata-bounded collect as the min/max stats."""
-    from urllib.parse import unquote
-
-    marker = "/" + scratch.rstrip("/").rsplit("/", 1)[1] + "/"
-    out: dict[str, dict[str, str]] = {}
-    for c in bloom_cols:
-        sdf = (spark.read.option("basePath", scratch).parquet(scratch)
-               .select(F.col(c), F.input_file_name().alias("_f")))
-        s = F.col(c).cast("string")
-        h1 = F.crc32(F.encode(s, "UTF-8"))
-        h2 = F.crc32(F.encode(F.concat(s, F.lit(_BLOOM_SALT)),
-                              "UTF-8"))
-        arr = F.array(*[((h1 + F.lit(i) * h2) % F.lit(m_bits))
-                        .cast("int") for i in range(_BLOOM_K)])
-        pos = (sdf.where(F.col(c).isNotNull())
-               .select("_f", F.explode(arr).alias("_p")))
-        for r in pos.groupBy("_f").agg(
-                F.collect_set("_p").alias("_ps")).collect():
-            rel = unquote(r["_f"].split(marker, 1)[1])
-            out.setdefault(rel, {})[c] = _bloom_hex(r["_ps"], m_bits)
-    return out
-
-
-def _file_stats(spark: SparkSession, scratch: str,
-                stats_cols: list[str]) -> dict[str, dict]:
-    """Per-data-file min/max for ``stats_cols``, keyed by the file's
-    SCRATCH-RELATIVE path (partition dirs + basename — basenames alone
-    collide: one write job names each task's file identically across
-    hive partition dirs, ``lang=en/part-00000-<job>…`` vs
-    ``lang=de/part-00000-<job>…``, and a basename-keyed map silently
-    cross-wires partitions' stats into wrong pruning). ONE distributed
-    column-pruned pass over the just-written scratch files, grouped on
-    ``input_file_name()``; the collect is O(files x stats_cols)
-    scalars — driver-side metadata, same bound as the partition-values
-    collects elsewhere in this module."""
-    from urllib.parse import unquote
-
-    marker = "/" + scratch.rstrip("/").rsplit("/", 1)[1] + "/"
-    sdf = (spark.read.option("basePath", scratch).parquet(scratch)
-           .select(*stats_cols,
-                   F.input_file_name().alias("_f")))
-    aggs = [F.count(F.lit(1)).alias("_rows")]
-    for c in stats_cols:
-        # null counts (r8) power IS [NOT] NULL skipping the way
-        # min/max power comparisons
-        aggs += [F.min(c).alias(f"_mn_{c}"), F.max(c).alias(f"_mx_{c}"),
-                 F.count_if(F.col(c).isNull()).alias(f"_nl_{c}")]
-    out: dict[str, dict] = {}
-    for r in sdf.groupBy("_f").agg(*aggs).collect():
-        rel = unquote(r["_f"].split(marker, 1)[1])
-        out[rel] = {c: {"min": r[f"_mn_{c}"], "max": r[f"_mx_{c}"],
-                        "nulls": r[f"_nl_{c}"], "rows": r["_rows"]}
-                    for c in stats_cols}
-    return out
+def _check_bloom_bits(m_bits: int) -> None:
+    if m_bits % 4 or m_bits < 64:
+        raise ValueError(
+            f"bloom_bits must be a multiple of 4 >= 64, got {m_bits}")
 
 
 def _write_data_files(spark: SparkSession, path: str, df: DataFrame,
@@ -754,106 +708,51 @@ def _write_data_files(spark: SparkSession, path: str, df: DataFrame,
                       stats_cols: list[str] | None = None,
                       bloom_cols: list[str] | None = None,
                       bloom_bits: int | None = None) -> list[dict]:
-    """Materialize ``df`` as immutable commit-scoped data files and
-    return their manifest entries.
+    """Materialize ``df`` as immutable data files and return their
+    manifest entries — ONE Spark job for every commit kind.
 
-    The frame is written to a scratch dir (so Spark controls
-    parallelism and hive layout), then each data file is renamed into
-    ``data/<partition dirs>/<commit>-<name>`` — renames are metadata
-    ops on a real filesystem, bounded by the files this commit
-    produced and issued from a DRIVER-SIDE THREAD POOL (r7: a large
-    compaction's 10⁴-10⁵ renames overlap instead of serializing on
-    round-trip latency; directories are pre-created once per partition
-    so the parallel phase is pure renames). Nothing is visible to
-    readers until the manifest commit.
+    Each task of one ``mapInArrow`` pass writes its rows straight to
+    their final names, ``data/<partition dirs>/<uuid>.parquet``, one
+    file per hive partition value it saw
+    (:func:`~.spark_source._task_write`, shared with the ``snapshot``
+    data source), and returns the files' entries: path, partition dir,
+    byte size and, with ``stats_cols``/``bloom_cols``, the per-file
+    min/max/null-count zone map and bloom masks
+    :func:`snapshot_scan` prunes with. Nothing is visible to readers
+    until the caller's manifest commit; a failed commit leaves only
+    unreferenced files for :func:`snapshot_prune`. Files go through
+    the spark-less filesystem seam (local paths, ``file:`` URIs and
+    :func:`~.spark_source.register_snapshot_filesystem` adapters), so
+    a schemed path with no adapter fails here, before any job."""
+    import functools
 
-    With ``stats_cols`` (r7), each entry also carries per-file min/max
-    for those columns — the zone map :func:`snapshot_scan` prunes
-    with. Stats are computed from the scratch files in one distributed
-    column-pruned pass before placement."""
-    commit = uuid.uuid4().hex
-    jvm, fs, _ = _fs(spark, path)
-    scratch = f"{path}/_tmp/{commit}"
-    w = df.write.mode("overwrite")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(scratch)
-    stats_by_rel: dict[str, dict] = {}
     if stats_cols:
-        _validate_stats_cols(df, stats_cols, partition_cols)
-        stats_by_rel = _file_stats(spark, scratch, stats_cols)
-    blooms_by_rel: dict[str, dict] = {}
-    bloom_tags: dict[str, str] = {}
+        _validate_stats_cols(df.schema, stats_cols, partition_cols)
+    m_bits = bloom_bits or _BLOOM_BITS
     if bloom_cols:
-        from pyspark.sql.types import StringType
-        _validate_bloom_cols(df, bloom_cols, partition_cols)
-        m_bits = bloom_bits or _BLOOM_BITS
-        if m_bits % 4 or m_bits < 64:
-            raise ValueError(
-                f"bloom_bits must be a multiple of 4 >= 64, "
-                f"got {m_bits}")
-        blooms_by_rel = _file_blooms(spark, scratch, bloom_cols, m_bits)
-        # type tag guards prune-time coercion: an int literal against
-        # a string column ('05' = 5 is true under Spark coercion but
-        # str(5) hashes differently) must KEEP the file, not prune it
-        by_name = {f.name: f.dataType for f in df.schema.fields}
-        bloom_tags = {c: ("s" if isinstance(by_name[c], StringType)
-                          else "i") for c in bloom_cols}
+        _validate_bloom_cols(df.schema, bloom_cols, partition_cols)
+        _check_bloom_bits(m_bits)
+    root = _local(path)
+    if "://" not in root:
+        # tasks would resolve a relative path against their own cwd
+        import os
+        root = os.path.abspath(root)
+    write = functools.partial(
+        _entries_batches, root=root, partition_cols=partition_cols,
+        stats_cols=stats_cols or [], bloom_cols=bloom_cols or [],
+        bloom_bits=m_bits)
+    return [json.loads(r[0]) for r in
+            df.mapInArrow(write, "entry string").collect()]
 
-    scratch_path = jvm.org.apache.hadoop.fs.Path(scratch)
-    moves = []                               # (src Path, dst_rel, part)
-    it = fs.listFiles(scratch_path, True)
-    scratch_uri = fs.makeQualified(scratch_path).toString()
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath()
-        name = p.getName()
-        if name.startswith("_") or name.startswith("."):
-            continue
-        rel = p.toString()[len(scratch_uri):].lstrip("/")
-        part_dir = rel.rsplit("/", 1)[0] if "/" in rel else ""
-        dst_rel = (f"{part_dir}/{commit}-{name}" if part_dir
-                   else f"{commit}-{name}")
-        from urllib.parse import unquote
-        moves.append((p, dst_rel, part_dir, unquote(rel),
-                      int(st.getLen())))
 
-    for d in {part for _, _, part, _, _ in moves}:
-        fs.mkdirs(jvm.org.apache.hadoop.fs.Path(
-            f"{path}/{_DATA_DIR}/{d}" if d else f"{path}/{_DATA_DIR}"))
-
-    def _place(move):
-        src, dst_rel, part, orig_rel, nbytes = move
-        dst = jvm.org.apache.hadoop.fs.Path(
-            f"{path}/{_DATA_DIR}/{dst_rel}")
-        if not fs.rename(src, dst):
-            raise RuntimeError(f"failed to place data file {dst_rel}")
-        # byte size travels in the manifest (r11) so streaming
-        # admission control (maxBytesPerTrigger) never stats files
-        # at plan time; absent in pre-r11 manifests (readers fall
-        # back to a lazy stat)
-        entry = {"path": dst_rel, "partition": part, "bytes": nbytes}
-        st, bl = stats_by_rel.get(orig_rel), blooms_by_rel.get(orig_rel)
-        if st is not None or bloom_cols:
-            merged = {c: dict(d) for c, d in (st or {}).items()}
-            for c in (bloom_cols or []):
-                # absent from the aggregation = every row null for c:
-                # the all-zero mask proves no point lookup can match
-                d = merged.setdefault(c, {})
-                d["bloom"] = (bl or {}).get(
-                    c, _bloom_hex((), bloom_bits or _BLOOM_BITS))
-                d["bloom_t"] = bloom_tags[c]
-            entry["stats"] = merged
-        return entry
-
-    if len(moves) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(min(32, len(moves))) as pool:
-            entries = list(pool.map(_place, moves))
-    else:
-        entries = [_place(m) for m in moves]
-    fs.delete(scratch_path, True)
-    return entries
+def _entries_batches(iterator, **kw):
+    """``mapInArrow`` body: the task's manifest entries as one
+    JSON-string column."""
+    import pyarrow as pa
+    entries = _task_write(iterator, **kw)
+    yield pa.RecordBatch.from_pydict(
+        {"entry": [json.dumps(e) for e in entries]},
+        schema=pa.schema([("entry", pa.string())]))
 
 
 def _read_files(spark: SparkSession, path: str, entries: list[dict],
@@ -1247,6 +1146,17 @@ def _partition_values(entry: dict) -> dict:
 #: both spellings appear in the wild: StructType JSON uses
 #: byte/short/integer/long, SQL simpleString uses
 #: tinyint/smallint/int/bigint
+def _is_nan(v) -> bool:
+    return isinstance(v, float) and v != v
+
+
+def _nan_high(v) -> tuple:
+    """Comparison key in Spark's order: NaN sorts above every number
+    (and equals itself). Keys of unlike types still raise TypeError,
+    which pruning reads as "keep the file"."""
+    return (1, 0) if _is_nan(v) else (0, v)
+
+
 _INT_TYPES = {"byte", "short", "integer", "long",
               "tinyint", "smallint", "int", "bigint"}
 _FLOAT_TYPES = {"float", "double"}
@@ -1289,8 +1199,8 @@ def _partition_rejects(pvals: dict, col: str, op: str, val,
             # comparisons exact past 2^53 (Python int/float
             # comparisons are exact, so a float literal against an
             # integral column needs no rounding either)
-            return (int(pv) if col_type in _INT_TYPES
-                    else float(pv)), v
+            return _nan_high(int(pv) if col_type in _INT_TYPES
+                             else float(pv)), _nan_high(v)
         if string and isinstance(v, str):
             return pv, v
         raise TypeError("cross-domain comparison proves nothing")
@@ -1321,6 +1231,12 @@ def _conj_may_match(entry: dict, predicates: list[tuple],
     comparison/IN (no non-null value exists) and for ``is_not_null``;
     ``is_null`` prunes files whose recorded null count is zero.
 
+    NaN (Spark's order): a recorded NaN bound sorts above every
+    number, so a file whose max is NaN is kept for any ``>``/``IN``
+    probe it may hold NaN rows for. A predicate whose literal is (or
+    whose IN list holds) NaN never prunes — it is dropped from the
+    conjunction, a sound weakening.
+
     Type guard: a predicate whose value doesn't compare with the
     file's stat type (e.g. an auto-routed numeric literal against a
     string column) KEEPS the file — pruning may only ever remove
@@ -1333,6 +1249,9 @@ def _conj_may_match(entry: dict, predicates: list[tuple],
     only help after the reader has resolved the explicit file list,
     which at 10⁶ files is itself the cost)."""
     st = entry.get("stats") or {}
+    predicates = [(col, op, val) for col, op, val in predicates
+                  if not (any(map(_is_nan, val or ())) if op == "in"
+                          else _is_nan(val))]
     if pvals is None:
         pvals = _partition_values(entry) if col_types else {}
     try:
@@ -1349,13 +1268,17 @@ def _conj_may_match(entry: dict, predicates: list[tuple],
             s = st.get(col)
             if s is None or "min" not in s:
                 continue               # no stats / bloom-only entry
-            mn, mx = s["min"], s["max"]
-            if mn is None:
+            if s["min"] is None:
                 return False
-            if lo is not None and (mx < lo or (mx == lo and not lo_i)):
-                return False
-            if hi is not None and (mn > hi or (mn == hi and not hi_i)):
-                return False
+            mn, mx = _nan_high(s["min"]), _nan_high(s["max"])
+            if lo is not None:
+                lo = _nan_high(lo)
+                if mx < lo or (mx == lo and not lo_i):
+                    return False
+            if hi is not None:
+                hi = _nan_high(hi)
+                if mn > hi or (mn == hi and not hi_i):
+                    return False
         def _bloom_rejects(s: dict, v) -> bool:
             """True only when the file's bloom mask PROVES v absent:
             mask recorded, literal's type matches the column's
@@ -1383,10 +1306,10 @@ def _conj_may_match(entry: dict, predicates: list[tuple],
                 if not val:
                     return False       # x IN () is vacuously false
                 if "min" in s:
-                    mn, mx = s["min"], s["max"]
-                    if mn is None:
+                    if s["min"] is None:
                         return False   # all-null file
-                    if not any(mn <= v <= mx for v in val):
+                    mn, mx = _nan_high(s["min"]), _nan_high(s["max"])
+                    if not any(mn <= _nan_high(v) <= mx for v in val):
                         return False
                 if all(_bloom_rejects(s, v) for v in val):
                     return False
@@ -1723,6 +1646,7 @@ def snapshot_write(spark: SparkSession, path: str, df: DataFrame, *,
     ``_append_sources`` is :func:`snapshot_append`'s replay-marker
     pass-through for the new-table case. Returns the committed
     version."""
+    _local(path)           # an unadapted scheme fails here, before any job
     prev = latest_version(spark, path)
     srcs = dict(_append_sources or {})
     if prev is not None:
@@ -1800,6 +1724,7 @@ def snapshot_append(spark: SparkSession, path: str, df: DataFrame, *,
     Appends are the ONLY rebase-safe commit (they read nothing);
     upserts/deletes keep raise-only semantics because their merge
     read is stale after a race — re-run the whole operation."""
+    _local(path)           # an unadapted scheme fails here, before any job
     prev = latest_version(spark, path)
     if prev is None:
         if partition_cols is None:
@@ -1948,6 +1873,7 @@ def snapshot_upsert(spark: SparkSession, path: str, updates: DataFrame,
     leaves the previous snapshot fully readable — at worst some
     unreferenced data files for :func:`snapshot_prune` to collect.
     Returns the committed version."""
+    _local(path)           # an unadapted scheme fails here, before any job
     prev = latest_version(spark, path)
     if prev is None:
         return snapshot_write(spark, path, updates,
@@ -2028,6 +1954,7 @@ def snapshot_delete(spark: SparkSession, path: str, keys_df: DataFrame,
     matching rows; a partition whose rows are all deleted simply has
     no files in the new manifest — no directory-drop step to crash
     between. Returns the committed version."""
+    _local(path)           # an unadapted scheme fails here, before any job
     prev = latest_version(spark, path)
     if prev is None:
         raise FileNotFoundError(f"no published snapshot under {path}")
@@ -2116,6 +2043,7 @@ def snapshot_apply_changes(spark: SparkSession, path: str,
     from pyspark.sql.types import StructType
 
     from .tables import _check_schema_drift
+    _local(path)           # an unadapted scheme fails here, before any job
     if change_col not in changes.columns:
         raise ValueError(f"changes is missing the change column "
                          f"{change_col!r}")
@@ -2278,6 +2206,7 @@ def snapshot_compact(spark: SparkSession, path: str, *,
     version."""
     if sort_cols and zorder_cols:
         raise ValueError("pass sort_cols or zorder_cols, not both")
+    _local(path)           # an unadapted scheme fails here, before any job
     prev = latest_version(spark, path)
     if prev is None:
         raise FileNotFoundError(f"no published snapshot under {path}")
@@ -2353,10 +2282,10 @@ def snapshot_prune(spark: SparkSession, path: str, *,
                    orphan_grace_seconds: float = 3600.0) -> dict:
     """Retention + garbage collection: drop all but the newest
     ``keep_latest`` manifests, then delete every data file no retained
-    manifest references (including leftovers from crashed commits and
-    any ``_tmp`` scratch). Keeping ≥2 versions preserves a rollback
-    point AND a grace window for readers that resolved the previous
-    version just before a commit. Returns counts of dropped manifests
+    manifest references (including leftovers from crashed commits).
+    Keeping ≥2 versions preserves a rollback point AND a grace window
+    for readers that resolved the previous version just before a
+    commit. Returns counts of dropped manifests
     and deleted files.
 
     ``orphan_grace_seconds``: unreferenced files YOUNGER than this are
@@ -2424,11 +2353,6 @@ def snapshot_prune(spark: SparkSession, path: str, *,
                 and name not in live_segments
                 and st.getModificationTime() < cutoff_ms):
             fs.delete(st.getPath(), False)
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{path}/_tmp")
-    if fs.exists(tmp):
-        for st in fs.listStatus(tmp):
-            if st.getModificationTime() < cutoff_ms:
-                fs.delete(st.getPath(), True)
     return {"manifests_dropped": len(drop), "files_deleted": deleted}
 
 

@@ -52,7 +52,15 @@ table paths natively; other schemes plug in through
 :func:`register_snapshot_filesystem` (r11 — a small adapter every
 I/O site dispatches through; must be registered in every process
 that touches the store), and paths with no adapter fail loudly,
-pointing at :func:`read_snapshot` (the JVM Hadoop-FS route).
+pointing at :func:`read_snapshot` (the JVM Hadoop-FS route, which
+reads any Hadoop scheme). The write half of the seam is shared:
+:func:`_task_write` writes the data files of EVERY snapshot commit —
+these writers' and the library's (:func:`~.snapshots.snapshot_append`
+and the rest) — so writing a table needs a local path or an adapter
+either way. Manifest publish is not shared: the library publishes
+through its :class:`~.snapshots.CommitStrategy` over py4j, while this
+source's ``commit`` runs in a Python worker with no SparkSession and
+publishes with :func:`_cas_publish`.
 """
 
 from __future__ import annotations
@@ -1079,23 +1087,51 @@ class _WriteResult(WriterCommitMessage):
     entries: list = field(default_factory=list)
 
 
-def _hive_dir(cols: list[str], vals: tuple) -> str:
-    from .tables import _hive_partition_dir
-    return _hive_partition_dir(cols, vals)
+def _write_bytes(p: str, data: bytes) -> None:
+    ad = _adapter(p)
+    if ad is not None:
+        ad.write_bytes(p, data)
+        return
+    os.makedirs(os.path.dirname(p), exist_ok=True)
+    with open(p, "wb") as f:
+        f.write(data)
+
+
+def _zone_stats(col, rows: int) -> dict:
+    """min/max/null/row stats of one file column in SPARK's order: a
+    NaN sorts above every double (``pc.min_max`` skips NaN), so a file
+    holding one records ``max`` NaN, and an all-NaN file ``min`` NaN
+    too — the bounds Spark's own ``min``/``max`` would give."""
+    import math
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    mm = pc.min_max(col)
+    mn, mx = mm["min"].as_py(), mm["max"].as_py()
+    if pa.types.is_floating(col.type):
+        nans = pc.sum(pc.is_nan(col)).as_py() or 0
+        if nans:
+            mx = math.nan
+            if nans + col.null_count == rows:
+                mn = math.nan
+    return {"min": mn, "max": mx, "nulls": col.null_count, "rows": rows}
 
 
 def _task_write(iterator, root: str, partition_cols: list[str],
                 stats_cols: list[str],
                 bloom_cols: list[str] | None = None,
-                bloom_bits: int = 4096,
-                bloom_tags: dict | None = None) -> "_WriteResult":
-    """Executor side: one parquet file per hive partition value seen
-    by this task, written under data/ with a fresh uuid name;
-    per-file min/max/null/row stats AND bloom masks computed
-    in-memory (the pure-python bloom mirrors the library's CRC-32
-    double hash exactly — parity is test-pinned)."""
+                bloom_bits: int = 4096) -> list[dict]:
+    """Executor side of EVERY snapshot commit (the library's
+    :func:`~.snapshots._write_data_files` and the data source's
+    writers): one parquet file per hive partition value seen by this
+    task, written under data/ with its final uuid name; returns the
+    files' manifest entries with per-file min/max/null/row stats and
+    bloom masks computed in-memory."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+
+    from .snapshots import _bloom_hex, _bloom_positions
+    from .tables import _hive_partition_dir
 
     tables: dict[tuple, list] = {}
     for batch in iterator:
@@ -1125,52 +1161,48 @@ def _task_write(iterator, root: str, partition_cols: list[str],
         t = pa.concat_tables(parts)
         if t.num_rows == 0:
             continue
-        # Spark's hive layout writes booleans lowercase; Python
-        # str(True) is 'True' — normalize so both writers produce
-        # the same directory for the same value
-        nvals = tuple("true" if v is True else
-                      "false" if v is False else v for v in vals)
-        part_dir = _hive_dir(partition_cols, nvals) \
-            if partition_cols else ""
+        # parquet's own min/max skip NaN, and Spark's parquet reader
+        # prunes row groups by them, hiding NaN rows from ``x > 5``:
+        # footer statistics only for top-level non-float columns
+        pq_stats = [f.name for f in t.schema
+                    if not (pa.types.is_floating(f.type)
+                            or pa.types.is_nested(f.type))]
+        part_dir = _hive_partition_dir(partition_cols, vals)
         name = f"{_uuid.uuid4().hex}.parquet"
         rel = f"{part_dir}/{name}" if part_dir else name
-        ad = _adapter(root)
-        if ad is not None:
-            import io as _io
-            buf = _io.BytesIO()
-            pq.write_table(t, buf)
-            ad.write_bytes(f"{root}/{_DATA_DIR}/{rel}",
-                           buf.getvalue())
+        if _adapter(root) is not None:
+            import io
+            buf = io.BytesIO()
+            pq.write_table(t, buf, write_statistics=pq_stats)
+            _write_bytes(f"{root}/{_DATA_DIR}/{rel}", buf.getvalue())
             nbytes = buf.tell()
         else:
-            dirp = os.path.join(root, _DATA_DIR, part_dir) \
-                if part_dir else os.path.join(root, _DATA_DIR)
-            os.makedirs(dirp, exist_ok=True)
-            pq.write_table(t, os.path.join(dirp, name))
-            nbytes = os.path.getsize(os.path.join(dirp, name))
-        entry = {"path": rel, "partition": part_dir,
-                 "bytes": nbytes}
+            dst = os.path.join(root, _DATA_DIR, rel)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            pq.write_table(t, dst, write_statistics=pq_stats)
+            nbytes = os.path.getsize(dst)
+        # byte size travels in the manifest so streaming admission
+        # control (maxBytesPerTrigger) never stats files at plan time
+        entry = {"path": rel, "partition": part_dir, "bytes": nbytes}
         if stats_cols or bloom_cols:
-            import pyarrow.compute as pc
-            st = {}
-            for c in (stats_cols or []):
-                col = t[c]
-                mm = pc.min_max(col)
-                st[c] = {"min": mm["min"].as_py(),
-                         "max": mm["max"].as_py(),
-                         "nulls": col.null_count,
-                         "rows": t.num_rows}
+            st = {c: _zone_stats(t[c], t.num_rows)
+                  for c in (stats_cols or [])}
             for c in (bloom_cols or []):
-                from .snapshots import _bloom_hex, _bloom_positions
                 pos: list[int] = []
                 for v in set(t[c].drop_null().to_pylist()):
                     pos.extend(_bloom_positions(v, bloom_bits))
                 d = st.setdefault(c, {})
                 d["bloom"] = _bloom_hex(pos, bloom_bits)
-                d["bloom_t"] = (bloom_tags or {}).get(c, "i")
+                # the type tag guards prune-time coercion: an int
+                # literal against a string column ('05' = 5 is true
+                # under Spark coercion, but str(5) hashes differently)
+                # must KEEP the file
+                tp = t[c].type
+                d["bloom_t"] = ("s" if pa.types.is_string(tp)
+                                or pa.types.is_large_string(tp) else "i")
             entry["stats"] = st
         entries.append(entry)
-    return _WriteResult(entries)
+    return entries
 
 
 def _cas_publish(root: str, version: int, manifest: dict) -> None:
@@ -1232,38 +1264,6 @@ def _cas_publish(root: str, version: int, manifest: dict) -> None:
         pass
 
 
-_SEGMENT_ROLL = 512
-
-
-def _roll(root: str, inline: list[dict]) -> tuple[list[dict],
-                                                  list[dict]]:
-    """Pure-python twin of the library's partition-grouped segment
-    roll (same shape, same threshold)."""
-    by_part: dict[str, list[dict]] = {}
-    for e in inline:
-        by_part.setdefault(e["partition"], []).append(e)
-    segments, group = [], []
-    for part in sorted(by_part):
-        group += by_part[part]
-        if len(group) >= _SEGMENT_ROLL:
-            name = f"seg-{_uuid.uuid4().hex}.segment"
-            ad = _adapter(root)
-            if ad is not None:
-                ad.write_bytes(
-                    f"{root}/{_MANIFEST_DIR}/{name}",
-                    json.dumps({"files": group}).encode("utf-8"))
-            else:
-                with open(os.path.join(root, _MANIFEST_DIR, name),
-                          "w", encoding="utf-8") as f:
-                    json.dump({"files": group}, f)
-            segments.append(
-                {"path": name, "n_entries": len(group),
-                 "partitions": sorted({e["partition"]
-                                       for e in group})})
-            group = []
-    return segments, group
-
-
 def _publish_commit(root: str, schema_json: str,
                     partition_cols: list[str],
                     stats_cols: list[str], entries: list[dict],
@@ -1278,6 +1278,7 @@ def _publish_commit(root: str, schema_json: str,
     head (appends read nothing — rebase-safe, like
     snapshot_append(retries=)). Returns the committed version, or
     None for a replayed streaming batch."""
+    from .snapshots import _SEGMENT_ROLL, _roll_segments
     for _ in range(retries + 1):
         prev = _latest_version(root)
         if prev is None or overwrite:
@@ -1325,7 +1326,7 @@ def _publish_commit(root: str, schema_json: str,
             inline = list(pm.get("files") or []) + entries
             carried = list(pm.get("segments") or [])
             if len(inline) > _SEGMENT_ROLL:
-                rolled, inline = _roll(root, inline)
+                rolled, inline = _roll_segments(root, inline)
                 carried += rolled
             m = {"version": prev + 1,
                  "partition_cols": partition_cols,
@@ -1354,13 +1355,11 @@ def _writer_options(options, schema, overwrite: bool) -> dict:
     'carried by every later commit' contract — a sink writing
     stats-less files silently kills pruning); options may restate it
     but not change it. On overwrite/new tables the options define the
-    config. Stats columns must be numeric or string, bloom columns
-    int-family or string (library parity: _validate_stats_cols /
-    _validate_bloom_cols) — validated UPFRONT, not at commit time
-    after the data files are already written."""
-    from pyspark.sql.types import (
-        ByteType, IntegerType, LongType, NumericType, ShortType,
-        StringType,
+    config. Stats and bloom columns and ``bloomBits`` go through the
+    library's validators UPFRONT, not at commit time after the data
+    files are already written."""
+    from .snapshots import (
+        _check_bloom_bits, _validate_bloom_cols, _validate_stats_cols,
     )
     root = _local(_path_opt(options))
 
@@ -1402,40 +1401,16 @@ def _writer_options(options, schema, overwrite: bool) -> dict:
                 f"table's recorded {t_parts}; append inherits the "
                 f"table's layout")
         partition_cols = t_parts
-    names = {f.name: f.dataType for f in schema.fields}
-    for c in partition_cols + stats_cols + bloom_cols:
-        if c not in names:
+    for c in partition_cols:
+        if c not in schema.names:
             raise ValueError(f"column {c!r} not in the frame "
-                             f"({sorted(names)})")
-    bloom_tags = {}
-    for c in stats_cols:
-        if c in partition_cols:
-            raise ValueError(f"stats column {c!r} is a partition "
-                             f"column (already pruned by directory)")
-        if not isinstance(names[c], (NumericType, StringType)):
-            raise ValueError(
-                f"stats column {c!r} has type {names[c]} — zone maps "
-                f"cover numeric/string columns (cast timestamps to "
-                f"epoch numbers upstream)")
-    for c in bloom_cols:
-        if c in partition_cols:
-            raise ValueError(f"bloom column {c!r} is a partition "
-                             f"column")
-        if not isinstance(names[c], (ByteType, ShortType,
-                                     IntegerType, LongType,
-                                     StringType)):
-            raise ValueError(
-                f"bloom column {c!r} has type {names[c]} — blooms "
-                f"cover int-family/string columns")
-        bloom_tags[c] = ("s" if isinstance(names[c], StringType)
-                         else "i")
-    if bloom_bits % 4 or bloom_bits < 64:
-        raise ValueError(f"bloomBits must be a multiple of 4 >= 64, "
-                         f"got {bloom_bits}")
+                             f"({sorted(schema.names)})")
+    _validate_stats_cols(schema, stats_cols, partition_cols)
+    _validate_bloom_cols(schema, bloom_cols, partition_cols)
+    _check_bloom_bits(bloom_bits)
     return {"root": root, "partition_cols": partition_cols,
             "stats_cols": stats_cols, "bloom_cols": bloom_cols,
-            "bloom_bits": bloom_bits, "bloom_tags": bloom_tags,
-            "schema_json": schema.json()}
+            "bloom_bits": bloom_bits, "schema_json": schema.json()}
 
 
 class SnapshotBatchWriter(DataSourceArrowWriter):
@@ -1446,9 +1421,9 @@ class SnapshotBatchWriter(DataSourceArrowWriter):
 
     def write(self, iterator):
         c = self.cfg
-        return _task_write(iterator, c["root"], c["partition_cols"],
-                           c["stats_cols"], c["bloom_cols"],
-                           c["bloom_bits"], c["bloom_tags"])
+        return _WriteResult(_task_write(
+            iterator, c["root"], c["partition_cols"], c["stats_cols"],
+            c["bloom_cols"], c["bloom_bits"]))
 
     def commit(self, messages):
         entries = [e for msg in messages if msg
@@ -1485,9 +1460,9 @@ class SnapshotStreamWriter(DataSourceStreamArrowWriter):
 
     def write(self, iterator):
         c = self.cfg
-        return _task_write(iterator, c["root"], c["partition_cols"],
-                           c["stats_cols"], c["bloom_cols"],
-                           c["bloom_bits"], c["bloom_tags"])
+        return _WriteResult(_task_write(
+            iterator, c["root"], c["partition_cols"], c["stats_cols"],
+            c["bloom_cols"], c["bloom_bits"]))
 
     def commit(self, messages, batchId):
         entries = [e for msg in messages if msg

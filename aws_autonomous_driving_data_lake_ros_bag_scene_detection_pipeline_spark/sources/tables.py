@@ -475,8 +475,9 @@ _HIVE_UNSAFE = set('"#%\'*/:=?\\\x7f{[]^')
 
 def _hive_partition_dir(cols: list[str], vals: tuple) -> str:
     """Relative partition directory for a value tuple, using Hive's
-    NULL sentinel and percent-escaping so the name matches what the
-    writer produced."""
+    NULL sentinel, Spark's lowercase booleans (Python's str(True) is
+    'True') and percent-escaping so the name matches what the writer
+    produced."""
     def esc(s: str) -> str:
         return "".join(f"%{ord(ch):02X}"
                        if (ch in _HIVE_UNSAFE or ord(ch) < 32) else ch
@@ -485,6 +486,8 @@ def _hive_partition_dir(cols: list[str], vals: tuple) -> str:
     for c, v in zip(cols, vals):
         if v is None:
             parts.append(f"{c}=__HIVE_DEFAULT_PARTITION__")
+        elif isinstance(v, bool):
+            parts.append(f"{c}={str(v).lower()}")
         else:
             parts.append(f"{c}={esc(str(v))}")
     return "/".join(parts)

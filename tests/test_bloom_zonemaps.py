@@ -76,9 +76,10 @@ def test_cross_type_literal_never_prunes(spark, tmp_path):
 
 
 def test_executor_driver_hash_parity(spark):
-    """The prune decision is sound only if F.crc32-derived positions
-    equal zlib.crc32-derived ones for the SAME canonical string —
-    pin the parity over strings and integers, executor vs driver."""
+    """Masks are written and probed with one Python hash; pin that
+    Spark's own F.crc32 gives the same positions for the SAME
+    canonical string, so an engine reading the manifest from the JVM
+    side can probe them too — over strings and integers."""
     vals = ["", "a", "user-042-7", "Ünïcodé ✓", "-17", "0", " x "]
     df = spark.createDataFrame([(v,) for v in vals], "v string")
     s = F.col("v")

@@ -796,16 +796,19 @@ def test_estimate_lag_recovers_any_planted_skew(spark, lag, seed):
 
 @pytest.fixture(scope="module")
 def _pruning_table(spark, tmp_path_factory):
-    """A range-sorted stats table with nulls, shared across the
-    pruning property's examples (one write, many reads) — HIVE
+    """A range-sorted stats table with nulls and NaNs, shared across
+    the pruning property's examples (one write, many reads) — HIVE
     PARTITIONED by grp, so every grammar example also exercises
     manifest-level partition pruning (r8c) alongside the zone
-    maps."""
+    maps. Most files hold a NaN score, which Spark orders above every
+    double: their recorded max must be NaN, and pruning must treat it
+    as the top of the range."""
     from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources import snapshot_write
     path = str(tmp_path_factory.mktemp("prop") / "tbl")
     df = (spark.range(0, 400)
           .selectExpr("id",
                       "case when id % 7 = 0 then null "
+                      "when id % 11 = 0 then double('NaN') "
                       "else cast(id as double) end as score",
                       "concat('g', cast(id % 5 as string)) as grp"))
     snapshot_write(spark, path, df.repartitionByRange(8, "id"),
@@ -817,7 +820,8 @@ def _pruning_table(spark, tmp_path_factory):
 _pred_atom = st.sampled_from([
     "id < {i}", "id >= {i}", "id = {i}", "id between {i} and {j}",
     "id in ({i}, {j})", "score is null", "score is not null",
-    "score > {i}.5", "grp = 'g{g}'", "grp in ('g{g}', 'g0')",
+    "score > {i}.5", "score < {i}.5", "score in ({i}.0, {j}.0)",
+    "grp = 'g{g}'", "grp in ('g{g}', 'g0')",
     "id % 3 = {g}",                       # unprunable — must degrade
 ])
 
@@ -841,6 +845,8 @@ def _pred_exprs(draw):
 
 @SETTINGS
 @given(expr=_pred_exprs())
+@example(expr="score in (1.0, 7.0)")   # a file whose max is NaN
+@example(expr="score > 390.5")         # NaN rows match any >
 def test_where_routing_soundness_property(spark, _pruning_table,
                                          expr):
     """For ANY predicate the grammar can build — prunable, partially
@@ -848,11 +854,13 @@ def test_where_routing_soundness_property(spark, _pruning_table,
     the rows of the plain filtered read: pruning may skip files, never
     rows."""
     from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources import read_snapshot
+    def rows(df):
+        # NaN != NaN: compare the rows by their printed form
+        return sorted(repr(tuple(r)) for r in df.collect())
+
     plain = read_snapshot(spark, _pruning_table)
-    exp = sorted(tuple(r) for r in plain.where(expr).collect())
-    got = sorted(tuple(r) for r in
-                 read_snapshot(spark, _pruning_table,
-                               where=expr).collect())
+    exp = rows(plain.where(expr))
+    got = rows(read_snapshot(spark, _pruning_table, where=expr))
     assert got == exp, expr
 
 

@@ -131,6 +131,93 @@ def test_snapshot_crash_between_write_and_publish(spark, tmp_path,
     assert _rows(read_snapshot(spark, path).select("val")) == {("a2",)}
 
 
+def test_commit_writes_data_files_in_one_job(spark, tmp_path,
+                                            count_jobs):
+    """Every commit writes its data files in ONE Spark job, each task
+    straight to its final name under data/ with its zone map and
+    bloom masks computed in the task: no scratch copy, no read-back
+    per stats or bloom column, no _tmp dir left behind."""
+    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources import (
+        scan_pruning_stats, snapshot_append,
+    )
+    path = str(tmp_path / "tbl")
+    schema = "scene_id string, start_time double, n long, day string"
+    rows = [(f"s{i}", float(i), i * 10, f"d{i % 2}") for i in range(40)]
+    # a local relation: reading the frame itself runs no extra job
+    df = spark.createDataFrame(rows, schema)
+
+    def write():
+        snapshot_write(spark, path, df, partition_cols=["day"])
+
+    assert count_jobs(write) == 1
+    assert not os.path.exists(f"{path}/_tmp")
+
+    def append():
+        snapshot_append(spark, path, df, stats_cols=["start_time"],
+                        bloom_cols=["scene_id", "n"])
+
+    assert count_jobs(append) == 1
+    assert sorted(os.listdir(path)) == ["_manifests", "data"]
+    m = json.load(open(f"{path}/_manifests/1.json"))
+    new = [e for e in m["files"] if "stats" in e]
+    assert new and all(
+        {"start_time", "scene_id", "n"} <= set(e["stats"])
+        and os.path.getsize(f"{path}/data/{e['path']}") == e["bytes"]
+        for e in new)
+    assert read_snapshot(spark, path).count() == 80
+    st = scan_pruning_stats(spark, path, [("scene_id", "=", "s3")])
+    assert st["files_pruned"] >= 1
+
+
+def test_empty_write_publishes_schema_without_files(spark, tmp_path):
+    """An empty frame (the landing ledger's initial commit) still
+    publishes its schema, with 0 data files."""
+    path = str(tmp_path / "tbl")
+    v = snapshot_write(spark, path,
+                       spark.createDataFrame([], "id long, day string"),
+                       partition_cols=["day"])
+    m = json.load(open(f"{path}/_manifests/{v}.json"))
+    assert m["files"] == [] and m["segments"] == []
+    got = read_snapshot(spark, path)
+    assert got.schema.simpleString() == "struct<id:bigint,day:string>"
+    assert got.count() == 0
+
+
+def test_unadapted_scheme_fails_before_any_job(spark, count_jobs):
+    """Data files go through the spark-less filesystem seam: a schemed
+    path with no registered adapter fails with the seam's message
+    before any Spark job runs."""
+    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources import snapshot_append
+    df = spark.createDataFrame([(1, "d1")], "id long, day string")
+    updates = df.groupBy("day").count()
+
+    def commit(fn):
+        with pytest.raises(ValueError,
+                           match="no snapshot filesystem adapter"):
+            fn()
+
+    assert count_jobs(lambda: commit(lambda: snapshot_append(
+        spark, "s3a://bucket/tbl", df, partition_cols=["day"]))) == 0
+    assert count_jobs(lambda: commit(lambda: snapshot_upsert(
+        spark, "s3a://bucket/tbl", updates, ["day"],
+        partition_cols=["day"]))) == 0
+
+
+def test_upsert_on_boolean_partition_replaces_the_row(spark, tmp_path):
+    """Boolean partition dirs are Spark's lowercase ``flag=true``; the
+    upsert's affected-partition names must match them, or the old row
+    survives next to its replacement."""
+    path = str(tmp_path / "tbl")
+    schema = "id long, flag boolean, v string"
+    snapshot_write(spark, path, spark.createDataFrame(
+        [(1, True, "a"), (2, False, "b")], schema), partition_cols=["flag"])
+    snapshot_upsert(spark, path, spark.createDataFrame(
+        [(1, True, "a2")], schema), ["id"], partition_cols=["flag"])
+    assert sorted(tuple(r) for r in
+                  read_snapshot(spark, path).select("id", "v").collect()) \
+        == [(1, "a2"), (2, "b")]
+
+
 def test_snapshot_concurrent_reader_sees_pinned_version(spark, tmp_path):
     """A reader that resolved version N keeps reading N's files even
     after a newer version commits mid-query (files are immutable and

@@ -409,6 +409,31 @@ def test_stats_col_type_validated_upfront(registered, tmp_path):
          .mode("overwrite").save(path))
 
 
+def test_nan_rows_survive_zone_map_pruning(registered, tmp_path):
+    """Spark orders NaN above every double, so ``x > 5`` matches NaN
+    rows. A file holding ``[1.0, NaN]`` and an all-NaN file must both
+    survive pruning on the data source and on the library read."""
+    import json
+    import math
+    spark = registered
+    path = str(tmp_path / "tbl")
+    nan = float("nan")
+    (spark.createDataFrame([(1.0,), (nan,)], "x double").coalesce(1)
+     .write.format("snapshot").option("statsCols", "x")
+     .mode("overwrite").save(path))
+    (spark.createDataFrame([(nan,)], "x double")
+     .write.format("snapshot").mode("append").save(path))
+    got = spark.read.format("snapshot").load(path).where("x > 5")
+    assert got.count() == 2
+    assert read_snapshot(spark, path).where("x > 5").count() == 2
+    assert read_snapshot(spark, path, where="x > 5").count() == 2
+    # the recorded bounds are Spark's: max NaN; min NaN when all-NaN
+    files = json.load(open(f"{path}/_manifests/1.json"))["files"]
+    mins = sorted((e["stats"]["x"]["min"] for e in files), key=str)
+    assert mins[0] == 1.0 and math.isnan(mins[1])
+    assert all(math.isnan(e["stats"]["x"]["max"]) for e in files)
+
+
 def test_unpinned_load_reads_one_version(registered, tmp_path):
     """schema() pins the version; a commit landing between load and
     an action never changes what the frame reads."""
@@ -423,16 +448,16 @@ def test_unpinned_load_reads_one_version(registered, tmp_path):
 
 
 def test_writer_segment_naming_matches_library_gc():
-    """Data-source-rolled segments use the library's .segment suffix
-    so snapshot_prune's GC recognizes them."""
+    """The one segment roll, called with the data source's plain root
+    path, writes .segment files that snapshot_prune's GC recognizes."""
     import tempfile
 
-    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources.spark_source import _roll
+    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources.snapshots import _roll_segments
     root = tempfile.mkdtemp()
     os.makedirs(os.path.join(root, "_manifests"), exist_ok=True)
     entries = [{"path": f"f{i}.parquet", "partition": ""}
                for i in range(600)]
-    segments, inline = _roll(root, entries)
+    segments, inline = _roll_segments(root, entries)
     assert segments and all(
         s["path"].startswith("seg-") and s["path"].endswith(".segment")
         for s in segments)

@@ -10,19 +10,8 @@ from pyspark.sql import functions as F
 import pytest
 
 from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark import (
-    asof_join, downsample_cascade, forward_fill, resample_asof, time_spine,
+    asof_join, downsample_cascade, forward_fill, resample_asof,
 )
-
-
-def test_time_spine_covers_min_max(spark):
-    df = spark.createDataFrame(
-        [("a", 0.05), ("a", 0.52), ("b", 1.0), ("b", 1.19)],
-        "k string, t double")
-    got = time_spine(df, ["k"], "t", 0.1).collect()
-    a = sorted(round(r.t, 1) for r in got if r.k == "a")
-    b = sorted(round(r.t, 1) for r in got if r.k == "b")
-    assert a == [0.0, 0.1, 0.2, 0.3, 0.4, 0.5]
-    assert b == [1.0, 1.1]
 
 
 def test_forward_fill_basic(spark):
@@ -232,46 +221,6 @@ def test_cascade_update_equals_full_rebuild(spark):
                  ["k"], "t", "v", res).collect()}
     assert got2 == want2
     spark.catalog.clearCache()
-
-
-def test_resample_interpolate_linear_values(spark):
-    """Grid ticks between observations lerp exactly; ticks on an
-    observation return it; outside the observed span -> NULL; NULL
-    observations are transparent."""
-    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark import resample_interpolate
-
-    rows = [("a", 0.0, 0.0), ("a", 10.0, 100.0), ("a", 15.0, None),
-            ("a", 20.0, 50.0), ("b", 3.0, 6.0), ("b", 7.0, 14.0)]
-    df = spark.createDataFrame(rows, "k string, t double, v double")
-    got = {(r.k, r.t): r.v for r in
-           resample_interpolate(df, ["k"], "t", 5.0, ["v"]).collect()}
-    assert got[("a", 0.0)] == 0.0          # exact observation
-    assert got[("a", 5.0)] == 50.0         # lerp 0->100 midway
-    assert got[("a", 10.0)] == 100.0
-    # NULL obs at t=15 skipped: lerp between (10,100) and (20,50)
-    assert got[("a", 15.0)] == 75.0
-    assert got[("a", 20.0)] == 50.0
-    # key b: grid covers [0,5] (floor-aligned); tick 0 precedes the
-    # first observation -> NULL, tick 5 lerps 6->14 at t=5
-    assert got[("b", 0.0)] is None
-    assert abs(got[("b", 5.0)] - 10.0) < 1e-9
-
-
-def test_resample_interpolate_single_exchange(spark):
-    """Both window directions share one partitioning: the plan carries
-    the spine agg's shuffle and ONE window shuffle — at most one more
-    than resample_asof's single window shuffle, not an extra exchange
-    for the forward pass."""
-    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark import (
-        resample_asof, resample_interpolate,
-    )
-    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.plans import (
-        count_exchanges,
-    )
-    df = spark.createDataFrame([("a", 1.0, 2.0)], "k string, t double, v double")
-    n_locf = count_exchanges(resample_asof(df, ["k"], "t", 1.0, ["v"]))
-    n_lerp = count_exchanges(resample_interpolate(df, ["k"], "t", 1.0, ["v"]))
-    assert n_lerp <= n_locf + 1
 
 
 def test_merge_intervals_against_duckdb_oracle(spark, duck):
