@@ -10,7 +10,17 @@ results:
 - Arrow enabled for the few pandas-UDF operators,
 - shuffle partitions sized by env (32 locally; a real cluster sets
   ``spark.sql.shuffle.partitions`` ~2-3x total cores and relies on AQE
-  to coalesce).
+  to coalesce),
+- Python workers forked from this package's daemon,
+  ``worker_daemon`` (``spark.python.daemon.module``): on Python < 3.13
+  ``importlib.invalidate_caches()``, which every Python task calls, makes
+  each zipimporter re-read ``pyspark.zip``'s directory (0.13-0.20 s a
+  task); the daemon's hook re-reads an archive only when its stat
+  changes,
+- ``PYTHONSAFEPATH=1`` for the workers: ``python -m`` otherwise puts the
+  driver's cwd first on the daemon's ``sys.path``, and a cwd holding
+  another checkout of this package would shadow the one on
+  ``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -82,6 +92,8 @@ def get_spark(app_name: str = "adsl-spark", shuffle_partitions: int | None = Non
         # py4j chatter. Off in production sessions; error messages lose
         # only the "called from file:line" breadcrumb.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
     )
     if state_store:
         builder = builder.config(

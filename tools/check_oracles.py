@@ -14,13 +14,15 @@ the full contract at sf0.001/sf0.01 and both batches at sf0.1.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 from collections import Counter
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = ("region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings")
@@ -49,6 +51,12 @@ def main():
     import __spark_entry__ as entry
     from pyspark.sql import SparkSession
 
+    # The Python workers import this checkout's package too, whatever the
+    # cwd holds: the JVM hands its environment to them, and ``python -m``
+    # puts the cwd first on their path unless PYTHONSAFEPATH is set.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
+    os.environ["PYTHONSAFEPATH"] = "1"
     # Deliberately a VANILLA session (not the engine's get_spark factory):
     # the driver's correctness gate builds a plain SparkSession, so the
     # contract must be self-sufficient. Round 1 failed 13 queries because
