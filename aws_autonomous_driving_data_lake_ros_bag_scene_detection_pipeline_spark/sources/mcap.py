@@ -9,11 +9,11 @@ embedded schema/channel metadata). This is the MCAP twin of
 record walk runs executor-side, and message payloads decode into typed
 columns driven by the file's OWN embedded ``ros2msg`` schema records —
 the same definition-driven decode discipline as the ROS1 reader
-(rosbag.py:322-512), but over CDR (XCDR1) wire format with its
+(``rosbag.decode_messages``), but over CDR (XCDR1) wire format with its
 alignment rules instead of ROS1's packed serialization.
 
 Supported: top-level and chunked records (compression ``""``,
-``"lz4"`` — the LZ4 frame decoder is shared with the ROS1 reader —
+``"lz4"`` — liblz4 through the ROS1 reader's frame helper —
 and ``"zstd"``, the default ``ros2 bag record`` MCAP preset, decoded
 builtin by :mod:`..functions.zstd` (RFC 8878 from-spec; the optional
 ``zstandard`` package is used at C speed when installed)).
@@ -99,7 +99,7 @@ def _decompress_chunk(content: bytes) -> bytes:
     if compression == "":
         out = records
     elif compression == "lz4":
-        out = _lz4_frame_decompress(records)
+        out = _lz4_frame_decompress(records, unc_size or None)
     elif compression == "zstd":
         # builtin RFC 8878 decoder (r14) — zstd is the DEFAULT
         # `ros2 bag record` chunk compression; decompress() prefers
@@ -123,7 +123,7 @@ def parse_mcap_bytes(mcap_file: str, buf: bytes) -> Iterator[tuple]:
     (topic, encodings, definition); Message records (op=0x05) carry
     channel_id + sequence + log/publish time + the serialized payload.
     Records at top level and inside (decompressed) chunks are handled
-    identically, mirroring the ROS1 walker (rosbag.py:190-224)."""
+    identically, mirroring the ROS1 walker (``rosbag._walk``)."""
     if buf[:len(MCAP_MAGIC)] != MCAP_MAGIC:
         raise ValueError(f"{mcap_file}: not an MCAP file")
     schemas: dict[int, tuple[str, str, str]] = {}

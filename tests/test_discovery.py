@@ -303,7 +303,7 @@ def test_discovery_feeds_mcap_extraction_to_snapshot_table(
     event-driven ingest (S3 event -> container -> parquet) as two r9
     pieces snapped together."""
     import sys
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import test_mcap as tm
 
     from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources import (

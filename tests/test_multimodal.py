@@ -884,11 +884,12 @@ def test_media_metadata_probe_all_formats(spark):
     per payload, every builtin family member recognized with the
     right dims/codec/duration, malformed payloads marked with an
     error instead of dying, unknown magics labeled."""
+    import os
     import sys
 
     from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark import media_metadata
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from tests.test_flac import _flac, _sine16, _sub_verbatim
     from tests.test_gif import _gif_file, _palette
 

@@ -9,15 +9,21 @@ source, pinning topics, timestamps, and primitive-field decoding.
 from __future__ import annotations
 
 import bz2
+import math
+import re
 import struct
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources.rosbag import (
-    decode_primitive_messages, parse_bag_bytes, parse_message_definition,
-    read_bag_messages, topic_metadata,
+    _BYTE_ARRAYS, _PRIMITIVES, _compile_decoder, _decompress_chunk,
+    _lz4_frame_decompress, _parse_ftype, decode_messages, parse_bag_bytes,
+    parse_definition_sections, read_bag_messages, topic_metadata,
 )
+from tests.rosbag_oracle import decode_payload
 
 STEERING_DEF = """# steering report
 float64 steering_wheel_angle
@@ -81,7 +87,7 @@ def _lz4_literal_block(data: bytes) -> bytes:
 
 def _lz4_frame(data: bytes, block: bytes | None = None) -> bytes:
     """Minimal LZ4 frame: FLG v1 + 64 KB BD + arbitrary header-checksum
-    byte (not validated), one block, EndMark."""
+    byte (the reader recomputes it), one block, EndMark."""
     block = _lz4_literal_block(data) if block is None else block
     return (struct.pack("<I", 0x184D2204) + bytes([0x60, 0x40, 0x00])
             + struct.pack("<I", len(block)) + block
@@ -126,33 +132,35 @@ def bag_dir(request, spark, tmp_path_factory):
 
 
 def test_lz4_block_match_copy():
-    """Hand-crafted LZ4 sequences: a back-reference copy and an
-    overlapping (RLE) match — the two match paths of the decoder."""
-    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources.rosbag import (
-        _lz4_block_decompress, _lz4_frame_decompress,
-    )
+    """Hand-crafted LZ4 sequences through liblz4: a back-reference copy,
+    an overlapping (RLE) match, and a match into the previous block of
+    a linked-block frame. The frames carry an arbitrary header-checksum
+    byte, as the test and benchmark writers do."""
     # literals "01234567", match(offset=8, len=8) → "0123456701234567"
-    # then final literals "ab"
+    # then final literals (the format wants >= 5 after the last match)
     block = (bytes([0x84]) + b"01234567" + b"\x08\x00"
-             + bytes([0x20]) + b"ab")
-    out = bytearray()
-    _lz4_block_decompress(block, out)
-    assert bytes(out) == b"0123456701234567ab"
+             + bytes([0xC0]) + b"abcdefghijkl")
+    assert (_lz4_frame_decompress(_lz4_frame(b"", block))
+            == b"0123456701234567abcdefghijkl")
 
     # RLE: literal "a", match(offset=1, len=9) → ten a's
-    rle = bytes([0x15]) + b"a" + b"\x01\x00"
-    out = bytearray()
-    _lz4_block_decompress(rle, out)
-    assert bytes(out) == b"a" * 10
+    rle = bytes([0x15]) + b"a" + b"\x01\x00" + bytes([0xC0]) + b"z" * 12
+    assert _lz4_frame_decompress(_lz4_frame(b"", rle)) == b"a" * 10 + b"z" * 12
 
-    # same match block inside a full frame
-    assert _lz4_frame_decompress(_lz4_frame(b"", block)) == b"0123456701234567ab"
+    # linked blocks: the second block copies 8 bytes from the first
+    first = _lz4_literal_block(b"01234567" + b"x" * 12)
+    second = (bytes([0x04]) + b"\x14\x00" + bytes([0xC0]) + b"y" * 12)
+    frame = (struct.pack("<I", 0x184D2204) + bytes([0x40, 0x40, 0x00])
+             + struct.pack("<I", len(first)) + first
+             + struct.pack("<I", len(second)) + second
+             + struct.pack("<I", 0))
+    want = b"01234567" + b"x" * 12 + b"01234567" + b"y" * 12
+    assert _lz4_frame_decompress(frame, len(want)) == want
+    with pytest.raises(ValueError, match="container says"):
+        _lz4_frame_decompress(frame, len(want) + 1)
 
 
 def test_lz4_frame_roundtrip_large_literals():
-    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources.rosbag import (
-        _lz4_frame_decompress,
-    )
     payload = bytes(range(256)) * 40  # >15 literals → extended length path
     assert _lz4_frame_decompress(_lz4_frame(payload)) == payload
 
@@ -221,14 +229,14 @@ def test_topic_metadata_stats(spark, bag_dir):
 
 def test_decode_primitive_messages(spark, bag_dir):
     msgs = read_bag_messages(spark, bag_dir)
-    steering = decode_primitive_messages(
+    steering = decode_messages(
         msgs.where(F.col("topic") == "/vehicle/steering_report"), STEERING_DEF)
     rows = sorted(steering.collect(), key=lambda r: r.time_ns)
     assert [r.steering_wheel_angle for r in rows] == [0.5, 0.6, 0.7]
     assert [r.speed for r in rows] == [10.0, 11.0, 12.0]
     assert [r.enabled for r in rows] == [True, True, False]
 
-    gps = decode_primitive_messages(
+    gps = decode_messages(
         msgs.where(F.col("topic") == "/vehicle/gps"), GPS_DEF)
     grows = sorted(gps.collect(), key=lambda r: r.time_ns)
     assert [(r.status_text, r.num_sats) for r in grows] == [("OK", 7), ("WEAK", 3)]
@@ -239,7 +247,7 @@ def test_parse_message_definition_skips_constants_and_deps():
             "float64 speed\n"
             "================================================================================\n"
             "MSG: std_msgs/Header\nuint32 seq\n")
-    assert parse_message_definition(defn) == [("float64", "speed")]
+    assert parse_definition_sections(defn)[""] == [("float64", "speed")]
 
 
 def test_unresolvable_nested_type_raises(spark, bag_dir):
@@ -247,7 +255,7 @@ def test_unresolvable_nested_type_raises(spark, bag_dir):
     malformed bag, not a decodable one."""
     msgs = read_bag_messages(spark, bag_dir)
     with pytest.raises(ValueError, match="msg-IDL"):
-        decode_primitive_messages(msgs, "std_msgs/Header header\nfloat64 x\n")
+        decode_messages(msgs, "std_msgs/Header header\nfloat64 x\n")
 
 
 SEP = "=" * 80
@@ -341,7 +349,7 @@ def make_scene_bag() -> bytes:
 def test_decode_nested_array_of_struct(spark, tmp_path):
     (tmp_path / "scene.bag").write_bytes(make_scene_bag())
     msgs = read_bag_messages(spark, str(tmp_path))
-    dets = decode_primitive_messages(
+    dets = decode_messages(
         msgs.where(F.col("topic") == "/perception/detections"),
         DETECTIONS_DEF)
     rows = sorted(dets.collect(), key=lambda r: r.time_ns)
@@ -350,7 +358,7 @@ def test_decode_nested_array_of_struct(spark, tmp_path):
     assert rows[2].detections[0].x == 5.0
     assert [len(r.detections) for r in rows] == [1, 1, 2, 0, 1]
 
-    lanes = decode_primitive_messages(
+    lanes = decode_messages(
         msgs.where(F.col("topic") == "/perception/lanes"), LANES_DEF)
     lrow = lanes.first()
     assert len(lrow.lanes) == 2
@@ -368,7 +376,7 @@ def test_decode_header_fixed_array_and_bytes(spark, tmp_path):
                       "chunk_count": struct.pack("<I", 1)}, b" " * 64)
            + _chunk(inner))
     (tmp_path / "imu.bag").write_bytes(bag)
-    row = decode_primitive_messages(
+    row = decode_messages(
         read_bag_messages(spark, str(tmp_path)), IMU_DEF).first()
     assert row.header.seq == 7
     assert row.header.stamp == 300 * 10**9 + 1
@@ -386,10 +394,10 @@ def test_bag_to_scene_detection_end_to_end(spark, tmp_path):
     )
     (tmp_path / "scene.bag").write_bytes(make_scene_bag())
     msgs = read_bag_messages(spark, str(tmp_path))
-    dets = decode_primitive_messages(
+    dets = decode_messages(
         msgs.where(F.col("topic") == "/perception/detections"),
         DETECTIONS_DEF).select("bag_file", "time_ns", "detections")
-    lanes = decode_primitive_messages(
+    lanes = decode_messages(
         msgs.where(F.col("topic") == "/perception/lanes"),
         LANES_DEF).select("bag_file", "time_ns", "lanes")
     joined = dets.join(lanes, ["bag_file", "time_ns"])
@@ -413,10 +421,10 @@ def test_bag_to_synchronize_pipeline_end_to_end(spark, bag_dir):
         synchronize_topics,
     )
     msgs = read_bag_messages(spark, bag_dir)
-    steering = decode_primitive_messages(
+    steering = decode_messages(
         msgs.where(F.col("topic") == "/vehicle/steering_report"), STEERING_DEF) \
         .select("bag_file", F.col("time_ns").alias("t"), "speed")
-    gps = decode_primitive_messages(
+    gps = decode_messages(
         msgs.where(F.col("topic") == "/vehicle/gps"), GPS_DEF) \
         .select("bag_file", F.col("time_ns").alias("t"), "num_sats")
     wide = synchronize_topics({"steering": steering, "gps": gps},
@@ -429,3 +437,190 @@ def test_bag_to_synchronize_pipeline_end_to_end(spark, bag_dir):
     # the sats=3 reading lands at 101.25 s — after the last tick — so
     # LOCF at 101.0 still carries 7
     assert rows[2].gps.num_sats == 7
+
+
+# ------------------------------------------- generated decoders vs oracle
+
+def _rows(defn: str, payloads: list[bytes]) -> list[dict]:
+    names = [n for _, n in parse_definition_sections(defn)[""]]
+    arrays = _compile_decoder(defn)(payloads)
+    return [dict(zip(names, vals))
+            for vals in zip(*(a.to_pylist() for a in arrays))]
+
+
+def test_negative_duration_decodes_signed():
+    """duration is (int32 secs, int32 nsecs): -1.5 s is (-2, 0.5e9)."""
+    defn = "duration d\ntime t\n"
+    payload = struct.pack("<ii", -2, 500_000_000) + struct.pack("<II", 2**32 - 1, 7)
+    want = {"d": -1_500_000_000, "t": (2**32 - 1) * 10**9 + 7}
+    assert decode_payload(defn, payload) == want
+    assert _rows(defn, [payload]) == [want]
+
+
+_SCALARS = sorted(_PRIMITIVES) + ["string", "time", "duration"]
+
+
+@st.composite
+def _definitions(draw):
+    """A gendeps-style definition: up to two nested types (each may use
+    the earlier ones), an optional ``Header`` by its alias, and fields
+    of every scalar as scalars, fixed arrays (including empty ones) and
+    var arrays."""
+    sep = "=" * 80
+    sections: dict[str, list[str]] = {}
+
+    def fields(types, min_size):
+        base = st.sampled_from(_SCALARS + types)
+        suffix = st.sampled_from(["", "", "[]", "[0]", "[1]", "[3]"])
+        pairs = draw(st.lists(st.tuples(base, suffix), min_size=min_size,
+                              max_size=5))
+        return [f"{b}{sfx} f{i}" for i, (b, sfx) in enumerate(pairs)]
+
+    nested: list[str] = []
+    for k in range(draw(st.integers(0, 2))):
+        sections[f"pkg/T{k}"] = fields(nested, 0)
+        nested.append(f"pkg/T{k}" if draw(st.booleans()) else f"T{k}")
+    top = fields(nested, 1)
+    if draw(st.booleans()):
+        top.insert(0, "Header header")
+        sections["std_msgs/Header"] = ["uint32 seq", "time stamp",
+                                       "string frame_id"]
+    text = "\n".join(top) + "\n"
+    for name, lines in sections.items():
+        text += f"{sep}\nMSG: {name}\n" + "".join(f"{ln}\n" for ln in lines)
+    return text
+
+
+def _encode(draw, ftype: str, sections: dict) -> bytes:
+    """Random wire bytes of one ``ftype`` value: raw bytes for every
+    primitive (NaNs, bool bytes > 1, negative durations, invalid UTF-8
+    all arise), counts 0-3 for var arrays."""
+    base, is_arr, n = _parse_ftype(ftype)
+    if is_arr:
+        count = n if n is not None else draw(st.integers(0, 3))
+        head = b"" if n is not None else struct.pack("<I", count)
+        if base in _BYTE_ARRAYS:
+            return head + draw(st.binary(min_size=count, max_size=count))
+        return head + b"".join(_encode(draw, base, sections)
+                               for _ in range(count))
+    if base == "uint64":    # decodes to a Spark long
+        return struct.pack("<Q", draw(st.integers(0, 2**63 - 1)))
+    if base in _PRIMITIVES:
+        size = _PRIMITIVES[base][1]
+        return draw(st.binary(min_size=size, max_size=size))
+    if base in ("time", "duration"):
+        return draw(st.binary(min_size=8, max_size=8))
+    if base == "string":
+        raw = draw(st.binary(max_size=6))
+        return struct.pack("<I", len(raw)) + raw
+    name = "std_msgs/Header" if base == "Header" else next(
+        k for k in sections if k == base or k.endswith("/" + base))
+    return b"".join(_encode(draw, ft, sections) for ft, _ in sections[name])
+
+
+def _comparable(v):
+    """NaN != NaN: compare floats by their bits."""
+    if isinstance(v, float):
+        return struct.pack("<d", v) if not math.isnan(v) else "nan"
+    if isinstance(v, dict):
+        return {k: _comparable(x) for k, x in v.items()}
+    if isinstance(v, list):
+        return [_comparable(x) for x in v]
+    return v
+
+
+@settings(max_examples=150, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(defn=_definitions(), data=st.data())
+def test_generated_decoder_equals_oracle(defn, data):
+    sections = parse_definition_sections(defn)
+    payloads = [b"".join(_encode(data.draw, ft, sections)
+                         for ft, _ in sections[""])
+                for _ in range(data.draw(st.integers(0, 4)))]
+    got = _rows(defn, payloads)
+    assert len(got) == len(payloads)
+    assert _comparable(got) == _comparable(
+        [decode_payload(defn, p) for p in payloads])
+
+
+# ------------------------------------------------------------ LZ4 frames
+
+@st.composite
+def _lz4_frames(draw):
+    """(frame, content): an LZ4 frame of 1-4 blocks, each stored or a
+    sequence of literal runs and matches (overlapping ones included),
+    with independent or linked blocks (matches then reach into earlier
+    blocks), an optional content-size field and a garbage
+    header-checksum byte."""
+    linked = draw(st.booleans())
+    out = bytearray()
+    blocks = []
+    for _ in range(draw(st.integers(1, 4))):
+        start = len(out)
+        if draw(st.booleans()):
+            raw = draw(st.binary(min_size=1, max_size=40))
+            out += raw
+            blocks.append(struct.pack("<I", 0x80000000 | len(raw)) + raw)
+            continue
+        seq = bytearray()
+        for _ in range(draw(st.integers(0, 4))):
+            lits = draw(st.binary(max_size=20))
+            window = len(out) - (0 if linked else start) + len(lits)
+            if window == 0:
+                continue
+            offset = draw(st.integers(1, window))
+            mlen = draw(st.integers(4, 40))
+            seq.append((min(len(lits), 15) << 4) | min(mlen - 4, 15))
+            if len(lits) >= 15:
+                seq += bytes([len(lits) - 15])
+            seq += lits + struct.pack("<H", offset)
+            if mlen - 4 >= 15:
+                seq += bytes([mlen - 19])
+            out += lits
+            for _ in range(mlen):
+                out.append(out[-offset])
+        tail = draw(st.binary(min_size=12, max_size=30))  # end-of-block rule
+        seq.append(min(len(tail), 15) << 4)
+        if len(tail) >= 15:
+            seq += bytes([len(tail) - 15])
+        seq += tail
+        out += tail
+        blocks.append(struct.pack("<I", len(seq)) + bytes(seq))
+    flg = 0x40 | (0 if linked else 0x20)
+    desc = b""
+    if draw(st.booleans()):
+        flg |= 0x08
+        desc = struct.pack("<Q", len(out))
+    frame = (struct.pack("<I", 0x184D2204) + bytes([flg, 0x40]) + desc
+             + bytes([draw(st.integers(0, 255))])
+             + b"".join(blocks) + struct.pack("<I", 0))
+    return frame, bytes(out)
+
+
+@settings(max_examples=200, deadline=None)
+@given(case=_lz4_frames())
+def test_lz4_frames_decode(case):
+    frame, content = case
+    assert _lz4_frame_decompress(frame) == content
+    assert _decompress_chunk({"compression": b"lz4",
+                              "size": struct.pack("<I", len(content))},
+                             frame) == content
+
+
+# ------------------------------------------------------------------ plans
+
+def test_extract_plan_is_arrow_and_one_job(spark, tmp_path, count_jobs):
+    """Read → topic filter → decode plans with no pandas runner and
+    runs as exactly one Spark job."""
+    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.plans.inspect import (
+        formatted_plan,
+    )
+    (tmp_path / "drive1.bag").write_bytes(make_bag("lz4"))
+    msgs = read_bag_messages(spark, str(tmp_path))
+    steering = decode_messages(
+        msgs.where(F.col("topic") == "/vehicle/steering_report"), STEERING_DEF)
+    plan = formatted_plan(steering)
+    assert "MapInPandas" not in plan
+    assert len(re.findall(r"\(\d+\) MapInArrow\b", plan)) == 2
+    assert count_jobs(
+        lambda: steering.write.format("noop").mode("overwrite").save()) == 1
