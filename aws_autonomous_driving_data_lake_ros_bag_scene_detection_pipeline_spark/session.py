@@ -20,12 +20,23 @@ results:
 - ``PYTHONSAFEPATH=1`` for the workers: ``python -m`` otherwise puts the
   driver's cwd first on the daemon's ``sys.path``, and a cwd holding
   another checkout of this package would shadow the one on
-  ``PYTHONPATH``.
+  ``PYTHONPATH``,
+- Hadoop's local file system set to ``NioLocalFileSystem``
+  (``jvm/NioLocalFileSystem.java``, compiled on first use): without
+  Hadoop's native library every file and directory a parquet write
+  creates forks a ``chmod`` of the JVM (~14 a partitioned write); this
+  subclass sets the same permission bits through ``java.nio``. Where
+  ``javac`` or the Hadoop jar is missing the stock file system stays.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -50,6 +61,65 @@ def set_state_store(spark: SparkSession, provider: str) -> None:
     running queries keep their provider."""
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
                    STATE_STORE_PROVIDERS.get(provider, provider))
+
+
+#: the local file system of :func:`get_spark`'s sessions
+LOCAL_FS_CLASS = "adsl.hadoop.NioLocalFileSystem"
+_JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+
+
+def _local_fs_classes() -> str | None:
+    """Class directory holding :data:`LOCAL_FS_CLASS`, compiled once per
+    source version into ``jvm/build/<source hash>``; None where it cannot
+    be built."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    src = os.path.join(_JVM_DIR, "NioLocalFileSystem.java")
+    with open(src, "rb") as f:
+        out = os.path.join(_JVM_DIR, "build",
+                           hashlib.sha1(f.read()).hexdigest()[:12])
+    if os.path.isdir(out):
+        return out
+    java_home = os.environ.get("JAVA_HOME")
+    javac = (os.path.join(java_home, "bin", "javac") if java_home
+             else shutil.which("javac"))
+    jars = glob.glob(os.path.join(os.environ.get("SPARK_HOME")
+                                  or _find_spark_home(),
+                                  "jars", "hadoop-client-api-*.jar"))
+    if not javac or not os.path.exists(javac) or not jars:
+        return None
+    try:
+        os.makedirs(os.path.dirname(out), exist_ok=True)
+        tmp = tempfile.mkdtemp(dir=os.path.dirname(out))
+    except OSError:
+        return None
+    try:
+        subprocess.run([javac, "-nowarn", "--release", "17", "-d", tmp,
+                        "-cp", jars[0], src],
+                       check=True, capture_output=True, timeout=300)
+        os.rename(tmp, out)     # atomic; a concurrent build may win
+    except (OSError, subprocess.SubprocessError):
+        pass
+    shutil.rmtree(tmp, ignore_errors=True)
+    return out if os.path.isdir(out) else None
+
+
+def _local_fs_conf() -> dict[str, str]:
+    """Session conf that selects :data:`LOCAL_FS_CLASS` for ``file:``."""
+    from pyspark import SparkContext
+
+    if SparkContext._gateway is not None:
+        # the JVM is up and its class path fixed
+        try:
+            SparkContext._jvm.java.lang.Class.forName(LOCAL_FS_CLASS)
+        except Exception:
+            return {}
+        return {"spark.hadoop.fs.file.impl": LOCAL_FS_CLASS}
+    classes = _local_fs_classes()
+    if classes is None:
+        return {}
+    return {"spark.driver.extraClassPath": classes,
+            "spark.hadoop.fs.file.impl": LOCAL_FS_CLASS}
 
 
 def get_spark(app_name: str = "adsl-spark", shuffle_partitions: int | None = None,
@@ -99,6 +169,11 @@ def get_spark(app_name: str = "adsl-spark", shuffle_partitions: int | None = Non
         builder = builder.config(
             "spark.sql.streaming.stateStore.providerClass",
             STATE_STORE_PROVIDERS.get(state_store, state_store))
+    conf = _local_fs_conf()
     for k, v in (extra_conf or {}).items():
+        if k == "spark.driver.extraClassPath" and k in conf:
+            v = conf[k] + os.pathsep + v
+        conf[k] = v
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
