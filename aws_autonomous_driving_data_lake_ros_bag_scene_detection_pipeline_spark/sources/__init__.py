@@ -1,9 +1,7 @@
 from .snapshots import (
-    CommitStrategy, ConcurrentCommit, ConditionalPutCommit,
-    LockFileCommit, RenameCommit,
-    latest_version, read_snapshot, scan_pruning_stats,
+    ConcurrentCommit, latest_version, read_snapshot, scan_pruning_stats,
     snapshot_changes, snapshot_changes_log, snapshot_history,
-    set_commit_strategy, snapshot_append, snapshot_apply_changes,
+    snapshot_append, snapshot_apply_changes,
     sql_predicates,
     snapshot_compact, snapshot_delete, snapshot_maintain,
     snapshot_prune, snapshot_rollback,
@@ -23,7 +21,7 @@ from .mcap import (  # noqa: F401
 from .rosbag2 import (  # noqa: F401
     load_definitions_dir, read_rosbag2, rosbag2_metadata,
 )
-from .s3 import S3SnapshotAdapter, s3_put_if_absent  # noqa: F401
+from .s3 import S3SnapshotAdapter  # noqa: F401
 from .spark_source import (  # noqa: F401
     SnapshotDataSource, register_snapshot_filesystem,
     register_snapshot_source, register_snapshot_table,
@@ -49,11 +47,8 @@ __all__ = ["QuarantinedRead", "read_csv", "read_jsonl",
            "mcap_messages_frame", "mcap_topic_metadata",
            "parse_mcap_bytes", "read_mcap_messages",
            "parse_warc_bytes", "read_warc", "split_http_response",
-           "TPCH_TABLES", "CommitStrategy", "ConcurrentCommit",
-           "ConditionalPutCommit",
-           "InPlaceMaintenanceWarning",
-           "LockFileCommit", "RenameCommit", "set_commit_strategy",
-           "compact_files",
+           "TPCH_TABLES", "ConcurrentCommit",
+           "InPlaceMaintenanceWarning", "compact_files",
            "dataset_bytes", "dataset_has_data",
            "delete_keys", "latest_version", "load_table", "load_tables",
            "merge_upsert", "path_exists",
@@ -62,7 +57,7 @@ __all__ = ["QuarantinedRead", "read_csv", "read_jsonl",
            "snapshot_changes_log", "snapshot_history", "sql_predicates",
            "snapshot_append", "snapshot_apply_changes",
            "snapshot_read_session",
-           "S3SnapshotAdapter", "s3_put_if_absent",
+           "S3SnapshotAdapter",
            "load_definitions_dir", "read_rosbag2", "rosbag2_metadata",
            "SnapshotDataSource", "register_snapshot_filesystem",
            "register_snapshot_source", "register_snapshot_table",

@@ -2,23 +2,21 @@
 
 The reference's lake lives on S3 (``infrastructure/ecs_stack.py:357-365``,
 ``service/app/main.py:139-170`` get/put the bags and parquet through
-boto3); this engine's snapshot stack reaches object stores through two
-seams that until now every deployment had to implement by hand:
+boto3); this engine's snapshot stack reaches object stores through ONE
+seam, :func:`..sources.spark_source.register_snapshot_filesystem` —
+the adapter protocol (open_in/write_bytes/listdir/exists/getsize/
+create_exclusive/replace_bytes/delete/delete_tree) that every
+manifest, segment, ref and data-file write of the library and the
+``snapshot`` data source goes through.
 
-- :func:`..sources.spark_source.register_snapshot_filesystem` — the
-  Python-data-source I/O adapter protocol (open_in/write_bytes/listdir/
-  exists/getsize/create_exclusive/replace_bytes/delete/delete_tree);
-- :class:`..sources.snapshots.ConditionalPutCommit` — the
-  ``put_if_absent(path, body) -> bool`` manifest-commit transport.
-
-:class:`S3SnapshotAdapter` and :func:`s3_put_if_absent` are those two
-implementations over boto3, behind the same optional-import discipline
-as the Pillow/PyAV/zstandard seams: importing this module never needs
-boto3; constructing an adapter without a client does, and fails loudly
-naming the package. Everything here speaks the public S3 API only —
-``put_object(IfNoneMatch="*")`` is the service-side atomic
-create-if-absent that makes both the manifest CAS and
-``create_exclusive`` real (no HEAD-then-PUT race).
+:class:`S3SnapshotAdapter` implements it over boto3, behind the same
+optional-import discipline as the Pillow/PyAV/zstandard seams:
+importing this module never needs boto3; constructing an adapter
+without a client does, and fails loudly naming the package. Everything
+here speaks the public S3 API only — ``put_object(IfNoneMatch="*")``
+is the service-side atomic create-if-absent that makes
+``create_exclusive``, and with it the manifest CAS, real (no
+HEAD-then-PUT race).
 
 The adapter is picklable (executors re-create the client lazily from a
 zero-arg ``client_factory``); tests inject an in-process fake client and
@@ -29,7 +27,7 @@ from __future__ import annotations
 
 import io
 
-__all__ = ["S3SnapshotAdapter", "s3_put_if_absent"]
+__all__ = ["S3SnapshotAdapter"]
 
 
 def _boto3_client():
@@ -63,10 +61,10 @@ class S3SnapshotAdapter:
     """The snapshot filesystem adapter protocol over the S3 API.
 
     ``register_snapshot_filesystem("s3a", S3SnapshotAdapter())`` makes
-    ``s3a://bucket/table`` paths first-class for the ``snapshot``
-    Python data source, :func:`..sources.spark_source
-    .register_snapshot_table` (``export_path`` mode), and the
-    spark-less reader/writer classes. Register in every process that
+    ``s3a://bucket/table`` paths first-class for the snapshot library
+    (:mod:`..sources.snapshots`), the ``snapshot`` Python data source
+    and :func:`..sources.spark_source.register_snapshot_table`
+    (``export_path`` mode). Register in every process that
     touches the store (driver AND executors) — the adapter pickles by
     shipping only its zero-arg ``client_factory`` and re-creating the
     boto3 client on first use in each process.
@@ -77,7 +75,11 @@ class S3SnapshotAdapter:
     is one level (``Delimiter='/'``), paginated. ``create_exclusive``
     is a REAL conditional PUT (``IfNoneMatch='*'``) — the atomic
     create-if-absent the manifest CAS requires; racing losers get
-    ``FileExistsError`` exactly like the local ``O_EXCL`` path.
+    ``FileExistsError`` exactly like the local ``link(2)`` path. S3
+    may answer a PUT racing another conditional PUT with 409
+    ``ConditionalRequestConflict`` before either lands; that maps to
+    ``FileExistsError`` too, and :func:`..sources.snapshots
+    .snapshot_append` retries the same version after a backoff.
     """
 
     def __init__(self, client=None, client_factory=None):
@@ -223,30 +225,3 @@ class S3SnapshotAdapter:
             if not resp.get("IsTruncated"):
                 break
             token = resp.get("NextContinuationToken")
-
-
-def s3_put_if_absent(client=None, client_factory=None):
-    """``put_if_absent(path, body) -> bool`` transport for
-    :class:`..sources.snapshots.ConditionalPutCommit`, promoted from
-    that class's docstring example (r11 VERDICT item 3) to shipped
-    code: ONE conditional PUT (``IfNoneMatch='*'``) of the final
-    manifest body — the service-side precondition IS the CAS. Returns
-    True when this writer created the key, False when a racer already
-    had (→ :class:`..sources.snapshots.ConcurrentCommit` upstream);
-    transport errors raise.
-
-    Usage::
-
-        set_commit_strategy(ConditionalPutCommit(s3_put_if_absent()))
-    """
-    adapter = S3SnapshotAdapter(client=client,
-                                client_factory=client_factory)
-
-    def put_if_absent(path: str, body: str) -> bool:
-        try:
-            adapter.create_exclusive(path, body.encode("utf-8"))
-            return True
-        except FileExistsError:
-            return False
-
-    return put_if_absent

@@ -22,53 +22,38 @@ from plain parquet + one manifest file:
   carries forward the untouched partitions' entries BY REFERENCE and
   lists new files only for rewritten partitions — commit cost is the
   affected partitions, exactly like the in-place path, but crash-safe.
-- **Publishing is ONE atomic manifest commit** through a PLUGGABLE
-  :class:`CommitStrategy` (r7). The default, :class:`RenameCommit`,
-  writes the manifest to a hidden temp name and renames it to
-  ``<version>.json``. Readers resolve ``max(version)`` over the
-  manifest directory, so a half-written commit is invisible (the temp
-  name never matches) and a crash anywhere before the rename leaves
-  only unreferenced garbage files. The rename also provides
-  optimistic concurrency: two writers racing to commit the same
-  version — rename-to-existing fails — produce one winner and one
-  clean ``ConcurrentCommit`` error, never interleaved state.
+- **Publishing is ONE atomic manifest commit**,
+  :func:`~.spark_source._commit_manifest`: an exclusive create of
+  ``<version>.json``. Exactly one writer wins each version; the
+  losers raise :class:`ConcurrentCommit` (appends rebase and retry),
+  and a crash anywhere before the create leaves only unreferenced
+  files. One CAS per store kind:
 
-  **Failure matrix** (which strategy is safe where):
+  ==========================  =========================================
+  store                       exclusive create
+  ==========================  =========================================
+  local / NFS / ``file:``     temp file + ``link(2)`` (EEXIST = lost)
+  adapter scheme (S3 …)       the adapter's ``create_exclusive``; S3:
+                              ``If-None-Match: *`` PUT
+  ==========================  =========================================
 
-  ========================  ==============  ==============  ====================
-  store                     RenameCommit    LockFileCommit  ConditionalPutCommit
-  ========================  ==============  ==============  ====================
-  HDFS                      safe            safe            n/a [3]_
-  LocalFileSystem (POSIX)   safe            safe            n/a [3]_
-  RawLocalFileSystem        UNSAFE [1]_     safe            n/a [3]_
-  S3A (S3 proper)           UNSAFE [2]_     UNSAFE [2]_     safe
-  ========================  ==============  ==============  ====================
-
-  .. [1] rename() silently overwrites an existing destination, so the
-     one-winner guarantee degrades to last-writer-wins — use
-     :class:`LockFileCommit`, whose CAS is ``create(path,
-     overwrite=false)`` (exclusive create), with the version-existence
-     check serialized under the lock.
-  .. [2] S3 rename is copy+delete and exclusive-create is emulated
-     with a HEAD-then-PUT race; neither strategy's CAS holds. Use
-     :class:`ConditionalPutCommit` (r8): its CAS is the store's OWN
-     conditional primitive (S3 ``If-None-Match: *`` PUT, GCS
-     ``ifGenerationMatch=0``, Azure ``If-None-Match``), so the
-     manifest publish is one atomic service-side create-if-absent —
-     no rename, no lock file. Alternatively front the MANIFEST
-     DIRECTORY (tiny — the data files are fine on S3) with HDFS/EFS.
-  .. [3] works (the test shim proves it over local files) but
-     pointless where rename/exclusive-create are already sound —
-     it exists for stores where they aren't.
-
-  The matrix covers the manifest publish only. Data files and
-  manifest segments are written through the spark-less filesystem
-  seam of :mod:`.spark_source`: local paths and ``file:`` URIs
-  natively, any other scheme (``hdfs://``, ``s3a://`` …) only through
-  an adapter installed with
-  :func:`~.spark_source.register_snapshot_filesystem`. A schemed
-  table path with no adapter fails with that function's message
-  before any Spark job runs, whichever strategy would publish.
+  ``link(2)`` never replaces an existing name, so no lock, rename or
+  store-specific strategy is needed; local tables need a file system
+  with hard links (the ``snapshot`` data source already did). On S3 a
+  PUT racing another conditional PUT may be answered 409
+  ``ConditionalRequestConflict`` before the winner's version exists;
+  :func:`snapshot_append` backs off and retries the same version.
+- **Metadata has one seam.** Manifests, segments, refs and the
+  ``_latest_hint`` are read and written through the spark-less layer
+  of :mod:`.spark_source` — the library, the ``snapshot`` data source
+  and the streaming followers alike: local paths and ``file:`` URIs
+  natively, any other scheme only through an adapter installed with
+  :func:`~.spark_source.register_snapshot_filesystem` (a schemed
+  path with no adapter fails with that function's message, for reads
+  and writes, before any Spark job runs). Spark's parquet reader
+  still reads the data files, so a schemed table also needs a Hadoop
+  file system for its scheme, and so does :func:`snapshot_prune`,
+  whose orphan sweep needs file modification times.
 - **Readers are isolated**: :func:`read_snapshot` pins the file list
   at resolve time, so a query keeps reading its version's files even
   if newer versions commit mid-query; files stay on disk until
@@ -87,433 +72,21 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .spark_source import _local, _task_write, _write_bytes
+from .spark_source import (
+    _DATA_DIR, _MANIFEST_DIR, _REFS_DIR, ConcurrentCommit,
+    _commit_manifest, _create_exclusive, _delete_quiet, _entries,
+    _entry_bytes, _exists, _latest_version, _listdir, _local, _manifest,
+    _read_json, _segment, _tag_version, _task_write, _versions,
+    _write_bytes,
+)
 from .tables import _hive_partition_dir
-
-_MANIFEST_DIR = "_manifests"
-_DATA_DIR = "data"
-
-
-class ConcurrentCommit(RuntimeError):
-    """Another writer published this version first; re-read the table
-    state and retry the operation."""
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def _write_text(spark: SparkSession, path: str, text: str) -> None:
-    jvm, fs, jpath = _fs(spark, path)
-    out = fs.create(jpath, False)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _read_text(spark: SparkSession, path: str) -> str:
-    jvm, fs, jpath = _fs(spark, path)
-    stream = fs.open(jpath)
-    try:
-        return jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8")
-    finally:
-        stream.close()
-
-
-_HINT = "_latest_hint"
-
-
-def _write_hint(spark: SparkSession, path: str, version: int) -> None:
-    """Best-effort advisory pointer to the latest version — written
-    AFTER the CAS publish, so it can lag (a resolve probes forward)
-    but never gates correctness (any failure here is swallowed; a
-    missing/corrupt hint falls back to the full listing)."""
-    try:
-        jvm, fs, _ = _fs(spark, path)
-        mdir = f"{path}/{_MANIFEST_DIR}"
-        tmp = f"{mdir}/.hint-{uuid.uuid4().hex}"
-        _write_text(spark, tmp, str(version))
-        src = jvm.org.apache.hadoop.fs.Path(tmp)
-        dst = jvm.org.apache.hadoop.fs.Path(f"{mdir}/{_HINT}")
-        if fs.exists(dst):
-            fs.delete(dst, False)
-        if not fs.rename(src, dst):
-            fs.delete(src, False)
-    except Exception:  # noqa: BLE001 — advisory only
-        pass
 
 
 def latest_version(spark: SparkSession, path: str) -> int | None:
     """Highest published snapshot version, or None for an empty/new
-    table. Resolution is O(1)+O(lag) on a hinted table (r7): the
-    ``_latest_hint`` pointer names a known-published version and the
-    resolver probes FORWARD with exists() calls until the first gap —
-    at 10⁵ commits that is a handful of metadata ops, not a directory
-    listing. Tables without a valid hint fall back to the full
-    listing, where only fully-renamed ``<n>.json`` manifests are
-    visible, so an in-flight commit can't be resolved either way."""
-    jvm, fs, jdir = _fs(spark, f"{path}/{_MANIFEST_DIR}")
-    if not fs.exists(jdir):
-        return None
-    hint_path = jvm.org.apache.hadoop.fs.Path(
-        f"{path}/{_MANIFEST_DIR}/{_HINT}")
-    if fs.exists(hint_path):
-        try:
-            v = int(_read_text(spark, f"{path}/{_MANIFEST_DIR}/{_HINT}"))
-        except Exception:  # noqa: BLE001 — corrupt hint: fall back
-            v = None
-        if v is not None and fs.exists(jvm.org.apache.hadoop.fs.Path(
-                f"{path}/{_MANIFEST_DIR}/{v}.json")):
-            while fs.exists(jvm.org.apache.hadoop.fs.Path(
-                    f"{path}/{_MANIFEST_DIR}/{v + 1}.json")):
-                v += 1
-            return v
-    versions = []
-    for st in fs.listStatus(jdir):
-        name = st.getPath().getName()
-        if name.endswith(".json") and not name.startswith("."):
-            try:
-                versions.append(int(name[:-len(".json")]))
-            except ValueError:
-                continue
-    return max(versions) if versions else None
-
-
-def _load_manifest(spark: SparkSession, path: str, version: int) -> dict:
-    return json.loads(_read_text(
-        spark, f"{path}/{_MANIFEST_DIR}/{version}.json"))
-
-
-class CommitStrategy:
-    """The CAS point of the whole format, made pluggable (r7): a
-    strategy's one job is to publish ``<version>.json`` such that
-    exactly ONE writer wins each version (losers raise
-    :class:`ConcurrentCommit`) and a crashed publish leaves no
-    partially-visible manifest. Everything else — immutable data
-    files, carry-by-reference manifests, reader pinning — is
-    strategy-independent. See the module docstring's failure matrix
-    for which strategy is safe on which store; adapters for real
-    conditional primitives (S3 conditional PUT, a lock service)
-    implement this one method."""
-
-    def publish(self, spark: SparkSession, path: str, version: int,
-                manifest: dict) -> None:
-        raise NotImplementedError
-
-
-class RenameCommit(CommitStrategy):
-    """Default: write to a hidden temp name, rename to the final name.
-    One winner iff the store's rename REFUSES an existing destination
-    (HDFS, Hadoop LocalFileSystem — verified; RawLocalFileSystem
-    overwrites, making this last-writer-wins there)."""
-
-    def _rename(self, fs, src, dst) -> bool:
-        # the one op whose semantics vary by store — overridable so
-        # tests can inject overwrite-semantics shims
-        return bool(fs.rename(src, dst))
-
-    def publish(self, spark: SparkSession, path: str, version: int,
-                manifest: dict) -> None:
-        jvm, fs, _ = _fs(spark, path)
-        mdir = f"{path}/{_MANIFEST_DIR}"
-        fs.mkdirs(jvm.org.apache.hadoop.fs.Path(mdir))
-        tmp = f"{mdir}/.tmp-{uuid.uuid4().hex}.json"
-        _write_text(spark, tmp, json.dumps(manifest, sort_keys=True))
-        src = jvm.org.apache.hadoop.fs.Path(tmp)
-        dst = jvm.org.apache.hadoop.fs.Path(f"{mdir}/{version}.json")
-        if fs.exists(dst) or not self._rename(fs, src, dst):
-            fs.delete(src, False)
-            raise ConcurrentCommit(
-                f"version {version} of {path} was published by another "
-                f"writer; reload and retry")
-
-
-#: Java exception classes that mean "destination already exists" for
-#: an exclusive create, walked through the cause chain. Class-based
-#: classification (not message substrings): Hadoop filesystems word
-#: their messages differently, so a real FileAlreadyExists with
-#: unusual text must still read as contention, and an unrelated
-#: IOException that merely MENTIONS "exists" must not.
-_EXISTS_EXC_CLASSES = frozenset((
-    "org.apache.hadoop.fs.FileAlreadyExistsException",
-    "org.apache.hadoop.fs.PathExistsException",
-    "java.nio.file.FileAlreadyExistsException",
-))
-
-
-def _is_exists_error(e: BaseException) -> bool:
-    je = getattr(e, "java_exception", None)
-    if je is not None:
-        seen = 0
-        while je is not None and seen < 16:
-            try:
-                if je.getClass().getName() in _EXISTS_EXC_CLASSES:
-                    return True
-                je = je.getCause()
-            except Exception:  # noqa: BLE001 — dead gateway mid-walk
-                break
-            seen += 1
-        return False
-    # non-py4j path (pure-Python filesystem shims in tests)
-    return isinstance(e, FileExistsError)
-
-
-class LockFileCommit(CommitStrategy):
-    """For stores whose rename overwrites but whose
-    ``create(path, overwrite=false)`` is a real exclusive create
-    (POSIX O_EXCL semantics — RawLocalFileSystem, NFS): the writer
-    takes a per-table lock file with exclusive create, checks the
-    version doesn't exist, publishes (rename under the lock — its
-    overwrite semantics no longer matter), and releases. A writer that
-    crashes holding the lock leaves it behind; locks older than
-    ``lock_timeout_seconds`` are broken (set it above the worst-case
-    manifest write — the guarded section writes one small JSON, not
-    data files, so seconds suffice; breaking is itself an exclusive
-    create on a takeover marker so two breakers can't both win, and
-    the marker has the SAME age-based expiry so a breaker that
-    crashes between creating and deleting it can't wedge stale-lock
-    recovery forever).
-
-    Fencing (r8): every acquisition writes a unique token into the
-    lock file, and ``publish`` re-verifies BOTH (a) the lock still
-    holds our token and (b) ``<version>.json`` is still absent,
-    immediately before the rename — so a holder stalled past
-    ``lock_timeout_seconds`` (GC pause, NFS stall) whose lock was
-    broken aborts with :class:`ConcurrentCommit` instead of renaming
-    over the successor's already-published manifest. Release is
-    likewise conditional on still owning the token (deleting a
-    broken-and-reacquired lock would unlock the successor
-    mid-publish). The residual window is the single rename call — the
-    irreducible cost of emulating CAS on these stores; use
-    :class:`ConditionalPutCommit` where a real conditional primitive
-    exists."""
-
-    def __init__(self, lock_timeout_seconds: float = 300.0):
-        if lock_timeout_seconds <= 0:
-            raise ValueError("lock_timeout_seconds must be > 0")
-        self.lock_timeout_seconds = lock_timeout_seconds
-
-    def _rename(self, fs, src, dst) -> bool:
-        return bool(fs.rename(src, dst))
-
-    def _try_create(self, spark, path: str, text: str) -> bool:
-        """Exclusive create; False if the path already exists."""
-        try:
-            _write_text(spark, path, text)
-            return True
-        except Exception as e:  # noqa: BLE001 — py4j wraps the Java
-            if _is_exists_error(e):
-                return False
-            raise
-
-    def _age_ms(self, fs, jvm, path: str) -> float:
-        import time
-        try:
-            return (time.time() * 1000.0
-                    - fs.getFileStatus(
-                        jvm.org.apache.hadoop.fs.Path(path))
-                    .getModificationTime())
-        except Exception:  # noqa: BLE001 — released between probes
-            return 0.0
-
-    def _owns(self, spark, fs, jvm, lock: str, token: str) -> bool:
-        try:
-            jlock = jvm.org.apache.hadoop.fs.Path(lock)
-            return (fs.exists(jlock)
-                    and _read_text(spark, lock) == token)
-        except Exception:  # noqa: BLE001 — deleted between probes
-            return False
-
-    def _acquire(self, spark, fs, jvm, mdir: str) -> tuple[str, str]:
-        lock = f"{mdir}/.commit-lock"
-        jlock = jvm.org.apache.hadoop.fs.Path(lock)
-        token = uuid.uuid4().hex
-        if self._try_create(spark, lock, token):
-            return lock, token
-        timeout_ms = self.lock_timeout_seconds * 1000.0
-        if self._age_ms(fs, jvm, lock) > timeout_ms:
-            # break the stale lock via a takeover marker (exclusive
-            # create — one breaker wins), then delete lock + marker
-            # and retry the normal acquisition once
-            marker = f"{lock}.takeover"
-            jmarker = jvm.org.apache.hadoop.fs.Path(marker)
-            got_marker = self._try_create(spark, marker, token)
-            if not got_marker and self._age_ms(fs, jvm, marker) > timeout_ms:
-                # a breaker crashed between creating and deleting the
-                # marker; expire it by age so recovery isn't wedged
-                # forever, then contend for the takeover again
-                fs.delete(jmarker, False)
-                got_marker = self._try_create(spark, marker, token)
-            if got_marker:
-                try:
-                    fs.delete(jlock, False)
-                finally:
-                    fs.delete(jmarker, False)
-                if self._try_create(spark, lock, token):
-                    return lock, token
-        raise ConcurrentCommit(
-            f"commit lock {lock} is held by another writer; retry")
-
-    def _publish_under_lock(self, spark, fs, jvm, mdir: str,
-                            version: int, manifest: dict,
-                            lock: str, token: str) -> None:
-        dst = jvm.org.apache.hadoop.fs.Path(f"{mdir}/{version}.json")
-        if fs.exists(dst):
-            raise ConcurrentCommit(
-                f"version {version} was published by another writer; "
-                f"reload and retry")
-        tmp = f"{mdir}/.tmp-{uuid.uuid4().hex}.json"
-        _write_text(spark, tmp, json.dumps(manifest, sort_keys=True))
-        src = jvm.org.apache.hadoop.fs.Path(tmp)
-        # fencing: last-moment ownership + absence re-check (see class
-        # docstring) — a stalled holder must lose here, not overwrite
-        if not self._owns(spark, fs, jvm, lock, token) \
-                or fs.exists(dst):
-            fs.delete(src, False)
-            raise ConcurrentCommit(
-                f"commit lock for version {version} was broken while "
-                f"stalled (held past lock_timeout_seconds="
-                f"{self.lock_timeout_seconds}); nothing published — "
-                f"reload and retry")
-        if not self._rename(fs, src, dst):
-            fs.delete(src, False)
-            raise RuntimeError(
-                f"failed to publish manifest {version}.json")
-
-    def publish(self, spark: SparkSession, path: str, version: int,
-                manifest: dict) -> None:
-        jvm, fs, _ = _fs(spark, path)
-        mdir = f"{path}/{_MANIFEST_DIR}"
-        fs.mkdirs(jvm.org.apache.hadoop.fs.Path(mdir))
-        lock, token = self._acquire(spark, fs, jvm, mdir)
-        try:
-            self._publish_under_lock(spark, fs, jvm, mdir, version,
-                                     manifest, lock, token)
-        finally:
-            try:
-                if self._owns(spark, fs, jvm, lock, token):
-                    fs.delete(jvm.org.apache.hadoop.fs.Path(lock),
-                              False)
-            except Exception:  # noqa: BLE001 — release is best-effort
-                pass
-
-
-class ConditionalPutCommit(CommitStrategy):
-    """For object stores with a REAL atomic create-if-absent
-    primitive — S3 conditional PUT (``If-None-Match: *``), GCS
-    ``ifGenerationMatch=0``, Azure Blob ``If-None-Match: *``. This is
-    the strategy for S3 proper, the failure matrix's [2] row, where
-    rename is copy+delete (overwrites) AND exclusive create is a
-    HEAD-then-PUT race — the one combination that defeats both
-    :class:`RenameCommit` and :class:`LockFileCommit`.
-
-    ``publish`` is ONE conditional PUT of the final
-    ``<version>.json`` body. The service-side precondition IS the
-    CAS, so there is no temp file, no rename, and no lock file — the
-    two unreliable primitives simply aren't used. Exactly one writer
-    per version gets ``201``; every loser gets a precondition
-    failure, surfaced as :class:`ConcurrentCommit`. Crash-safety is
-    trivial: the PUT either happened atomically or it didn't.
-
-    The byte transport is injected: ``put_if_absent(path, body) ->
-    bool`` (True = created; False = the key already exists /
-    precondition failed; transport errors raise). A boto3 adapter is
-    a few lines::
-
-        def s3_put_if_absent(path, body):
-            bucket, key = path[len("s3a://"):].split("/", 1)
-            try:
-                boto3.client("s3").put_object(
-                    Bucket=bucket, Key=key,
-                    Body=body.encode("utf-8"), IfNoneMatch="*")
-                return True
-            except botocore.exceptions.ClientError as e:
-                code = e.response["ResponseMetadata"]["HTTPStatusCode"]
-                if code in (412, 409):   # PreconditionFailed / racing
-                    return False
-                raise
-
-    (documentation, not shipped code — this environment has no cloud
-    SDK; tests/test_snapshots.py exercises the strategy against an
-    object-store shim with overwriting renames and non-exclusive
-    creates where only the conditional-PUT endpoint is atomic, and
-    shows the other two strategies silently lose a committed version
-    there while this one keeps exactly one winner.)"""
-
-    def __init__(self, put_if_absent):
-        if not callable(put_if_absent):
-            raise TypeError(
-                "put_if_absent must be a callable(path, body) -> bool")
-        self.put_if_absent = put_if_absent
-
-    def publish(self, spark: SparkSession, path: str, version: int,
-                manifest: dict) -> None:
-        jvm, fs, _ = _fs(spark, path)
-        mdir = f"{path}/{_MANIFEST_DIR}"
-        # directory creation is a no-op on keyed object stores; needed
-        # for the filesystem-backed test shim and mixed deployments
-        fs.mkdirs(jvm.org.apache.hadoop.fs.Path(mdir))
-        if not self.put_if_absent(f"{mdir}/{version}.json",
-                                  json.dumps(manifest, sort_keys=True)):
-            raise ConcurrentCommit(
-                f"version {version} of {path} was published by another "
-                f"writer (conditional PUT precondition failed); reload "
-                f"and retry")
-
-
-#: module default — swap with :func:`set_commit_strategy` when the
-#: manifest directory lives on a store where rename overwrites
-_COMMIT_STRATEGY: CommitStrategy = RenameCommit()
-
-
-def set_commit_strategy(strategy: CommitStrategy) -> CommitStrategy:
-    """Install the commit strategy every snapshot writer uses from now
-    on; returns the previous one (so tests/callers can restore it)."""
-    global _COMMIT_STRATEGY
-    if not isinstance(strategy, CommitStrategy):
-        raise TypeError(f"expected a CommitStrategy, got {strategy!r}")
-    prev = _COMMIT_STRATEGY
-    _COMMIT_STRATEGY = strategy
-    return prev
-
-
-def _monotonic_stamp(now: float, prev: float | None) -> float:
-    """Commit-time authority for AS-OF (r10, r9 VERDICT item 5):
-    the recorded stamp is ``max(prev + 1 µs, now)``, so history
-    timestamps are strictly increasing in version even when a second
-    writer's wall clock runs behind the first's — multi-writer clock
-    skew can reorder ``time.time()`` but never the recorded stamps,
-    and as-of resolution by timestamp always agrees with commit
-    order."""
-    if prev is not None and now <= prev:
-        return prev + 1e-6
-    return now
-
-
-def _commit_manifest(spark: SparkSession, path: str, version: int,
-                     manifest: dict) -> None:
-    import time
-
-    # commit wall-clock (r8) powers AS-OF time travel; stamped
-    # monotonic vs the previous manifest (r10) so multi-writer clock
-    # skew cannot reorder history vs timestamps. The VERSION remains
-    # the authority on order; the stamp now provably agrees with it.
-    if "committed_at" not in manifest:
-        prev_ts = None
-        if version > 0:
-            try:
-                prev_ts = _load_manifest(
-                    spark, path, version - 1).get("committed_at")
-            except Exception:
-                prev_ts = None         # pruned/first: plain clock
-        manifest["committed_at"] = _monotonic_stamp(time.time(),
-                                                    prev_ts)
-    _COMMIT_STRATEGY.publish(spark, path, version, manifest)
-    _write_hint(spark, path, version)
+    table — O(1)+O(lag) through the ``_latest_hint`` pointer, with a
+    listing fallback (:func:`~.spark_source._latest_version`)."""
+    return _latest_version(path)
 
 
 # -- manifest segments (r7) -------------------------------------------------
@@ -540,23 +113,8 @@ def _write_segment(path: str, entries: list[dict]) -> dict:
             "partitions": sorted({e["partition"] for e in entries})}
 
 
-def _load_segment(spark: SparkSession, path: str, name: str) -> list[dict]:
-    return json.loads(_read_text(
-        spark, f"{path}/{_MANIFEST_DIR}/{name}"))["files"]
-
-
-def _manifest_entries(spark: SparkSession, path: str,
-                      m: dict) -> list[dict]:
-    """The manifest's complete data-file entry list: inline ``files``
-    plus every referenced segment's entries."""
-    entries = list(m.get("files") or [])
-    for seg in m.get("segments") or []:
-        entries += _load_segment(spark, path, seg["path"])
-    return entries
-
-
-def _build_file_refs(spark: SparkSession, path: str, m_prev: dict,
-                     aff: set[str], new_entries: list[dict]) -> dict:
+def _build_file_refs(path: str, m_prev: dict, aff: set[str],
+                     new_entries: list[dict]) -> dict:
     """The next manifest's ``{files, segments}``: previous segments
     disjoint from the affected partitions carry as REFERENCES; broken
     segments' surviving entries, surviving inline entries, and the new
@@ -568,7 +126,7 @@ def _build_file_refs(spark: SparkSession, path: str, m_prev: dict,
         if aff.isdisjoint(seg["partitions"]):
             carried.append(seg)
         else:
-            inline += [e for e in _load_segment(spark, path, seg["path"])
+            inline += [e for e in _segment(path, seg["path"])
                        if e["partition"] not in aff]
     inline += [e for e in (m_prev.get("files") or [])
                if e["partition"] not in aff]
@@ -779,14 +337,12 @@ def snapshot_history(spark: SparkSession, path: str) -> list[dict]:
     head = latest_version(spark, path)
     if head is None:
         raise FileNotFoundError(f"no published snapshot under {path}")
-    jvm, fs, _ = _fs(spark, path)
     out = []
     for v in range(head + 1):
-        jp = jvm.org.apache.hadoop.fs.Path(
-            f"{path}/{_MANIFEST_DIR}/{v}.json")
-        if not fs.exists(jp):
+        try:
+            m = _manifest(path, v)
+        except FileNotFoundError:
             continue                   # pruned past retention
-        m = _load_manifest(spark, path, v)
         out.append({
             "version": v,
             "committed_at": m.get("committed_at"),
@@ -818,16 +374,10 @@ def snapshot_version_for_source(spark: SparkSession, path: str,
     head = latest_version(spark, path)
     if head is None:
         raise FileNotFoundError(f"no published snapshot under {path}")
-    jvm, fs, _ = _fs(spark, path)
-    mdir = jvm.org.apache.hadoop.fs.Path(f"{path}/{_MANIFEST_DIR}")
-    vs = sorted(int(n[:-5]) for n in
-                (st.getPath().getName()
-                 for st in fs.listStatus(mdir))
-                if n.endswith(".json") and n[:-5].isdigit())
+    vs = _versions(path)
 
     def covered(v: int) -> bool:
-        srcs = _load_manifest(spark, path, v).get(
-            "append_sources") or {}
+        srcs = _manifest(path, v).get("append_sources") or {}
         return srcs.get(source, -1) >= batch_id
 
     # one directory listing + O(log n) manifest reads: the recorded
@@ -873,16 +423,10 @@ def _latest_version_with_marker_at_most(spark: SparkSession,
     then 7 while the session needs 5) — every base commit in
     ``(marker, batch_id]`` must be compaction-only, else the
     returned state would silently miss real base commits."""
-    jvm, fs, _ = _fs(spark, path)
-    mdir = jvm.org.apache.hadoop.fs.Path(f"{path}/{_MANIFEST_DIR}")
-    vs = sorted(int(n[:-5]) for n in
-                (st.getPath().getName()
-                 for st in fs.listStatus(mdir))
-                if n.endswith(".json") and n[:-5].isdigit())
+    vs = _versions(path)
 
     def marker(v: int) -> int:
-        srcs = _load_manifest(spark, path, v).get(
-            "append_sources") or {}
+        srcs = _manifest(path, v).get("append_sources") or {}
         return srcs.get(source, -1)
 
     # UNMARKED versions are ineligible: a version predating the
@@ -899,9 +443,8 @@ def _latest_version_with_marker_at_most(spark: SparkSession,
         # compaction for the states on either side to be equal
         for b in range(lo_b + 1, hi_b + 1):
             try:
-                op = _load_manifest(spark, base_path, b).get(
-                    "operation")
-            except Exception:
+                op = _manifest(base_path, b).get("operation")
+            except FileNotFoundError:
                 op = None                  # pruned: can't verify
             if op != "compact":
                 return False
@@ -972,8 +515,7 @@ def snapshot_read_session(spark: SparkSession, base_path: str,
         if head is None:
             raise FileNotFoundError(
                 f"no published snapshot under {cpath}")
-        srcs = _load_manifest(spark, cpath, head).get(
-            "append_sources") or {}
+        srcs = _manifest(cpath, head).get("append_sources") or {}
         if src not in srcs:
             raise LookupError(
                 f"consumer {name!r} at {cpath} records no marker for "
@@ -1053,12 +595,7 @@ def read_snapshot(spark: SparkSession, path: str,
         raise ValueError("pass at most one of version, as_of, tag")
     if tag is not None:
         _validate_ref_name(tag)
-        try:
-            version = json.loads(_read_text(
-                spark, f"{path}/{_REFS_DIR}/{tag}.json"))["version"]
-        except Exception as e:
-            raise FileNotFoundError(
-                f"no tag {tag!r} on {path}") from e
+        version = _tag_version(path, tag)
     if as_of is not None:
         version = _resolve_as_of(spark, path, as_of)
     if version is None:
@@ -1066,8 +603,8 @@ def read_snapshot(spark: SparkSession, path: str,
         if version is None:
             raise FileNotFoundError(
                 f"no published snapshot under {path}")
-    m = _load_manifest(spark, path, version)
-    entries = _manifest_entries(spark, path, m)
+    m = _manifest(path, version)
+    entries = _entries(path, m)
     if where is not None:
         dnf = sql_predicates(spark, where)
         if dnf is not None:
@@ -1555,8 +1092,8 @@ def scan_pruning_stats(spark: SparkSession, path: str, predicates, *,
         version = latest_version(spark, path)
         if version is None:
             raise FileNotFoundError(f"no published snapshot under {path}")
-    m = _load_manifest(spark, path, version)
-    entries = _manifest_entries(spark, path, m)
+    m = _manifest(path, version)
+    entries = _entries(path, m)
     kept = _prune_entries(entries, predicates, m.get("schema"))
     return {"files_total": len(entries), "files_read": len(kept),
             "files_pruned": len(entries) - len(kept)}
@@ -1609,8 +1146,8 @@ def _scan_with_stats(spark: SparkSession, path: str, predicates, *,
         version = latest_version(spark, path)
         if version is None:
             raise FileNotFoundError(f"no published snapshot under {path}")
-    m = _load_manifest(spark, path, version)
-    all_entries = _manifest_entries(spark, path, m)
+    m = _manifest(path, version)
+    all_entries = _entries(path, m)
     entries = _prune_entries(all_entries, predicates, m.get("schema"))
     stats = {"files_total": len(all_entries),
              "files_read": len(entries),
@@ -1650,7 +1187,7 @@ def snapshot_write(spark: SparkSession, path: str, df: DataFrame, *,
     prev = latest_version(spark, path)
     srcs = dict(_append_sources or {})
     if prev is not None:
-        m_prev = _load_manifest(spark, path, prev)
+        m_prev = _manifest(path, prev)
         if stats_cols is None:
             stats_cols = m_prev.get("stats_cols")
         if bloom_cols is None:
@@ -1663,12 +1200,12 @@ def snapshot_write(spark: SparkSession, path: str, df: DataFrame, *,
     entries = _write_data_files(spark, path, df, partition_cols,
                                 stats_cols, bloom_cols, bloom_bits)
     version = 0 if prev is None else prev + 1
-    _commit_manifest(spark, path, version, {
+    _commit_manifest(path, version, {
         "version": version, "partition_cols": partition_cols,
         "schema": df.schema.json(), "stats_cols": stats_cols,
         "bloom_cols": bloom_cols, "bloom_bits": bloom_bits,
         "append_sources": srcs or None, "operation": "write",
-        **_build_file_refs(spark, path, {}, set(), entries)})
+        **_build_file_refs(path, {}, set(), entries)})
     return version
 
 
@@ -1749,7 +1286,7 @@ def snapshot_append(spark: SparkSession, path: str, df: DataFrame, *,
         (another writer may have admitted our batch), partition
         contract, schema merge, stats contract. Returns None when the
         head already admitted this source_batch (no-op)."""
-        m = _load_manifest(spark, path, head)
+        m = _manifest(path, head)
         srcs = dict(m.get("append_sources") or {})
         if source_batch is not None:
             src, bid = source_batch
@@ -1812,14 +1349,14 @@ def snapshot_append(spark: SparkSession, path: str, df: DataFrame, *,
     head = prev
     for attempt in range(retries + 1):
         try:
-            _commit_manifest(spark, path, head + 1, {
+            _commit_manifest(path, head + 1, {
                 "version": head + 1, "partition_cols": part_cols,
                 "schema": merged_schema.json(),
                 "stats_cols": eff_stats or None,
                 "bloom_cols": eff_bloom or None,
                 "bloom_bits": eff_bits,
                 "append_sources": srcs or None, "operation": "append",
-                **_build_file_refs(spark, path, m, set(), new_entries)})
+                **_build_file_refs(path, m, set(), new_entries)})
             return head + 1
         except ConcurrentCommit:
             if attempt >= retries:
@@ -1828,10 +1365,12 @@ def snapshot_append(spark: SparkSession, path: str, df: DataFrame, *,
             if new_head is None:
                 raise
             if new_head <= head:
-                # transient contention (e.g. LockFileCommit's lock
-                # held by a writer that hasn't published yet): same
-                # commit retries after a short backoff — no rebase
-                # needed until a version actually lands
+                # lost without a new version: S3 answers a PUT racing
+                # another conditional PUT with 409
+                # ConditionalRequestConflict before the winner's
+                # version exists (the adapter reports it as
+                # FileExistsError). Retry the same version after a
+                # short backoff; rebase only once a version lands
                 import time
                 time.sleep(min(0.2 * (attempt + 1), 2.0))
                 continue
@@ -1878,7 +1417,7 @@ def snapshot_upsert(spark: SparkSession, path: str, updates: DataFrame,
     if prev is None:
         return snapshot_write(spark, path, updates,
                               partition_cols=partition_cols)
-    m = _load_manifest(spark, path, prev)
+    m = _manifest(path, prev)
     if m["partition_cols"] != partition_cols:
         raise ValueError(
             f"partition_cols {partition_cols} do not match the "
@@ -1893,7 +1432,7 @@ def snapshot_upsert(spark: SparkSession, path: str, updates: DataFrame,
         _check_schema_drift(table_cols, updates.columns, keys,
                             partition_cols, schema_evolution)
 
-    entries = _manifest_entries(spark, path, m)
+    entries = _entries(path, m)
     aff_vals = [tuple(r) for r in
                 updates.select(*partition_cols).distinct().collect()]
     aff = _affected_dirs(aff_vals, partition_cols)
@@ -1933,7 +1472,7 @@ def snapshot_upsert(spark: SparkSession, path: str, updates: DataFrame,
                                     m.get("stats_cols"),
                                     m.get("bloom_cols"),
                                     m.get("bloom_bits"))
-    _commit_manifest(spark, path, prev + 1, {
+    _commit_manifest(path, prev + 1, {
         "version": prev + 1, "partition_cols": partition_cols,
         "schema": merged.schema.json(),
         "stats_cols": m.get("stats_cols"),
@@ -1941,7 +1480,7 @@ def snapshot_upsert(spark: SparkSession, path: str, updates: DataFrame,
         "bloom_bits": m.get("bloom_bits"),
         "append_sources": m.get("append_sources"),
         "operation": "upsert",
-        **_build_file_refs(spark, path, m, aff, new_entries)})
+        **_build_file_refs(path, m, aff, new_entries)})
     return prev + 1
 
 
@@ -1958,12 +1497,12 @@ def snapshot_delete(spark: SparkSession, path: str, keys_df: DataFrame,
     prev = latest_version(spark, path)
     if prev is None:
         raise FileNotFoundError(f"no published snapshot under {path}")
-    m = _load_manifest(spark, path, prev)
+    m = _manifest(path, prev)
     if m["partition_cols"] != partition_cols:
         raise ValueError(
             f"partition_cols {partition_cols} do not match the "
             f"table's {m['partition_cols']}")
-    entries = _manifest_entries(spark, path, m)
+    entries = _entries(path, m)
     if not entries:
         return prev                      # empty table: nothing to do
 
@@ -1987,14 +1526,14 @@ def snapshot_delete(spark: SparkSession, path: str, keys_df: DataFrame,
                                     partition_cols, m.get("stats_cols"),
                                     m.get("bloom_cols"),
                                     m.get("bloom_bits"))
-    _commit_manifest(spark, path, prev + 1, {
+    _commit_manifest(path, prev + 1, {
         "version": prev + 1, "partition_cols": partition_cols,
         "schema": m.get("schema"), "stats_cols": m.get("stats_cols"),
         "bloom_cols": m.get("bloom_cols"),
         "bloom_bits": m.get("bloom_bits"),
         "append_sources": m.get("append_sources"),
         "operation": "delete",
-        **_build_file_refs(spark, path, m, aff, new_entries)})
+        **_build_file_refs(path, m, aff, new_entries)})
     return prev + 1
 
 
@@ -2085,7 +1624,7 @@ def snapshot_apply_changes(spark: SparkSession, path: str,
                                   _append_sources=srcs0)
         if not ops:
             return prev                  # empty changeset: no-op
-        m = _load_manifest(spark, path, prev)
+        m = _manifest(path, prev)
         srcs = dict(m.get("append_sources") or {})
         if source_batch is not None:
             src, bid = source_batch
@@ -2102,7 +1641,7 @@ def snapshot_apply_changes(spark: SparkSession, path: str,
             _check_schema_drift(table_cols, data_cols, keys,
                                 partition_cols, schema_evolution)
 
-        entries = _manifest_entries(spark, path, m)
+        entries = _entries(path, m)
         aff = _affected_dirs(aff_vals, partition_cols)
         hit = [e for e in entries if e["partition"] in aff]
         changed_keys = changes.select(*keys).distinct()
@@ -2134,7 +1673,7 @@ def snapshot_apply_changes(spark: SparkSession, path: str,
                                         m.get("stats_cols"),
                                         m.get("bloom_cols"),
                                         m.get("bloom_bits"))
-        _commit_manifest(spark, path, prev + 1, {
+        _commit_manifest(path, prev + 1, {
             "version": prev + 1, "partition_cols": partition_cols,
             "schema": (merged.schema.json() if m.get("schema")
                        or schema_evolution else None),
@@ -2143,7 +1682,7 @@ def snapshot_apply_changes(spark: SparkSession, path: str,
             "bloom_bits": m.get("bloom_bits"),
             "append_sources": srcs or None,
             "operation": "apply_changes",
-            **_build_file_refs(spark, path, m, aff, new_entries)})
+            **_build_file_refs(path, m, aff, new_entries)})
         return prev + 1
     finally:
         changes.unpersist()
@@ -2162,8 +1701,8 @@ def snapshot_rollback(spark: SparkSession, path: str,
     prev = latest_version(spark, path)
     if prev is None:
         raise FileNotFoundError(f"no published snapshot under {path}")
-    m = _load_manifest(spark, path, to_version)
-    _commit_manifest(spark, path, prev + 1, {
+    m = _manifest(path, to_version)
+    _commit_manifest(path, prev + 1, {
         "version": prev + 1, "partition_cols": m["partition_cols"],
         "schema": m.get("schema"), "stats_cols": m.get("stats_cols"),
         "bloom_cols": m.get("bloom_cols"),
@@ -2210,9 +1749,9 @@ def snapshot_compact(spark: SparkSession, path: str, *,
     prev = latest_version(spark, path)
     if prev is None:
         raise FileNotFoundError(f"no published snapshot under {path}")
-    m = _load_manifest(spark, path, prev)
+    m = _manifest(path, prev)
     part_cols = m["partition_cols"]
-    entries = _manifest_entries(spark, path, m)
+    entries = _entries(path, m)
     all_dirs = {e["partition"] for e in entries}
     target_dirs = set(partitions) if partitions is not None else all_dirs
     unknown = target_dirs - all_dirs
@@ -2222,9 +1761,7 @@ def snapshot_compact(spark: SparkSession, path: str, *,
     hit = [e for e in entries if e["partition"] in target_dirs]
     if not hit:
         return prev
-    jvm, fs, _ = _fs(spark, path)
-    total = sum(fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(
-        f"{path}/{_DATA_DIR}/{e['path']}")).getLen() for e in hit)
+    total = sum(_entry_bytes(path, e) for e in hit)
     n = max(1, -(-total // target_file_bytes))
     rows = _read_files(spark, path, hit, m.get("schema"))
     if zorder_cols:
@@ -2266,14 +1803,14 @@ def snapshot_compact(spark: SparkSession, path: str, *,
                                     m.get("stats_cols"),
                                     m.get("bloom_cols"),
                                     m.get("bloom_bits"))
-    _commit_manifest(spark, path, prev + 1, {
+    _commit_manifest(path, prev + 1, {
         "version": prev + 1, "partition_cols": part_cols,
         "schema": m.get("schema"), "stats_cols": m.get("stats_cols"),
         "bloom_cols": m.get("bloom_cols"),
         "bloom_bits": m.get("bloom_bits"),
         "append_sources": m.get("append_sources"),
         "operation": "compact",
-        **_build_file_refs(spark, path, m, target_dirs, new_entries)})
+        **_build_file_refs(path, m, target_dirs, new_entries)})
     return prev + 1
 
 
@@ -2299,19 +1836,10 @@ def snapshot_prune(spark: SparkSession, path: str, *,
         raise ValueError(f"keep_latest must be >= 1, got {keep_latest}")
     import time
     cutoff_ms = (time.time() - orphan_grace_seconds) * 1000.0
-    jvm, fs, _ = _fs(spark, path)
-    mdir = f"{path}/{_MANIFEST_DIR}"
-    jmdir = jvm.org.apache.hadoop.fs.Path(mdir)
-    if not fs.exists(jmdir):
+    mdir = f"{_local(path)}/{_MANIFEST_DIR}"
+    if not _exists(mdir):
         return {"manifests_dropped": 0, "files_deleted": 0}
-    versions = []
-    for st in fs.listStatus(jmdir):
-        name = st.getPath().getName()
-        if name.endswith(".json") and not name.startswith("."):
-            try:
-                versions.append(int(name[:-len(".json")]))
-            except ValueError:
-                continue
+    versions = _versions(path)
     # tagged versions are pinned: their manifests (and, through the
     # referenced set below, their data files) survive retention for
     # as long as the tag exists (r8)
@@ -2321,13 +1849,19 @@ def snapshot_prune(spark: SparkSession, path: str, *,
 
     referenced, live_segments = set(), set()
     for v in keep:
-        m = _load_manifest(spark, path, v)
+        m = _manifest(path, v)
         live_segments |= {s["path"] for s in m.get("segments") or []}
-        for e in _manifest_entries(spark, path, m):
+        for e in _entries(path, m):
             referenced.add(e["path"])
 
+    # the orphan sweep needs file modification times, which the
+    # adapter protocol does not carry: it lists through Spark's Hadoop
+    # file system (the one place the table format still does)
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path
+    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
     deleted = 0
-    data_root = jvm.org.apache.hadoop.fs.Path(f"{path}/{_DATA_DIR}")
+    data_root = hpath(f"{path}/{_DATA_DIR}")
     if fs.exists(data_root):
         root_uri = fs.makeQualified(data_root).toString()
         it = fs.listFiles(data_root, True)
@@ -2343,11 +1877,10 @@ def snapshot_prune(spark: SparkSession, path: str, *,
             fs.delete(p, False)
             deleted += 1
     for v in drop:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{mdir}/{v}.json"),
-                  False)
+        _delete_quiet(f"{mdir}/{v}.json")
     # segment files no retained manifest references (same grace rule:
     # a concurrent commit writes its segment just before publishing)
-    for st in fs.listStatus(jmdir):
+    for st in fs.listStatus(hpath(f"{path}/{_MANIFEST_DIR}")):
         name = st.getPath().getName()
         if (name.startswith("seg-") and name.endswith(".segment")
                 and name not in live_segments
@@ -2391,8 +1924,7 @@ def snapshot_maintain(spark: SparkSession, path: str, *,
     head = latest_version(spark, path)
     if head is None:
         raise FileNotFoundError(f"no published snapshot under {path}")
-    entries = _manifest_entries(spark, path,
-                                _load_manifest(spark, path, head))
+    entries = _entries(path, _manifest(path, head))
     counts: dict[str, int] = {}
     for e in entries:
         counts[e["partition"]] = counts.get(e["partition"], 0) + 1
@@ -2406,9 +1938,8 @@ def snapshot_maintain(spark: SparkSession, path: str, *,
             spark, path, target_file_bytes=target_file_bytes,
             partitions=fat, sort_cols=sort_cols,
             zorder_cols=zorder_cols)
-        out["files_after"] = len(_manifest_entries(
-            spark, path,
-            _load_manifest(spark, path, out["compact_version"])))
+        out["files_after"] = len(_entries(
+            path, _manifest(path, out["compact_version"])))
     if keep_latest is not None:
         out["pruned"] = snapshot_prune(
             spark, path, keep_latest=keep_latest,
@@ -2478,7 +2009,7 @@ def snapshot_changes(spark: SparkSession, path: str,
         raise ValueError(
             f"from_version {from_version} is newer than to_version "
             f"{to_version}; swap them (the feed is forward-only)")
-    m_to = _load_manifest(spark, path, to_version)
+    m_to = _manifest(path, to_version)
     schema_json = m_to.get("schema")
     from pyspark.sql.types import StructType
     schema = StructType.fromJson(json.loads(schema_json)) \
@@ -2503,10 +2034,10 @@ def snapshot_changes(spark: SparkSession, path: str,
         if columns is not None:
             empty = empty.select(*columns)
         return empty.withColumn(_CHANGE_TYPE, F.lit("insert"))
-    m_from = _load_manifest(spark, path, from_version)
+    m_from = _manifest(path, from_version)
     e_from = {e["path"]: e for e in
-              _manifest_entries(spark, path, m_from)}
-    e_to = {e["path"]: e for e in _manifest_entries(spark, path, m_to)}
+              _entries(path, m_from)}
+    e_to = {e["path"]: e for e in _entries(path, m_to)}
     added = [e for p, e in e_to.items() if p not in e_from]
     removed = [e for p, e in e_from.items() if p not in e_to]
 
@@ -2607,7 +2138,7 @@ def snapshot_changes_log(spark: SparkSession, path: str,
                 f"no published snapshot under {path}")
     out = None
     for v in range(from_version + 1, to_version + 1):
-        if _load_manifest(spark, path, v).get("operation") == "compact":
+        if _manifest(path, v).get("operation") == "compact":
             continue
         step = (snapshot_changes(spark, path, v - 1, v,
                                  key_cols=key_cols, columns=columns)
@@ -2621,8 +2152,6 @@ def snapshot_changes_log(spark: SparkSession, path: str,
 
 
 # -- named refs: tags (r8) --------------------------------------------------
-
-_REFS_DIR = "_refs"
 
 
 def _validate_ref_name(name: str) -> None:
@@ -2642,10 +2171,11 @@ def snapshot_tag(spark: SparkSession, path: str, name: str,
     AND data files survive :func:`snapshot_prune`'s retention window
     until the tag is deleted, so a pinned training-data release stays
     readable for exactly as long as something names it. Creation is
-    atomic (exclusive create of ``_refs/<name>.json``); re-pointing an
-    existing tag requires ``overwrite=True`` and is delete+create
-    (a concurrent reader between the two sees "no such tag", never a
-    torn ref). Returns the pinned version."""
+    atomic (exclusive create of ``_refs/<name>.json``, the manifest
+    publish's primitive); re-pointing an existing tag requires
+    ``overwrite=True`` and is delete+create (a concurrent reader
+    between the two sees "no such tag", never a torn ref). Returns
+    the pinned version."""
     import time
 
     _validate_ref_name(name)
@@ -2654,42 +2184,34 @@ def snapshot_tag(spark: SparkSession, path: str, name: str,
         if version is None:
             raise FileNotFoundError(
                 f"no published snapshot under {path}")
-    jvm, fs, _ = _fs(spark, path)
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(
-            f"{path}/{_MANIFEST_DIR}/{version}.json")):
+    root = _local(path)
+    if not _exists(f"{root}/{_MANIFEST_DIR}/{version}.json"):
         raise FileNotFoundError(
             f"version {version} of {path} does not exist (pruned?)")
-    ref = f"{path}/{_REFS_DIR}/{name}.json"
+    ref = f"{root}/{_REFS_DIR}/{name}.json"
     body = json.dumps({"version": version, "created_at": time.time()},
                       sort_keys=True)
     if overwrite:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(ref), False)
+        _delete_quiet(ref)
     try:
-        _write_text(spark, ref, body)
-    except Exception as e:
-        if _is_exists_error(e):
-            raise ValueError(
-                f"tag {name!r} already exists on {path}; pass "
-                f"overwrite=True to re-point it") from e
-        raise
+        _create_exclusive(ref, body.encode("utf-8"))
+    except FileExistsError:
+        raise ValueError(
+            f"tag {name!r} already exists on {path}; pass "
+            f"overwrite=True to re-point it") from None
     return version
 
 
 def snapshot_tags(spark: SparkSession, path: str) -> dict[str, int]:
     """All tags on the table: ``{name: version}``."""
-    jvm, fs, _ = _fs(spark, path)
-    d = jvm.org.apache.hadoop.fs.Path(f"{path}/{_REFS_DIR}")
-    if not fs.exists(d):
-        return {}
+    d = f"{_local(path)}/{_REFS_DIR}"
     out = {}
-    for st in fs.listStatus(d):
-        n = st.getPath().getName()
+    for n in _listdir(d):
         if n.endswith(".json") and not n.startswith("."):
             try:
-                out[n[:-len(".json")]] = json.loads(_read_text(
-                    spark, f"{path}/{_REFS_DIR}/{n}"))["version"]
-            except Exception:
-                continue               # torn concurrent re-point
+                out[n[:-len(".json")]] = _read_json(f"{d}/{n}")["version"]
+            except (OSError, ValueError):
+                continue               # untagged since the listing
     return out
 
 
@@ -2697,7 +2219,7 @@ def snapshot_untag(spark: SparkSession, path: str, name: str) -> None:
     """Delete a tag. The version it pinned becomes subject to normal
     :func:`snapshot_prune` retention again."""
     _validate_ref_name(name)
-    jvm, fs, _ = _fs(spark, path)
-    if not fs.delete(jvm.org.apache.hadoop.fs.Path(
-            f"{path}/{_REFS_DIR}/{name}.json"), False):
+    ref = f"{_local(path)}/{_REFS_DIR}/{name}.json"
+    if not _exists(ref):
         raise FileNotFoundError(f"no tag {name!r} on {path}")
+    _delete_quiet(ref)

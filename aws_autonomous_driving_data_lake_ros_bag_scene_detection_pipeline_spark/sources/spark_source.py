@@ -47,26 +47,26 @@ file with pyarrow, so heavy feeds scale like the batch reader;
 ``SimpleDataSourceStreamReader`` face (prefetch/cache pattern,
 lowest overhead for small control feeds).
 
-Scope: the spark-less manifest walk serves ``file:``/local/NFS
-table paths natively; other schemes plug in through
+Scope: this module is also the ONE spark-less metadata seam of the
+table format. Every manifest, segment, ref and hint read or write —
+this source's and the library's (:mod:`.snapshots`,
+:mod:`..streaming.ingest`) — goes through the small I/O layer below:
+``file:``/local/NFS table paths natively, other schemes through
 :func:`register_snapshot_filesystem` (r11 — a small adapter every
 I/O site dispatches through; must be registered in every process
-that touches the store), and paths with no adapter fail loudly,
-pointing at :func:`read_snapshot` (the JVM Hadoop-FS route, which
-reads any Hadoop scheme). The write half of the seam is shared:
-:func:`_task_write` writes the data files of EVERY snapshot commit —
-these writers' and the library's (:func:`~.snapshots.snapshot_append`
-and the rest) — so writing a table needs a local path or an adapter
-either way. Manifest publish is not shared: the library publishes
-through its :class:`~.snapshots.CommitStrategy` over py4j, while this
-source's ``commit`` runs in a Python worker with no SparkSession and
-publishes with :func:`_cas_publish`.
+that touches the store). A schemed path with no adapter fails loudly,
+for reads and writes alike. :func:`_task_write` writes the data files
+of EVERY snapshot commit, and :func:`_commit_manifest` publishes
+every manifest: an exclusive create (``os.link`` of a temp file on
+local paths, the adapter's ``create_exclusive`` — S3's conditional
+PUT — on schemed ones), so exactly one writer wins each version.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import uuid
 from urllib.parse import unquote
 
 from pyspark.sql.datasource import (
@@ -102,7 +102,7 @@ def _path_opt(options) -> str:
 
 
 # --------------------------------------------------- filesystem seam (r11)
-# The spark-less manifest walk serves local/NFS paths natively and
+# The spark-less metadata seam serves local/NFS paths natively and
 # ``file:`` URIs by stripping the scheme. Other schemes (the
 # reference's lake lived on S3 — infrastructure/ecs_stack.py:387-401)
 # plug in through register_snapshot_filesystem(scheme, adapter): a
@@ -111,19 +111,24 @@ def _path_opt(options) -> str:
 # every I/O site below dispatches through. Local paths never pay the
 # dispatch beyond one ``"://" in path`` check. Adapters must be
 # picklable and registered in every process that touches the store
-# (driver-side planning workers AND executors) — within one process,
-# direct reader/writer calls work immediately after registration.
-# Unregistered schemes fail loudly, pointing at read_snapshot()
-# (the JVM Hadoop-FS route, which needs no adapter).
+# (the driver, driver-side planning workers AND executors) — within
+# one process, direct reader/writer calls work immediately after
+# registration. Unregistered schemes fail loudly.
 
 _FS_ADAPTERS: dict[str, object] = {}
 
 
 def register_snapshot_filesystem(scheme: str, adapter) -> None:
-    """Register a filesystem adapter for ``<scheme>://`` table paths
-    used with the ``snapshot`` data source and
-    :func:`register_snapshot_table`. ``adapter`` provides:
-    ``open_in(path) -> binary file-like`` (seekable),
+    """Register a filesystem adapter for ``<scheme>://`` snapshot
+    table paths: every manifest, segment, ref and hint access and
+    every data-file write of the library (:mod:`.snapshots`), the
+    ``snapshot`` data source and :func:`register_snapshot_table` go
+    through it. (Spark's own parquet reader still reads the data
+    files of :func:`~.snapshots.read_snapshot`, so those need a
+    Hadoop file system for the scheme too — S3A for ``s3a://``.)
+    ``adapter`` provides:
+    ``open_in(path) -> binary file-like`` (seekable; raises
+    ``FileNotFoundError`` when missing),
     ``write_bytes(path, data)`` (creates parents),
     ``listdir(path) -> [names]`` ([] when missing),
     ``exists(path) -> bool``, ``getsize(path) -> int``,
@@ -146,8 +151,9 @@ def _adapter(p: str):
     if ad is None:
         raise ValueError(
             f"no snapshot filesystem adapter registered for scheme "
-            f"{p[:i]!r} ({p!r}): register_snapshot_filesystem() in "
-            f"this process, or use read_snapshot() (JVM Hadoop FS)")
+            f"{p[:i]!r} ({p!r}): snapshot tables are read and written "
+            f"through register_snapshot_filesystem() adapters — "
+            f"register one in every process that touches the store")
     return ad
 
 
@@ -185,29 +191,195 @@ def _listdir(p: str) -> list[str]:
     return os.listdir(p)
 
 
-def _latest_version(root: str) -> int | None:
-    mdir = os.path.join(root, _MANIFEST_DIR)
-    vs = [int(n[:-5]) for n in _listdir(mdir)
-          if n.endswith(".json") and n[:-5].isdigit()]
-    return max(vs) if vs else None
-
-
-def _manifest(root: str, version: int) -> dict:
-    return _read_json(os.path.join(root, _MANIFEST_DIR,
-                                   f"{version}.json"))
-
-
-def _entries(root: str, m: dict) -> list[dict]:
-    out = list(m.get("files") or [])
-    for seg in m.get("segments") or []:
-        out += _read_json(os.path.join(root, _MANIFEST_DIR,
-                                       seg["path"]))["files"]
-    return out
-
-
 def _exists(p: str) -> bool:
     ad = _adapter(p)
     return bool(ad.exists(p)) if ad is not None else os.path.exists(p)
+
+
+def _write_bytes(p: str, data: bytes) -> None:
+    ad = _adapter(p)
+    if ad is not None:
+        ad.write_bytes(p, data)
+        return
+    os.makedirs(os.path.dirname(p), exist_ok=True)
+    with open(p, "wb") as f:
+        f.write(data)
+
+
+def _replace_bytes(p: str, data: bytes) -> None:
+    """Atomic overwrite: a reader sees the old or the new bytes."""
+    ad = _adapter(p)
+    if ad is not None:
+        ad.replace_bytes(p, data)
+        return
+    tmp = os.path.join(os.path.dirname(p), f".tmp-{uuid.uuid4().hex}")
+    with open(tmp, "wb") as f:
+        f.write(data)
+    os.replace(tmp, p)
+
+
+def _create_exclusive(p: str, data: bytes) -> None:
+    """Publish ``data`` at ``p`` complete or not at all; raises
+    ``FileExistsError`` when ``p`` exists. Locally a hidden temp file
+    is hard-linked to the final name — ``link(2)`` never replaces an
+    existing name, on every POSIX file system and NFS — so the table
+    directory must support hard links. Adapters use their own
+    atomic create-if-absent (S3: ``If-None-Match: *`` PUT)."""
+    ad = _adapter(p)
+    if ad is not None:
+        ad.create_exclusive(p, data)
+        return
+    d = os.path.dirname(p)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".tmp-{uuid.uuid4().hex}")
+    with open(tmp, "wb") as f:
+        f.write(data)
+    try:
+        os.link(tmp, p)
+    finally:
+        os.unlink(tmp)
+
+
+def _delete_quiet(p: str) -> None:
+    try:
+        ad = _adapter(p)
+        if ad is not None:
+            ad.delete(p)
+        else:
+            os.unlink(p)
+    except OSError:
+        pass
+
+
+# ------------------------------------------------------ spark-less manifests
+# One resolver, one reader and one publish for every snapshot table.
+# Each takes the table path as given (``file:`` URIs and adapter
+# schemes included) and normalizes it itself.
+
+_HINT = "_latest_hint"
+
+
+class ConcurrentCommit(RuntimeError):
+    """Another writer published this version first; re-read the table
+    state and retry the operation."""
+
+
+def _versions(path: str) -> list[int]:
+    """Every published version, ascending (one directory listing)."""
+    mdir = os.path.join(_local(path), _MANIFEST_DIR)
+    return sorted(int(n[:-5]) for n in _listdir(mdir)
+                  if n.endswith(".json") and n[:-5].isdigit())
+
+
+def _latest_version(path: str) -> int | None:
+    """Highest published version, or None for an empty/new table.
+    O(1)+O(lag) on a hinted table: ``_latest_hint`` names a
+    known-published version and the resolver probes FORWARD with
+    existence checks until the first gap. A missing, corrupt or
+    too-new hint falls back to the listing, where only complete
+    ``<n>.json`` manifests are visible (the publish links them in
+    whole), so an in-flight commit can't be resolved either way."""
+    mdir = os.path.join(_local(path), _MANIFEST_DIR)
+    try:
+        v = int(_read_bytes(os.path.join(mdir, _HINT)))
+    except (OSError, ValueError):
+        v = None
+    if v is not None and _exists(os.path.join(mdir, f"{v}.json")):
+        while _exists(os.path.join(mdir, f"{v + 1}.json")):
+            v += 1
+        return v
+    vs = _versions(path)
+    return vs[-1] if vs else None
+
+
+def _manifest(path: str, version: int) -> dict:
+    return _read_json(os.path.join(_local(path), _MANIFEST_DIR,
+                                   f"{version}.json"))
+
+
+def _segment(path: str, name: str) -> list[dict]:
+    return _read_json(os.path.join(_local(path), _MANIFEST_DIR,
+                                   name))["files"]
+
+
+def _entries(path: str, m: dict) -> list[dict]:
+    """The manifest's complete data-file entry list: inline ``files``
+    plus every referenced segment's entries."""
+    out = list(m.get("files") or [])
+    for seg in m.get("segments") or []:
+        out += _segment(path, seg["path"])
+    return out
+
+
+def _tag_version(path: str, tag: str) -> int:
+    try:
+        return _read_json(os.path.join(_local(path), _REFS_DIR,
+                                       f"{tag}.json"))["version"]
+    except FileNotFoundError:
+        raise FileNotFoundError(f"no tag {tag!r} on {path}") from None
+
+
+def _monotonic_stamp(now: float, prev: float | None) -> float:
+    """Commit-time authority for AS-OF (r10, r9 VERDICT item 5):
+    the recorded stamp is ``max(prev + 1 µs, now)``, so history
+    timestamps are strictly increasing in version even when a second
+    writer's wall clock runs behind the first's — multi-writer clock
+    skew can reorder ``time.time()`` but never the recorded stamps,
+    and as-of resolution by timestamp always agrees with commit
+    order."""
+    if prev is not None and now <= prev:
+        return prev + 1e-6
+    return now
+
+
+def _commit_manifest(path: str, version: int, manifest: dict) -> None:
+    """THE manifest publish of the table format — the library's
+    commits and the ``snapshot`` data source's alike. Stamps
+    ``committed_at`` (monotonic vs the previous manifest, so as-of
+    resolution agrees with commit order under clock skew), publishes
+    ``<version>.json`` with one exclusive create — exactly one writer
+    wins each version, the losers raise :class:`ConcurrentCommit`,
+    and a crash leaves no visible partial manifest — then updates the
+    advisory ``_latest_hint`` (best-effort: a stale or missing hint
+    only costs the resolver a forward probe or a listing)."""
+    import time
+
+    mdir = os.path.join(_local(path), _MANIFEST_DIR)
+    if "committed_at" not in manifest:
+        prev_ts = None
+        if version > 0:
+            try:
+                prev_ts = _manifest(path, version - 1).get(
+                    "committed_at")
+            except (OSError, ValueError):
+                prev_ts = None         # pruned/first: plain clock
+        manifest["committed_at"] = _monotonic_stamp(time.time(),
+                                                    prev_ts)
+    try:
+        _create_exclusive(os.path.join(mdir, f"{version}.json"),
+                          json.dumps(manifest, sort_keys=True)
+                          .encode("utf-8"))
+    except FileExistsError:
+        raise ConcurrentCommit(
+            f"version {version} of {path} was published by another "
+            f"writer; reload and retry") from None
+    try:
+        _replace_bytes(os.path.join(mdir, _HINT),
+                       str(version).encode("ascii"))
+    except Exception:  # noqa: BLE001 — the version is published; an
+        pass           # advisory hint must not report the commit failed
+
+
+def _entry_bytes(path: str, e: dict) -> int:
+    """A data file's byte size: the manifest's ``bytes`` (recorded
+    since r11), else one stat, cached on the entry dict."""
+    b = e.get("bytes")
+    if b is None:
+        p = os.path.join(_local(path), _DATA_DIR, e["path"])
+        ad = _adapter(p)
+        b = ad.getsize(p) if ad is not None else os.path.getsize(p)
+        e["bytes"] = b
+    return int(b)
 
 
 def _resolve(root: str, options) -> tuple[int, dict]:
@@ -216,13 +388,7 @@ def _resolve(root: str, options) -> tuple[int, dict]:
     if version is not None and tag is not None:
         raise ValueError("pass at most one of version, tag")
     if tag is not None:
-        # adapter-aware existence check (r11 review fix: a plain
-        # os.path.exists on a schemed path is always False, which
-        # reported every tag on an adapter store as missing)
-        ref = os.path.join(root, _REFS_DIR, f"{tag}.json")
-        if not _exists(ref):
-            raise FileNotFoundError(f"no tag {tag!r} under {root}")
-        version = _read_json(ref)["version"]
+        version = _tag_version(root, tag)
     elif version is not None:
         version = int(version)
     else:
@@ -613,16 +779,6 @@ class SnapshotPartitionedStreamReader(DataSourceStreamReader):
             self._vcache.pop(next(iter(self._vcache)))
         return hit
 
-    def _entry_bytes(self, e: dict) -> int:
-        b = e.get("bytes")
-        if b is None:                  # pre-r11 manifest entry
-            p = os.path.join(self.root, _DATA_DIR, e["path"])
-            ad = _adapter(p)
-            b = (ad.getsize(p) if ad is not None
-                 else os.path.getsize(p))
-            e["bytes"] = b             # cache on the entry dict
-        return int(b)
-
     @staticmethod
     def _pos_key(pos: tuple) -> tuple[int, float]:
         v, i = pos
@@ -673,7 +829,7 @@ class SnapshotPartitionedStreamReader(DataSourceStreamReader):
                             and bytes_adm >= self.max_bytes)):
                     capped_at = (v, j)
                     break
-                bytes_adm += self._entry_bytes(files[j])
+                bytes_adm += _entry_bytes(self.root, files[j])
                 admitted += 1
                 j += 1
             if j > lo_i or j == len(files):
@@ -854,9 +1010,7 @@ def register_snapshot_table(spark, name: str, path: str, *,
     an S3 lake): the pinned files are then COPIED through the
     store's adapter into the local export so the catalog table stays
     readable by engines that can't reach the store. ``file:`` table
-    paths need no adapter and keep link semantics. ``protect=True``
-    rides the JVM-library tag write, so it serves local/``file:``/
-    Hadoop-FS table paths, not adapter schemes (loud error).
+    paths need no adapter and keep link semantics.
 
     Semantics: the registration pins the version resolved NOW
     (``version=`` / ``tag=`` / latest) — exactly what a crawler run
@@ -914,11 +1068,6 @@ def register_snapshot_table(spark, name: str, path: str, *,
                 f"table {root!r} lives on an adapter scheme — pass "
                 f"export_path= (a local/NFS dir Spark's catalog can "
                 f"read); the export tree cannot live on the store")
-        if protect:
-            raise ValueError(
-                "protect=True tags through the JVM library, which "
-                "adapter schemes can't serve — protect the version "
-                "with your store's own retention instead")
         if link_mode not in ("auto", "copy"):
             raise ValueError(
                 f"link_mode {link_mode!r} is impossible across "
@@ -1050,15 +1199,13 @@ def register_snapshot_table(spark, name: str, path: str, *,
 # entries as commit messages; the DRIVER commit assembles the next
 # manifest — append mode carries every previous file/segment BY
 # REFERENCE like snapshot_append, overwrite mode replaces like
-# snapshot_write — and publishes it with an exclusive-create CAS
-# (os.link refuses an existing destination), so exactly one writer
-# wins a version and a crashed job leaves only invisible orphans for
-# snapshot_prune. The STREAMING sink records the micro-batch id as a
+# snapshot_write — and publishes it through _commit_manifest, the
+# library's own publish, so exactly one writer wins a version and a
+# crashed job leaves only invisible orphans for snapshot_prune. The STREAMING sink records the micro-batch id as a
 # source_batch replay marker, so a replayed batch is a
 # version-preserving no-op — the exactly-once contract of
 # snapshot_append_stream through Spark's own sink API.
 
-import uuid as _uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql.datasource import (
@@ -1067,34 +1214,9 @@ from pyspark.sql.datasource import (
 )
 
 
-class ConcurrentSnapshotWrite(RuntimeError):
-    """Another writer committed the version this job raced for."""
-
-
-def _delete_quiet(p: str) -> None:
-    try:
-        ad = _adapter(p)
-        if ad is not None:
-            ad.delete(p)
-        else:
-            os.unlink(p)
-    except OSError:
-        pass
-
-
 @dataclass
 class _WriteResult(WriterCommitMessage):
     entries: list = field(default_factory=list)
-
-
-def _write_bytes(p: str, data: bytes) -> None:
-    ad = _adapter(p)
-    if ad is not None:
-        ad.write_bytes(p, data)
-        return
-    os.makedirs(os.path.dirname(p), exist_ok=True)
-    with open(p, "wb") as f:
-        f.write(data)
 
 
 def _zone_stats(col, rows: int) -> dict:
@@ -1168,7 +1290,7 @@ def _task_write(iterator, root: str, partition_cols: list[str],
                     if not (pa.types.is_floating(f.type)
                             or pa.types.is_nested(f.type))]
         part_dir = _hive_partition_dir(partition_cols, vals)
-        name = f"{_uuid.uuid4().hex}.parquet"
+        name = f"{uuid.uuid4().hex}.parquet"
         rel = f"{part_dir}/{name}" if part_dir else name
         if _adapter(root) is not None:
             import io
@@ -1205,65 +1327,6 @@ def _task_write(iterator, root: str, partition_cols: list[str],
     return entries
 
 
-def _cas_publish(root: str, version: int, manifest: dict) -> None:
-    """Exclusive-create manifest publish for local stores: write a
-    hidden temp, os.link to the final name (EEXIST = lost race),
-    then best-effort hint update."""
-    import time
-
-    if "committed_at" not in manifest:
-        # monotonic vs the previous manifest (r10): as-of stamps
-        # must agree with commit order under multi-writer clock skew
-        from .snapshots import _monotonic_stamp
-        prev_ts = None
-        if version > 0:
-            try:
-                prev_ts = _manifest(root, version - 1).get(
-                    "committed_at")
-            except Exception:
-                prev_ts = None
-        manifest["committed_at"] = _monotonic_stamp(time.time(),
-                                                    prev_ts)
-    mdir = os.path.join(root, _MANIFEST_DIR)
-    ad = _adapter(root)
-    if ad is not None:
-        # adapter CAS: the store's conditional create (object
-        # stores: conditional PUT) is the exclusive-create twin of
-        # the local os.link dance
-        try:
-            ad.create_exclusive(f"{mdir}/{version}.json",
-                                json.dumps(manifest).encode("utf-8"))
-        except FileExistsError:
-            raise ConcurrentSnapshotWrite(
-                f"version {version} of {root} was committed by "
-                f"another writer") from None
-        try:                                 # advisory, stale-safe
-            ad.replace_bytes(f"{mdir}/_latest_hint",
-                             str(version).encode("ascii"))
-        except Exception:
-            pass
-        return
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".w-{_uuid.uuid4().hex}")
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(manifest, f)
-    try:
-        os.link(tmp, os.path.join(mdir, f"{version}.json"))
-    except FileExistsError:
-        raise ConcurrentSnapshotWrite(
-            f"version {version} of {root} was committed by another "
-            f"writer") from None
-    finally:
-        os.unlink(tmp)
-    try:                                     # advisory, stale-safe
-        htmp = os.path.join(mdir, f".hint-{_uuid.uuid4().hex}")
-        with open(htmp, "w") as f:
-            f.write(str(version))
-        os.replace(htmp, os.path.join(mdir, "_latest_hint"))
-    except OSError:
-        pass
-
-
 def _publish_commit(root: str, schema_json: str,
                     partition_cols: list[str],
                     stats_cols: list[str], entries: list[dict],
@@ -1278,7 +1341,7 @@ def _publish_commit(root: str, schema_json: str,
     head (appends read nothing — rebase-safe, like
     snapshot_append(retries=)). Returns the committed version, or
     None for a replayed streaming batch."""
-    from .snapshots import _SEGMENT_ROLL, _roll_segments
+    from .snapshots import _build_file_refs
     for _ in range(retries + 1):
         prev = _latest_version(root)
         if prev is None or overwrite:
@@ -1301,7 +1364,7 @@ def _publish_commit(root: str, schema_json: str,
                  "bloom_bits": (bloom_bits if bloom_cols else None),
                  "append_sources": srcs or None,
                  "operation": "write",
-                 "files": entries, "segments": []}
+                 **_build_file_refs(root, {}, set(), entries)}
         else:
             pm = _manifest(root, prev)
             if pm.get("partition_cols") != partition_cols:
@@ -1323,11 +1386,6 @@ def _publish_commit(root: str, schema_json: str,
                 if bid <= srcs.get(src, -1):
                     return None          # replayed batch: no-op
                 srcs[src] = bid
-            inline = list(pm.get("files") or []) + entries
-            carried = list(pm.get("segments") or [])
-            if len(inline) > _SEGMENT_ROLL:
-                rolled, inline = _roll_segments(root, inline)
-                carried += rolled
             m = {"version": prev + 1,
                  "partition_cols": partition_cols,
                  "schema": pm.get("schema") or schema_json,
@@ -1336,16 +1394,16 @@ def _publish_commit(root: str, schema_json: str,
                  "bloom_bits": pm.get("bloom_bits"),
                  "append_sources": srcs or None,
                  "operation": "append",
-                 "files": inline, "segments": carried}
+                 **_build_file_refs(root, pm, set(), entries)}
             version = prev + 1
         try:
-            _cas_publish(root, version, m)
+            _commit_manifest(root, version, m)
             return version
-        except ConcurrentSnapshotWrite:
+        except ConcurrentCommit:
             if overwrite or prev is None:
                 raise                     # replace races are real
             continue                      # append: restack and retry
-    raise ConcurrentSnapshotWrite(
+    raise ConcurrentCommit(
         f"lost {retries + 1} append races on {root}")
 
 

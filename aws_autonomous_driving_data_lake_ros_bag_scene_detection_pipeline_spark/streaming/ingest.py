@@ -1441,33 +1441,21 @@ def _synced_version(spark, index_path: str) -> int | None:
     files under ``index_path/_snapshot_sync/`` — resolved like
     manifest versions (max over names), so a torn marker write (the
     name carries the version; content is empty) cannot corrupt it."""
-    from ..sources.snapshots import _fs
+    from ..sources.spark_source import _listdir, _local
 
-    jvm, fs, _ = _fs(spark, index_path)
-    d = jvm.org.apache.hadoop.fs.Path(f"{index_path}/{_SYNC_DIR}")
-    if not fs.exists(d):
-        return None
-    best = None
-    for st in fs.listStatus(d):
-        name = st.getPath().getName()
-        if name.endswith(".synced"):
-            try:
-                v = int(name[:-len(".synced")])
-            except ValueError:
-                continue
-            best = v if best is None else max(best, v)
-    return best
+    vs = [int(n[:-len(".synced")])
+          for n in _listdir(f"{_local(index_path)}/{_SYNC_DIR}")
+          if n.endswith(".synced") and n[:-len(".synced")].isdigit()]
+    return max(vs) if vs else None
 
 
 def _mark_synced(spark, index_path: str, version: int) -> None:
-    from ..sources.snapshots import _is_exists_error, _write_text
+    # empty and named by its version: a replayed step rewrites the
+    # same empty file
+    from ..sources.spark_source import _local, _write_bytes
 
-    try:
-        _write_text(spark,
-                    f"{index_path}/{_SYNC_DIR}/{version}.synced", "")
-    except Exception as e:           # replayed step: marker exists
-        if not _is_exists_error(e):
-            raise
+    _write_bytes(f"{_local(index_path)}/{_SYNC_DIR}/{version}.synced",
+                 b"")
 
 
 def snapshot_follow(spark, table_path: str, *, state_path: str,
@@ -1487,7 +1475,7 @@ def snapshot_follow(spark, table_path: str, *, state_path: str,
     without reading them. Returns ``{from_version, to_version,
     steps}``."""
     from ..sources.snapshots import (
-        _load_manifest, latest_version, read_snapshot, snapshot_changes,
+        _manifest, latest_version, read_snapshot, snapshot_changes,
     )
 
     head = latest_version(spark, table_path)
@@ -1517,8 +1505,7 @@ def snapshot_follow(spark, table_path: str, *, state_path: str,
             f"rebuilt? rebuild the consumer (or clear {_SYNC_DIR}) "
             f"to resync")
     for v in range(synced + 1, head + 1):
-        if _load_manifest(spark, table_path, v).get("operation") \
-                == "compact":
+        if _manifest(table_path, v).get("operation") == "compact":
             _mark_synced(spark, state_path, v)
             continue
         apply(snapshot_changes(spark, table_path, v - 1, v,
@@ -1874,9 +1861,9 @@ def aggregate_sync_snapshot(spark, table_path: str, view_path: str, *,
     derive = dict(derive or {})
     if derive:
         import json as _json
-        from ..sources.snapshots import _load_manifest
+        from ..sources.snapshots import _manifest
         head = latest_version(spark, table_path)
-        sch = (_load_manifest(spark, table_path, head).get("schema")
+        sch = (_manifest(table_path, head).get("schema")
                if head is not None else None)
         table_cols = ([f["name"] for f in
                        _json.loads(sch)["fields"]] if sch else [])
@@ -2120,15 +2107,14 @@ def snapshot_replicate(spark, src_path: str, dst_path: str, *,
     the drop explicitly if it matters). Returns
     ``{from_version, to_version, steps}``."""
     from ..sources.snapshots import (
-        _load_manifest, latest_version, snapshot_apply_changes,
+        _manifest, latest_version, snapshot_apply_changes,
     )
     if partition_cols is None:
         head = latest_version(spark, src_path)
         if head is None:
             raise FileNotFoundError(
                 f"no published snapshot under {src_path}")
-        partition_cols = _load_manifest(spark, src_path,
-                                        head)["partition_cols"]
+        partition_cols = _manifest(src_path, head)["partition_cols"]
         if columns is not None:
             partition_cols = [c for c in partition_cols
                               if c in columns]
@@ -2233,7 +2219,7 @@ def join_sync_snapshot(spark, left_path: str, right_path: str,
     Returns ``{left: {...}, right: {...}}`` with each side's
     ``from_version/to_version/steps``."""
     from ..sources.snapshots import (
-        _load_manifest, latest_version, read_snapshot,
+        _manifest, latest_version, read_snapshot,
         snapshot_apply_changes, snapshot_write,
     )
     def _table_cols(path: str) -> list[str]:
@@ -2244,7 +2230,7 @@ def join_sync_snapshot(spark, left_path: str, right_path: str,
         if head is None:
             raise FileNotFoundError(
                 f"no published snapshot under {path}")
-        m = _load_manifest(spark, path, head)
+        m = _manifest(path, head)
         sch = m.get("schema")
         if sch:
             return [f["name"]
@@ -2254,8 +2240,8 @@ def join_sync_snapshot(spark, left_path: str, right_path: str,
         # every file agrees) — constructing the full reader would
         # build and existence-check the whole file list just for
         # names (r8 advisory)
-        from ..sources.snapshots import _DATA_DIR, _manifest_entries
-        entries = _manifest_entries(spark, path, m)
+        from ..sources.snapshots import _DATA_DIR, _entries
+        entries = _entries(path, m)
         if not entries:
             return read_snapshot(spark, path, head).columns
         one = spark.read.parquet(
@@ -2380,7 +2366,7 @@ def join_sync_snapshot(spark, left_path: str, right_path: str,
             # reader resolves (and existence-checks) every file
             other = None
             rec = {"side": side, "version": v, "mode": "full"}
-            m_other = _load_manifest(spark, other_path, pin)
+            m_other = _manifest(other_path, pin)
             covered = [c for c in on
                        if c in (m_other.get("partition_cols") or [])
                        or c in (m_other.get("stats_cols") or [])
@@ -2605,8 +2591,7 @@ def sync_status(spark, table_path: str, state_path: str) -> dict:
     (capped at 50 — a consumer that far behind should just be
     synced), so an operator can see at a glance whether the lag is
     real work (appends/upserts) or skippable compactions."""
-    from ..sources.snapshots import _load_manifest, latest_version
-    from ..sources.snapshots import _fs, _MANIFEST_DIR
+    from ..sources.snapshots import _manifest, latest_version
     head = latest_version(spark, table_path)
     if head is None:
         raise FileNotFoundError(
@@ -2619,15 +2604,11 @@ def sync_status(spark, table_path: str, state_path: str) -> dict:
             f"table rebuilt?")
     lag = head - synced if synced is not None else head + 1
     lo = synced + 1 if synced is not None else 0
-    jvm, fs, _ = _fs(spark, table_path)
     pending = []
     for v in range(lo, min(head, lo + 49) + 1):
-        jp = jvm.org.apache.hadoop.fs.Path(
-            f"{table_path}/{_MANIFEST_DIR}/{v}.json")
-        if not fs.exists(jp):
+        try:
+            pending.append(_manifest(table_path, v).get("operation"))
+        except FileNotFoundError:
             pending.append("(pruned)")   # lagged past retention
-            continue
-        pending.append(
-            _load_manifest(spark, table_path, v).get("operation"))
     return {"table_head": head, "synced_version": synced,
             "lag_commits": lag, "pending_operations": pending}

@@ -70,8 +70,8 @@ def _seals_path(ledger_path: str) -> str:
 def _list_dir(spark: SparkSession, path: str):
     """Hadoop-FS listStatus (works for file:// and s3a:// alike);
     returns [] for a missing directory."""
-    from ..sources.snapshots import _fs
-    _, fs, jpath = _fs(spark, path)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(jpath):
         return []
     return list(fs.listStatus(jpath))

@@ -170,8 +170,8 @@ def test_where_routing_uses_blooms(spark, tmp_path):
     key = rows[42][0]
     dnf = snapmod.sql_predicates(spark, f"key = '{key}'")
     assert dnf is not None
-    m = snapmod._load_manifest(spark, path, 0)
-    entries = snapmod._manifest_entries(spark, path, m)
+    m = snapmod._manifest(path, 0)
+    entries = snapmod._entries(path, m)
     kept = snapmod._prune_entries(entries, dnf)
     assert len(kept) <= 2 < len(entries)
     got = read_snapshot(spark, path, where=f"key = '{key}'")

@@ -5,7 +5,7 @@ IfNoneMatch, Delimiter, pagination, and raising real botocore
 ClientErrors) stands in for the network; the adapter then runs the SAME
 contract matrix the mock-scheme adapter runs in test_spark_source.py —
 full DS write → commit → read → time travel → tags → streaming-offset
-loop — plus the ConditionalPutCommit transport race.
+loop — plus the conditional-PUT manifest commit race.
 """
 
 from __future__ import annotations
@@ -16,7 +16,7 @@ import pytest
 from botocore.exceptions import ClientError
 
 from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources.s3 import (
-    S3SnapshotAdapter, s3_put_if_absent,
+    S3SnapshotAdapter,
 )
 
 
@@ -176,9 +176,9 @@ def test_ds_write_read_roundtrip_through_s3_adapter(adapter, s3):
     )
 
     from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources.spark_source import (
-        ConcurrentSnapshotWrite, SnapshotBatchWriter,
+        ConcurrentCommit, SnapshotBatchWriter,
         SnapshotPartitionedStreamReader, SnapshotReader,
-        _cas_publish, _manifest,
+        _commit_manifest, _manifest,
     )
     root = "s3mock://lake-bucket/tbl"
     schema = StructType([StructField("id", LongType()),
@@ -215,37 +215,48 @@ def test_ds_write_read_roundtrip_through_s3_adapter(adapter, s3):
     srdr.initialOffset()
     assert srdr.latestOffset() == {"version": 1, "index": 1}
     m = _manifest(root, 1)
-    with pytest.raises(ConcurrentSnapshotWrite):
-        _cas_publish(root, 1, dict(m))
+    with pytest.raises(ConcurrentCommit):
+        _commit_manifest(root, 1, dict(m))
     # every byte moved through the fake client, none around it
     assert "put_object" in s3.calls and "get_object" in s3.calls
 
 
-def test_conditional_put_commit_transport(s3):
-    """s3_put_if_absent IS the ConditionalPutCommit transport: first
-    writer's PUT lands, the racer's precondition fails → False →
-    ConcurrentCommit upstream."""
-    put = s3_put_if_absent(client=s3)
-    path = "s3mock://lake-bucket/t/_snapshots/3.json"
-    assert put(path, json.dumps({"v": 3})) is True
-    assert put(path, json.dumps({"v": 3, "racer": True})) is False
+def test_conditional_put_commit_transport(adapter, s3):
+    """create_exclusive IS the conditional PUT: the first writer's PUT
+    lands, the racer's precondition fails (412, or 409 when the two
+    PUTs overlap) as FileExistsError, and the first body survives."""
+    path = "s3mock://lake-bucket/t/_manifests/3.json"
+    adapter.create_exclusive(path, json.dumps({"v": 3}).encode())
+    with pytest.raises(FileExistsError):
+        adapter.create_exclusive(
+            path, json.dumps({"v": 3, "racer": True}).encode())
     assert json.loads(
-        s3.objects[("lake-bucket", "t/_snapshots/3.json")]) == {"v": 3}
+        s3.objects[("lake-bucket", "t/_manifests/3.json")]) == {"v": 3}
+
+    def _conflict(**kw):
+        raise _err("PutObject", "ConditionalRequestConflict", 409)
+
+    s3.put_object = _conflict
+    with pytest.raises(FileExistsError):
+        adapter.create_exclusive("s3mock://lake-bucket/t/x", b"{}")
 
 
 def test_conditional_put_commit_end_to_end(s3, adapter):
-    """ConditionalPutCommit(s3_put_if_absent(...)) publishes a
-    manifest through the fake service and surfaces the losing racer
-    as ConcurrentCommit — without Spark (publish only needs the
-    Hadoop FS for mkdirs, so drive the strategy's CAS directly)."""
-    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources.snapshots import (
-        ConditionalPutCommit,
+    """The manifest publish on an S3 path is ONE conditional PUT
+    through the fake service: the winner's manifest and hint land,
+    the losing racer raises ConcurrentCommit — without Spark."""
+    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources.spark_source import (
+        ConcurrentCommit, _commit_manifest, _latest_version, _manifest,
     )
-    strat = ConditionalPutCommit(s3_put_if_absent(client=s3))
-    body = json.dumps({"files": []}, sort_keys=True)
-    assert strat.put_if_absent("s3mock://b/t/_snapshots/0.json", body)
-    assert not strat.put_if_absent("s3mock://b/t/_snapshots/0.json",
-                                   body)
+    root = "s3mock://b/t"
+    _commit_manifest(root, 0, {"version": 0, "files": [],
+                               "writer": "first"})
+    with pytest.raises(ConcurrentCommit):
+        _commit_manifest(root, 0, {"version": 0, "files": [],
+                                   "writer": "racer"})
+    assert _manifest(root, 0)["writer"] == "first"
+    assert s3.objects[("b", "t/_manifests/_latest_hint")] == b"0"
+    assert _latest_version(root) == 0
 
 
 def test_pickle_discipline():

@@ -54,8 +54,7 @@ def test_snapshot_upsert_delete_semantics(spark, tmp_path):
     snapshot_delete(spark, path, dels, ["id"], partition_cols=["day"])
     got = _rows(read_snapshot(spark, path).select("id", "day"))
     assert got == {(1, "d1"), (2, "d1")}
-    m = snapmod._load_manifest(spark, path,
-                               latest_version(spark, path))
+    m = snapmod._manifest(path, latest_version(spark, path))
     assert all(e["partition"] != "day=d2" for e in m["files"])
 
     # deleting absent keys is a version-preserving no-op
@@ -75,14 +74,14 @@ def test_snapshot_untouched_partitions_carried_by_reference(spark,
         spark.createDataFrame([(1, "d1", "a"), (2, "d2", "b")],
                               "id long, day string, val string"),
         partition_cols=["day"])
-    m0 = snapmod._load_manifest(spark, path, 0)
+    m0 = snapmod._manifest(path, 0)
     d2_files = sorted(e["path"] for e in m0["files"]
                       if e["partition"] == "day=d2")
     snapshot_upsert(spark, path,
                     spark.createDataFrame([(1, "d1", "a2")],
                                           "id long, day string, val string"),
                     ["id"], partition_cols=["day"])
-    m1 = snapmod._load_manifest(spark, path, 1)
+    m1 = snapmod._manifest(path, 1)
     assert sorted(e["path"] for e in m1["files"]
                   if e["partition"] == "day=d2") == d2_files
     assert sorted(e["path"] for e in m1["files"]
@@ -253,9 +252,9 @@ def test_snapshot_concurrent_commit_single_winner(spark, tmp_path):
                                           "id long, day string, val string"),
                     ["id"], partition_cols=["day"])   # publishes v1
     with pytest.raises(ConcurrentCommit):
-        snapmod._commit_manifest(spark, path, 1, {"version": 1,
-                                                  "partition_cols": ["day"],
-                                                  "files": []})
+        snapmod._commit_manifest(path, 1, {"version": 1,
+                                           "partition_cols": ["day"],
+                                           "files": []})
     # winner's state intact
     assert _rows(read_snapshot(spark, path).select("val")) == {("w1",)}
 
@@ -285,8 +284,8 @@ def test_snapshot_prune_retention_and_gc(spark, tmp_path):
     with pytest.raises(Exception):
         read_snapshot(spark, path, version=0).collect()
     # only retained files remain under data/
-    m2 = snapmod._load_manifest(spark, path, 2)
-    m3 = snapmod._load_manifest(spark, path, 3)
+    m2 = snapmod._manifest(path, 2)
+    m3 = snapmod._manifest(path, 3)
     kept = {e["path"] for e in m2["files"]} | \
         {e["path"] for e in m3["files"]}
     on_disk = set()
@@ -373,7 +372,7 @@ def test_snapshot_rollback_publishes_forward_copy(spark, tmp_path):
     # the mistake is still auditable
     assert _rows(read_snapshot(spark, path, version=1)
                  .select("val")) == {("poisoned",)}
-    m = snapmod._load_manifest(spark, path, 2)
+    m = snapmod._manifest(path, 2)
     assert m["rolled_back_from"] == 0
 
 
@@ -393,14 +392,13 @@ def test_snapshot_compact_merges_fragments(spark, tmp_path):
         [(i, "d1", f"v{i}") for i in range(60)] + [(1000, "d2", "w")],
         "id long, day string, val string").repartition(6)
     snapshot_write(spark, path, frag, partition_cols=["day"])
-    before = snapmod._load_manifest(spark, path,
-                                    latest_version(spark, path))
+    before = snapmod._manifest(path, latest_version(spark, path))
     d1_before = [e for e in before["files"] if e["partition"] == "day=d1"]
     d2_before = [e for e in before["files"] if e["partition"] == "day=d2"]
     rows_before = _rows(read_snapshot(spark, path))
 
     v = snapshot_compact(spark, path, partitions=["day=d1"])
-    after = snapmod._load_manifest(spark, path, v)
+    after = snapmod._manifest(path, v)
     d1_after = [e for e in after["files"] if e["partition"] == "day=d1"]
     d2_after = [e for e in after["files"] if e["partition"] == "day=d2"]
     assert len(d1_after) < len(d1_before) and len(d1_after) >= 1
@@ -473,346 +471,191 @@ def test_snapshot_delete_preserves_evolved_schema(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Pluggable commit strategies (r7): the CAS point is one overridable
-# method, so stores where rename overwrites get LockFileCommit and
-# tests can inject misbehaving-filesystem shims.
+# One publish (r15): every commit is one exclusive create of
+# <version>.json — os.link of a temp file on local paths, the adapter's
+# create_exclusive (S3: conditional PUT) on schemed ones — with every
+# manifest, segment, ref and hint access on the spark-less seam.
 # ---------------------------------------------------------------------------
 
 
-class _OverwritingRename(snapmod.RenameCommit):
-    """Shim emulating RawLocalFileSystem-style rename: silently
-    replaces an existing destination."""
+class _Recording:
+    """Adapter proxy that records every (method, path) it forwards."""
 
-    def _rename(self, fs, src, dst) -> bool:
-        if fs.exists(dst):
-            fs.delete(dst, False)
-        return bool(fs.rename(src, dst))
+    def __init__(self, inner):
+        self.inner, self.calls = inner, []
 
+    def __getattr__(self, name):
+        fn = getattr(self.inner, name)
 
-class _RacingOverwritingRename(_OverwritingRename):
-    """Worst-case interleaving for RenameCommit: another writer
-    publishes BETWEEN this writer's exists() check and its rename
-    (the classic TOCTOU window), on a store whose rename overwrites."""
-
-    def __init__(self, spark, path):
-        self._spark, self._path, self.raced = spark, path, False
-
-    def _rename(self, fs, src, dst) -> bool:
-        if not self.raced:
-            self.raced = True
-            snapmod.RenameCommit().publish(
-                self._spark, self._path, 1,
-                {"version": 1, "partition_cols": [], "schema": None,
-                 "files": [], "writer": "other"})
-        return super()._rename(fs, src, dst)
+        def call(p, *a):
+            self.calls.append((name, p))
+            return fn(p, *a)
+        return call
 
 
-@pytest.fixture
-def _strategy_guard():
-    prev = snapmod.set_commit_strategy(snapmod.RenameCommit())
-    yield
-    snapmod.set_commit_strategy(prev)
+def _driver_side_data_hops(monkeypatch, spark):
+    """Run the two Spark data hops in the test process: Python workers
+    don't see an adapter registered here, and Spark's parquet reader
+    has no Hadoop file system for the test schemes. The same task
+    write and aligned reader move the bytes, through the adapter."""
+    import pyarrow as pa
+
+    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources import spark_source as ss
+
+    def write(spark_, path, df, partition_cols, stats_cols=None,
+              bloom_cols=None, bloom_bits=None):
+        return ss._task_write(df.toArrow().to_batches(),
+                              root=ss._local(path),
+                              partition_cols=partition_cols,
+                              stats_cols=stats_cols or [],
+                              bloom_cols=bloom_cols or [],
+                              bloom_bits=bloom_bits or 4096)
+
+    def read(spark_, path, entries, schema_json=None):
+        batches = [b for e in entries for b in ss._aligned_batches(
+            f"{path}/data/{e['path']}", schema_json, e["partition"], [])]
+        from pyspark.sql.types import StructType
+        return spark.createDataFrame(
+            pa.Table.from_batches(batches).to_pandas(),
+            StructType.fromJson(json.loads(schema_json)))
+
+    monkeypatch.setattr(snapmod, "_write_data_files", write)
+    monkeypatch.setattr(snapmod, "_read_files", read)
 
 
-def test_lockfile_commit_end_to_end(spark, tmp_path, _strategy_guard):
-    """The full upsert/delete/read flow is strategy-independent: under
-    LockFileCommit every existing semantic holds, and a same-version
-    double publish yields one winner + ConcurrentCommit."""
-    snapmod.set_commit_strategy(snapmod.LockFileCommit())
-    path = str(tmp_path / "tbl")
+@pytest.mark.parametrize("store", ["mock", "s3"])
+def test_library_commits_through_adapter_scheme(spark, tmp_path,
+                                                monkeypatch, store):
+    """The library commits, tags, time-travels and lists history on a
+    registered adapter scheme, and every manifest, segment, ref and
+    hint access goes through the adapter — no Hadoop file system is
+    looked up for the table path."""
+    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources import (
+        S3SnapshotAdapter, register_snapshot_filesystem, snapshot_append,
+        snapshot_history, snapshot_tag,
+    )
+    from tests.test_s3_adapter import FakeS3Client
+    from tests.test_spark_source import _MockFS
+
+    scheme = "mock" if store == "mock" else "s3mock"
+    inner = (_MockFS(str(tmp_path / "shadow")) if store == "mock"
+             else S3SnapshotAdapter(client=FakeS3Client()))
+    ad = _Recording(inner)
+    register_snapshot_filesystem(scheme, ad)
+    _driver_side_data_hops(monkeypatch, spark)
+    monkeypatch.setattr(snapmod, "_SEGMENT_ROLL", 2)
+    path = f"{scheme}://bucket/t"
+    schema = "id long, day string, v string"
+    df = lambda rows: spark.createDataFrame(rows, schema)  # noqa: E731
+
+    assert snapshot_write(spark, path, df(
+        [(1, "d1", "a"), (2, "d1", "b"), (3, "d2", "c")]),
+        partition_cols=["day"], stats_cols=["id"]) == 0
+    assert snapshot_append(spark, path, df([(4, "d3", "d")]),
+                           source_batch=("feed", 1)) == 1
+    assert snapshot_append(spark, path, df([(4, "d3", "d")]),
+                           source_batch=("feed", 1)) == 1  # replay
+    assert snapshot_upsert(spark, path, df([(2, "d1", "B")]), ["id"],
+                           partition_cols=["day"]) == 2
+    assert snapshot_tag(spark, path, "rel") == 2
+    assert snapshot_append(spark, path, df([(5, "d3", "e")])) == 3
+    with pytest.raises(ConcurrentCommit):
+        snapmod._commit_manifest(path, 3, {"version": 3, "files": []})
+
+    got = read_snapshot(spark, path, tag="rel", where="id >= 2")
+    assert _rows(got.select("id", "day", "v")) == {
+        (2, "d1", "B"), (3, "d2", "c"), (4, "d3", "d")}
+    assert _rows(read_snapshot(spark, path).select("id")) == {
+        (1,), (2,), (3,), (4,), (5,)}
+    hist = snapshot_history(spark, path)
+    assert [(h["version"], h["operation"]) for h in hist] == [
+        (0, "write"), (1, "append"), (2, "upsert"), (3, "append")]
+    assert latest_version(spark, path) == 3
+
+    calls = set(ad.calls)
+    mdir = f"{path}/_manifests"
+    for v in range(4):
+        assert ("create_exclusive", f"{mdir}/{v}.json") in calls
+        assert ("open_in", f"{mdir}/{v}.json") in calls
+    assert ("replace_bytes", f"{mdir}/_latest_hint") in calls
+    assert ("open_in", f"{mdir}/_latest_hint") in calls
+    segs = {p for op, p in calls
+            if op == "open_in" and p.endswith(".segment")}
+    assert segs and all(("write_bytes", p) in calls for p in segs)
+    assert ("create_exclusive", f"{path}/_refs/rel.json") in calls
+    assert ("open_in", f"{path}/_refs/rel.json") in calls
+
+
+def _table(spark, path):
     snapshot_write(spark, path, spark.createDataFrame(
         [(1, "d1", "a"), (2, "d2", "b")], "id long, day string, v string"),
         partition_cols=["day"])
-    snapshot_upsert(spark, path, spark.createDataFrame(
-        [(2, "d2", "B"), (3, "d2", "c")], "id long, day string, v string"),
-        ["id"], partition_cols=["day"])
-    snapshot_delete(spark, path,
-                    spark.createDataFrame([(1,)], "id long"), ["id"],
-                    partition_cols=["day"])
-    assert _rows(read_snapshot(spark, path).select("id", "v")) == {
-        (2, "B"), (3, "c")}
-    with pytest.raises(ConcurrentCommit):
-        snapmod._commit_manifest(spark, path, 2, {
-            "version": 2, "partition_cols": ["day"], "schema": None,
-            "files": []})
-    # no lock left behind after wins OR losses
-    assert not os.path.exists(f"{path}/_manifests/.commit-lock")
 
 
-def test_lockfile_commit_single_winner_even_when_rename_overwrites(
-        spark, tmp_path, _strategy_guard):
-    """On an overwriting-rename store, LockFileCommit still produces
-    one winner per version: the exists() check runs UNDER the lock, so
-    no interleaving can slip a second manifest past it."""
-    snapmod.set_commit_strategy(snapmod.LockFileCommit())
-    strat = _OverwritingRename()
-    path = str(tmp_path / "tbl")
-    snapshot_write(spark, path, spark.createDataFrame(
-        [(1, "d1", "a")], "id long, day string, v string"),
-        partition_cols=["day"])
-
-    class _LockWithOverwrite(snapmod.LockFileCommit):
-        _rename = strat._rename
-
-    snapmod.set_commit_strategy(_LockWithOverwrite())
-    v1 = snapshot_upsert(spark, path, spark.createDataFrame(
-        [(2, "d1", "b")], "id long, day string, v string"),
-        ["id"], partition_cols=["day"])
-    assert v1 == 1
-    with pytest.raises(ConcurrentCommit):
-        snapmod._commit_manifest(spark, path, 1, {
-            "version": 1, "partition_cols": ["day"], "schema": None,
-            "files": [], "writer": "loser"})
-    m = json.loads(open(f"{path}/_manifests/1.json").read())
-    assert m.get("writer") != "loser" and m["files"]
-
-
-def test_rename_commit_toctou_documented_unsafe_on_overwriting_store(
-        spark, tmp_path, _strategy_guard):
-    """The failure matrix's [1] reproduced: with overwrite-semantics
-    rename, a competing commit landing inside RenameCommit's
-    exists→rename window is silently replaced (last-writer-wins) —
-    exactly why LockFileCommit exists. Under LockFileCommit the same
-    interleaved competitor cannot even acquire the lock."""
-    path = str(tmp_path / "tbl")
-    racing = _RacingOverwritingRename(spark, path)
-    racing.publish(spark, path, 1, {
-        "version": 1, "partition_cols": [], "schema": None,
-        "files": [], "writer": "toctou-loser-should-have-failed"})
-    m = json.loads(open(f"{path}/_manifests/1.json").read())
-    # documented data-loss shape: the second writer overwrote the first
-    assert m["writer"] == "toctou-loser-should-have-failed"
-
-    # same interleave under the lock: the racing competitor (a
-    # LockFileCommit writer this time) hits the held lock and loses
-    # cleanly instead of overwriting
-    path2 = str(tmp_path / "tbl2")
-
-    class _RacingUnderLock(snapmod.LockFileCommit):
-        raced = False
-
-        def _rename(self, fs, src, dst) -> bool:
-            if not _RacingUnderLock.raced:
-                _RacingUnderLock.raced = True
-                with pytest.raises(ConcurrentCommit):
-                    snapmod.LockFileCommit().publish(
-                        spark, path2, 1,
-                        {"version": 1, "partition_cols": [],
-                         "schema": None, "files": [], "writer": "other"})
-            if fs.exists(dst):
-                fs.delete(dst, False)
-            return bool(fs.rename(src, dst))
-
-    _RacingUnderLock().publish(spark, path2, 1, {
-        "version": 1, "partition_cols": [], "schema": None,
-        "files": [], "writer": "lock-holder"})
-    m2 = json.loads(open(f"{path2}/_manifests/1.json").read())
-    assert m2["writer"] == "lock-holder"
-
-
-def test_lockfile_commit_breaks_stale_lock_and_respects_fresh_one(
-        spark, tmp_path, _strategy_guard):
-    """A crashed writer's abandoned lock is broken after the timeout
-    (publish succeeds); a FRESH lock (live writer) makes the publish
-    lose cleanly."""
-    import time
+def test_manifest_dir_layout_and_parent_crc_sidecars(spark, tmp_path,
+                                                     monkeypatch):
+    """Commits leave only <v>.json, seg-*.segment and _latest_hint in
+    _manifests/ (no Hadoop .crc sidecars, no temp names). A table whose
+    metadata was written through Hadoop's checksummed local file
+    system, as earlier releases did, still resolves, reads, appends
+    and tags."""
+    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources import (
+        snapshot_append, snapshot_history, snapshot_tag,
+    )
+    monkeypatch.setattr(snapmod, "_SEGMENT_ROLL", 1)
     path = str(tmp_path / "tbl")
     mdir = f"{path}/_manifests"
-    os.makedirs(mdir)
-    lock = f"{mdir}/.commit-lock"
-    open(lock, "w").write("crashed-writer")
-    os.utime(lock, (time.time() - 3600, time.time() - 3600))
-    snapmod.LockFileCommit(lock_timeout_seconds=60).publish(
-        spark, path, 0, {"version": 0, "partition_cols": [],
-                         "schema": None, "files": []})
-    assert os.path.exists(f"{mdir}/0.json")
-    assert not os.path.exists(lock)
+    _table(spark, path)
+    snapshot_append(spark, path, spark.createDataFrame(
+        [(3, "d3", "c")], "id long, day string, v string"))
+    snapshot_tag(spark, path, "rel")
+    names = os.listdir(mdir)
+    assert {n for n in names if n.endswith(".json")} == {"0.json",
+                                                         "1.json"}
+    assert all(n.endswith(".json") or n == "_latest_hint"
+               or (n.startswith("seg-") and n.endswith(".segment"))
+               for n in names), names
+    assert any(n.endswith(".segment") for n in names)
+    assert os.listdir(f"{path}/_refs") == ["rel.json"]
 
-    open(lock, "w").write("live-writer")           # fresh → respected
-    with pytest.raises(ConcurrentCommit):
-        snapmod.LockFileCommit(lock_timeout_seconds=60).publish(
-            spark, path, 1, {"version": 1, "partition_cols": [],
-                             "schema": None, "files": []})
-    assert not os.path.exists(f"{mdir}/1.json")
+    # rewrite every metadata file through Hadoop's LocalFileSystem
+    jvm = spark._jvm
+    fs = jvm.org.apache.hadoop.fs.FileSystem.getLocal(
+        spark._jsc.hadoopConfiguration())
+    for p in [f"{mdir}/{n}" for n in names] + [f"{path}/_refs/rel.json"]:
+        body = open(p, "rb").read()
+        os.unlink(p)
+        out = fs.create(jvm.org.apache.hadoop.fs.Path(p), False)
+        out.write(bytearray(body))
+        out.close()
+    open(f"{mdir}/.tmp-crashed.json", "w").write("{")   # torn publish
+    assert os.path.exists(f"{mdir}/.1.json.crc")
+    assert os.path.exists(f"{path}/_refs/.rel.json.crc")
 
-
-def test_lockfile_takeover_marker_expires_after_crashed_breaker(
-        spark, tmp_path):
-    """A breaker that crashed between creating and deleting its
-    .takeover marker must not wedge stale-lock recovery forever: the
-    marker has the same age-based expiry as the lock, so a later
-    writer expires it, completes the takeover, and publishes."""
-    import time
-    path = str(tmp_path / "tbl")
-    mdir = f"{path}/_manifests"
-    os.makedirs(mdir)
-    old = time.time() - 3600
-    lock = f"{mdir}/.commit-lock"
-    marker = f"{lock}.takeover"
-    open(lock, "w").write("crashed-writer")
-    open(marker, "w").write("crashed-breaker")
-    os.utime(lock, (old, old))
-    os.utime(marker, (old, old))
-    snapmod.LockFileCommit(lock_timeout_seconds=60).publish(
-        spark, path, 0, {"version": 0, "partition_cols": [],
-                         "schema": None, "files": []})
-    assert os.path.exists(f"{mdir}/0.json")
-    assert not os.path.exists(lock) and not os.path.exists(marker)
-
-    # a FRESH marker (live breaker mid-takeover) is respected
-    open(lock, "w").write("crashed-writer")
-    os.utime(lock, (old, old))
-    open(marker, "w").write("live-breaker")
-    with pytest.raises(ConcurrentCommit):
-        snapmod.LockFileCommit(lock_timeout_seconds=60).publish(
-            spark, path, 1, {"version": 1, "partition_cols": [],
-                             "schema": None, "files": []})
-    assert not os.path.exists(f"{mdir}/1.json")
-    assert os.path.exists(marker)
-
-
-def test_lockfile_fencing_stalled_holder_cannot_clobber_successor(
-        spark, tmp_path):
-    """ADVICE r7 (medium): a holder stalled past lock_timeout_seconds
-    whose lock was broken must NOT rename its manifest over the
-    successor's state. The token fence catches both shapes: (a) the
-    successor already RELEASED (lock gone) and published our version
-    — the absence re-check fires; (b) the successor still HOLDS the
-    lock (different token) — the ownership re-check fires, and our
-    conditional release leaves the successor's lock in place."""
-    path = str(tmp_path / "tbl")
-    mdir = f"{path}/_manifests"
-
-    class _StallsThenResumes(snapmod.LockFileCommit):
-        """Simulates the GC/NFS stall INSIDE the guarded section: by
-        the time this holder reaches its rename, a breaker has expired
-        its lock and published the same version."""
-
-        def _publish_under_lock(self, spark_, fs, jvm, mdir_, version,
-                                manifest, lock, token):
-            import time
-            old = time.time() - 3600
-            os.utime(lock, (old, old))
-            snapmod.LockFileCommit(lock_timeout_seconds=60).publish(
-                spark_, path, version,
-                {"version": version, "partition_cols": [],
-                 "schema": None, "files": [], "writer": "successor"})
-            return super()._publish_under_lock(
-                spark_, fs, jvm, mdir_, version, manifest, lock, token)
-
-    with pytest.raises(ConcurrentCommit):
-        _StallsThenResumes(lock_timeout_seconds=60).publish(
-            spark, path, 0, {"version": 0, "partition_cols": [],
-                             "schema": None, "files": [],
-                             "writer": "stalled-holder"})
-    m = json.loads(open(f"{mdir}/0.json").read())
-    assert m["writer"] == "successor"          # not clobbered
-
-    # shape (b): successor still holds the lock when we resume
-    path2 = str(tmp_path / "tbl2")
-    mdir2 = f"{path2}/_manifests"
-    live = snapmod.LockFileCommit(lock_timeout_seconds=60)
-
-    class _StallsUnderLiveSuccessor(snapmod.LockFileCommit):
-        def _publish_under_lock(self, spark_, fs, jvm, mdir_, version,
-                                manifest, lock, token):
-            import time
-            old = time.time() - 3600
-            os.utime(lock, (old, old))
-            # successor breaks the stale lock and HOLDS it (no release
-            # yet — mid-publish), publishing a different version
-            self.successor = live._acquire(spark_, fs, jvm, mdir_)
-            return super()._publish_under_lock(
-                spark_, fs, jvm, mdir_, version, manifest, lock, token)
-
-    strat = _StallsUnderLiveSuccessor(lock_timeout_seconds=60)
-    with pytest.raises(ConcurrentCommit):
-        strat.publish(spark, path2, 0,
-                      {"version": 0, "partition_cols": [],
-                       "schema": None, "files": []})
-    assert not os.path.exists(f"{mdir2}/0.json")
-    # the stalled holder's conditional release left the successor's
-    # lock (and token) intact — it did not unlock a live writer
-    _, succ_token = strat.successor
-    assert open(f"{mdir2}/.commit-lock").read() == succ_token
-
-
-def test_exists_error_classification_is_class_based():
-    """ADVICE r7 (low): FileAlreadyExists is recognized by Java
-    exception CLASS through the cause chain, not message wording —
-    unusual wording still reads as contention, and an unrelated error
-    that merely mentions 'exists' does not."""
-
-    class _JCls:
-        def __init__(self, name):
-            self._n = name
-
-        def getName(self):
-            return self._n
-
-    class _JExc:
-        def __init__(self, name, cause=None):
-            self._cls, self._cause = _JCls(name), cause
-
-        def getClass(self):
-            return self._cls
-
-        def getCause(self):
-            return self._cause
-
-    class _Py4JError(Exception):
-        def __init__(self, je):
-            super().__init__("An error occurred while calling o1.create")
-            self.java_exception = je
-
-    direct = _Py4JError(_JExc(
-        "org.apache.hadoop.fs.FileAlreadyExistsException"))
-    wrapped = _Py4JError(_JExc(
-        "java.io.IOException",
-        cause=_JExc("java.nio.file.FileAlreadyExistsException")))
-    misleading = _Py4JError(_JExc(
-        "java.io.IOException"))   # suppose its message said "exists"
-    assert snapmod._is_exists_error(direct)
-    assert snapmod._is_exists_error(wrapped)
-    assert not snapmod._is_exists_error(misleading)
-    assert snapmod._is_exists_error(FileExistsError("shim"))
-    assert not snapmod._is_exists_error(
-        RuntimeError("checking whether path exists failed"))
-
-
-# ---------------------------------------------------------------------------
-# ConditionalPutCommit (r8): the S3-proper strategy — the CAS is the
-# store's own atomic create-if-absent, exercised against a shim where
-# BOTH filesystem primitives are unsafe (rename overwrites, create is
-# HEAD-then-PUT) and only the conditional-PUT endpoint is atomic.
-# ---------------------------------------------------------------------------
-
-
-def _atomic_put_if_absent(path, body):
-    """The service-side primitive, modeled locally with O_EXCL (on S3
-    this is the `If-None-Match: *` PUT — atomic at the service)."""
-    try:
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        return False
-    with os.fdopen(fd, "w") as f:
-        f.write(body)
-    return True
+    assert latest_version(spark, path) == 1
+    assert _rows(read_snapshot(spark, path).select("id")) == {
+        (1,), (2,), (3,)}
+    assert snapshot_append(spark, path, spark.createDataFrame(
+        [(4, "d1", "d")], "id long, day string, v string")) == 2
+    assert snapshot_tag(spark, path, "rel", 2, overwrite=True) == 2
+    assert _rows(read_snapshot(spark, path, tag="rel").select("id")) == {
+        (1,), (2,), (3,), (4,)}
+    assert [h["version"] for h in snapshot_history(spark, path)] == [
+        0, 1, 2]
+    os.remove(f"{mdir}/_latest_hint")                # listing fallback
+    assert latest_version(spark, path) == 2
 
 
 def test_conditional_put_commit_end_to_end(spark, tmp_path,
-                                           _strategy_guard):
-    """The full upsert/delete/read flow under ConditionalPutCommit:
-    every semantic holds, a same-version double publish yields one
-    winner + ConcurrentCommit, and a transport failure mid-commit
-    leaves the previous version fully readable (no temp/lock residue
-    exists to leak — the strategy writes exactly one object)."""
-    snapmod.set_commit_strategy(
-        snapmod.ConditionalPutCommit(_atomic_put_if_absent))
+                                           monkeypatch):
+    """The full upsert/delete/read flow through the one publish: a
+    same-version double publish yields one winner + ConcurrentCommit,
+    and an exclusive create that fails mid-commit (a store's 503)
+    leaves the previous version fully readable and no residue in
+    _manifests/ — the publish writes exactly one object."""
+    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources import spark_source as ss
     path = str(tmp_path / "tbl")
-    snapshot_write(spark, path, spark.createDataFrame(
-        [(1, "d1", "a"), (2, "d2", "b")],
-        "id long, day string, v string"), partition_cols=["day"])
+    _table(spark, path)
     snapshot_upsert(spark, path, spark.createDataFrame(
         [(2, "d2", "B"), (3, "d2", "c")],
         "id long, day string, v string"), ["id"],
@@ -823,88 +666,87 @@ def test_conditional_put_commit_end_to_end(spark, tmp_path,
     assert _rows(read_snapshot(spark, path).select("id", "v")) == {
         (2, "B"), (3, "c")}
     with pytest.raises(ConcurrentCommit):
-        snapmod._commit_manifest(spark, path, 2, {
+        snapmod._commit_manifest(path, 2, {
             "version": 2, "partition_cols": ["day"], "schema": None,
             "files": []})
 
-    def _broken_transport(p, body):
+    def _broken_transport(p, data):
         raise IOError("503 SlowDown")
 
-    snapmod.set_commit_strategy(
-        snapmod.ConditionalPutCommit(_broken_transport))
+    monkeypatch.setattr(ss, "_create_exclusive", _broken_transport)
     before = _rows(read_snapshot(spark, path).select("id", "v"))
+    listing = sorted(os.listdir(f"{path}/_manifests"))
     with pytest.raises(IOError):
         snapshot_upsert(spark, path, spark.createDataFrame(
             [(9, "d2", "z")], "id long, day string, v string"),
             ["id"], partition_cols=["day"])
     assert latest_version(spark, path) == 2
     assert _rows(read_snapshot(spark, path).select("id", "v")) == before
+    assert sorted(os.listdir(f"{path}/_manifests")) == listing
+
+
+class _ObjectStoreShim:
+    """Adapter over a local dir whose ONLY atomic operation is
+    create_exclusive (O_EXCL, standing in for S3's conditional PUT):
+    write/replace overwrite blindly, there is no rename, and exists
+    followed by a write would race. ``before_create`` runs inside
+    create_exclusive, ahead of the atomic step — the competitor's
+    window."""
+
+    def __init__(self, shadow):
+        self.shadow, self.writes, self.before_create = shadow, [], None
+
+    def _p(self, p):
+        return os.path.join(self.shadow, p.split("://", 1)[1])
+
+    def open_in(self, p):
+        return open(self._p(p), "rb")
+
+    def write_bytes(self, p, data):
+        self.writes.append(p)
+        os.makedirs(os.path.dirname(self._p(p)), exist_ok=True)
+        open(self._p(p), "wb").write(data)
+
+    replace_bytes = write_bytes
+
+    def listdir(self, p):
+        lp = self._p(p)
+        return os.listdir(lp) if os.path.isdir(lp) else []
+
+    def exists(self, p):
+        return os.path.exists(self._p(p))
+
+    def create_exclusive(self, p, data):
+        hook, self.before_create = self.before_create, None
+        if hook:
+            hook(p)
+        os.makedirs(os.path.dirname(self._p(p)), exist_ok=True)
+        fd = os.open(self._p(p), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        with os.fdopen(fd, "wb") as f:
+            f.write(data)
 
 
 def test_conditional_put_single_winner_where_both_primitives_fail(
-        spark, tmp_path, _strategy_guard):
-    """The failure matrix's S3 row, reproduced then fixed. On a store
-    whose rename overwrites AND whose exclusive create is a
-    HEAD-then-PUT race: (a) LockFileCommit loses a committed version
-    when the competitor lands in its irreducible rename window —
-    documented-unsafe, the reason [2] exists; (b) ConditionalPutCommit
-    under the SAME adversarial interleave keeps exactly one winner,
-    because the competitor's publish makes OUR conditional PUT fail
-    atomically."""
-    path = str(tmp_path / "tbl")
-
-    class _HeadThenPutLock(snapmod.LockFileCommit):
-        """Object-store shim: non-exclusive create (HEAD then PUT),
-        overwriting rename, competitor publishes inside the window."""
-        raced = False
-
-        def _try_create(self, spark_, path_, text) -> bool:
-            if os.path.exists(path_):           # HEAD
-                return False
-            os.makedirs(os.path.dirname(path_), exist_ok=True)
-            open(path_, "w").write(text)        # PUT (not atomic)
-            return True
-
-        def _rename(self, fs, src, dst) -> bool:
-            if not _HeadThenPutLock.raced:
-                _HeadThenPutLock.raced = True
-                # competitor commits the same version NOW — inside the
-                # post-fence window no lock emulation can close
-                _atomic_put_if_absent(
-                    dst.toUri().getPath(),
-                    json.dumps({"version": 1, "partition_cols": [],
-                                "schema": None, "files": [],
-                                "writer": "competitor"}))
-            if fs.exists(dst):
-                fs.delete(dst, False)           # rename overwrites
-            return bool(fs.rename(src, dst))
-
-    _HeadThenPutLock().publish(spark, path, 1, {
-        "version": 1, "partition_cols": [], "schema": None,
-        "files": [], "writer": "lock-believer"})
-    m = json.loads(open(f"{path}/_manifests/1.json").read())
-    # documented data loss: the competitor's committed version is gone
-    assert m["writer"] == "lock-believer"
-
-    # same interleave through the conditional primitive: one winner
-    path2 = str(tmp_path / "tbl2")
-    state = {"raced": False}
-
-    def _racing_put(p, body):
-        if not state["raced"]:
-            state["raced"] = True
-            assert _atomic_put_if_absent(p, json.dumps(
-                {"version": 1, "partition_cols": [], "schema": None,
-                 "files": [], "writer": "competitor"}))
-        return _atomic_put_if_absent(p, body)
-
+        tmp_path):
+    """On an object store whose writes overwrite and which has no
+    rename, a competitor that publishes the same version inside our
+    publish window cannot be overwritten: the exclusive create is the
+    only primitive the publish uses for <version>.json, so exactly one
+    writer wins and the other raises ConcurrentCommit."""
+    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources import register_snapshot_filesystem
+    shim = _ObjectStoreShim(str(tmp_path / "store"))
+    register_snapshot_filesystem("objshim", shim)
+    path = "objshim://bucket/t"
+    snapmod._commit_manifest(path, 0, {"version": 0, "files": []})
+    shim.before_create = lambda p: snapmod._commit_manifest(
+        path, 1, {"version": 1, "files": [], "writer": "competitor"})
     with pytest.raises(ConcurrentCommit):
-        snapmod.ConditionalPutCommit(_racing_put).publish(
-            spark, path2, 1, {"version": 1, "partition_cols": [],
-                              "schema": None, "files": [],
-                              "writer": "loser"})
-    m2 = json.loads(open(f"{path2}/_manifests/1.json").read())
-    assert m2["writer"] == "competitor"        # winner survived
+        snapmod._commit_manifest(path, 1, {"version": 1, "files": [],
+                                           "writer": "loser"})
+    assert snapmod._manifest(path, 1)["writer"] == "competitor"
+    assert snapmod._latest_version(path) == 1
+    # the overwriting primitives only ever touched the advisory hint
+    assert set(shim.writes) == {f"{path}/_manifests/_latest_hint"}
 
 
 # ---------------------------------------------------------------------------
@@ -918,7 +760,7 @@ def test_latest_hint_resolution_and_fallbacks(spark, tmp_path):
     fallback. All paths return the same answer."""
     path = str(tmp_path / "tbl")
     for v in range(5):
-        snapmod._commit_manifest(spark, path, v, {
+        snapmod._commit_manifest(path, v, {
             "version": v, "partition_cols": [], "schema": None,
             "files": []})
     mdir = f"{path}/_manifests"
@@ -942,7 +784,7 @@ def test_thousand_commit_resolve_stays_flat(spark, tmp_path):
     import time
     path = str(tmp_path / "tbl")
     for v in range(1000):
-        snapmod._commit_manifest(spark, path, v, {
+        snapmod._commit_manifest(path, v, {
             "version": v, "partition_cols": [], "schema": None,
             "files": []})
     t0 = time.perf_counter()
@@ -1062,7 +904,7 @@ def test_snapshot_append_carries_everything_by_reference(spark, tmp_path):
         spark.createDataFrame([(1, "d1", "a"), (2, "d2", "b")],
                               "id long, day string, val string"),
         partition_cols=["day"])
-    m0 = snapmod._load_manifest(spark, path, 0)
+    m0 = snapmod._manifest(path, 0)
     prev_paths = {e["path"] for e in m0["files"]}
 
     v1 = snapshot_append(
@@ -1073,9 +915,9 @@ def test_snapshot_append_carries_everything_by_reference(spark, tmp_path):
     got = _rows(read_snapshot(spark, path).select("id", "day", "val"))
     assert got == {(1, "d1", "a"), (2, "d2", "b"),
                    (3, "d1", "c"), (4, "d3", "d")}
-    m1 = snapmod._load_manifest(spark, path, 1)
+    m1 = snapmod._manifest(path, 1)
     new_paths = {e["path"] for e in
-                 snapmod._manifest_entries(spark, path, m1)}
+                 snapmod._entries(path, m1)}
     assert prev_paths <= new_paths, \
         "append must carry every previous file by reference"
     # readers of v0 stay pinned
@@ -1178,8 +1020,8 @@ def test_snapshot_scan_skips_files_and_matches_plain_filter(spark,
     # range-partition on id so each of the 8 files owns a disjoint slab
     snapshot_write(spark, path, df.repartitionByRange(8, "id"),
                    partition_cols=[], stats_cols=["id", "score", "name"])
-    m = snapmod._load_manifest(spark, path, 0)
-    entries = snapmod._manifest_entries(spark, path, m)
+    m = snapmod._manifest(path, 0)
+    entries = snapmod._entries(path, m)
     assert len(entries) == 8
     assert all(set(e["stats"]) == {"id", "score", "name"}
                for e in entries)
@@ -1219,9 +1061,8 @@ def test_snapshot_scan_stats_survive_maintenance(spark, tmp_path):
     ups = spark.createDataFrame([(1, "d1", 1000.0)],
                                 "id long, day string, score double")
     snapshot_upsert(spark, path, ups, ["id"], partition_cols=["day"])
-    m = snapmod._load_manifest(spark, path,
-                               latest_version(spark, path))
-    es = snapmod._manifest_entries(spark, path, m)
+    m = snapmod._manifest(path, latest_version(spark, path))
+    es = snapmod._entries(path, m)
     assert all("stats" in e for e in es), \
         "both carried and rewritten entries must keep zone maps"
     got = snapshot_scan(spark, path, [("score", ">=", 999.0)])
@@ -1232,9 +1073,8 @@ def test_snapshot_scan_stats_survive_maintenance(spark, tmp_path):
                     spark.createDataFrame([(200, "d3", 2000.0)],
                                           "id long, day string, "
                                           "score double"))
-    m2 = snapmod._load_manifest(spark, path,
-                                latest_version(spark, path))
-    d3 = [e for e in snapmod._manifest_entries(spark, path, m2)
+    m2 = snapmod._manifest(path, latest_version(spark, path))
+    d3 = [e for e in snapmod._entries(path, m2)
           if e["partition"] == "day=d3"]
     assert d3 and all("stats" in e for e in d3)
 
@@ -1299,19 +1139,19 @@ def test_append_stats_cols_empty_list_disables(spark, tmp_path):
     # None inherits: the appended files carry v stats
     v1 = snapshot_append(spark, path, spark.createDataFrame(
         [(2, "d1", 20.0)], "id long, day string, v double"))
-    m1 = snapmod._load_manifest(spark, path, v1)
+    m1 = snapmod._manifest(path, v1)
     assert m1["stats_cols"] == ["v"]
     assert all("stats" in e and "v" in e["stats"]
-               for e in snapmod._manifest_entries(spark, path, m1))
+               for e in snapmod._entries(path, m1))
     # [] disables from this commit on
     v2 = snapshot_append(spark, path, spark.createDataFrame(
         [(3, "d1", 30.0)], "id long, day string, v double"),
         stats_cols=[])
-    m2 = snapmod._load_manifest(spark, path, v2)
+    m2 = snapmod._manifest(path, v2)
     assert m2["stats_cols"] is None
     v3 = snapshot_append(spark, path, spark.createDataFrame(
         [(4, "d1", 40.0)], "id long, day string, v double"))
-    m3 = snapmod._load_manifest(spark, path, v3)
+    m3 = snapmod._manifest(path, v3)
     assert m3["stats_cols"] is None          # stays off
     assert read_snapshot(spark, path).count() == 4
 
@@ -1330,9 +1170,9 @@ def test_append_schema_evolution_skips_absent_stats_col(spark,
         partition_cols=["day"], stats_cols=["v"])
     v1 = snapshot_append(spark, path, spark.createDataFrame(
         [(2, "d1")], "id long, day string"), schema_evolution=True)
-    m1 = snapmod._load_manifest(spark, path, v1)
+    m1 = snapmod._manifest(path, v1)
     assert m1["stats_cols"] == ["v"]         # contract kept
-    entries = snapmod._manifest_entries(spark, path, m1)
+    entries = snapmod._entries(path, m1)
     assert any("v" in (e.get("stats") or {}) for e in entries)
     assert any("v" not in (e.get("stats") or {}) for e in entries)
     # without schema_evolution the same drop still raises (drift gate)
@@ -1391,8 +1231,7 @@ def test_snapshot_scan_in_or_null_pruning(spark, tmp_path):
                       "else cast(id as double) end as score"))
     snapshot_write(spark, path, df.repartitionByRange(8, "id"),
                    partition_cols=[], stats_cols=["id", "score"])
-    total = len(snapmod._manifest_entries(
-        spark, path, snapmod._load_manifest(spark, path, 0)))
+    total = len(snapmod._entries(path, snapmod._manifest(path, 0)))
     assert total == 8
 
     def check(preds, where):
@@ -1467,17 +1306,17 @@ def test_snapshot_append_retry_rebases_on_concurrent_commit(
     real = snapmod._commit_manifest
     state = {"raced": False}
 
-    def racing(spark_, p, version, manifest):
+    def racing(p, version, manifest):
         if not state["raced"]:
             state["raced"] = True
             monkeypatch.setattr(snapmod, "_commit_manifest", real)
             try:
                 # competitor appends and wins this version
-                snapshot_append(spark_, path, spark_.createDataFrame(
+                snapshot_append(spark, path, spark.createDataFrame(
                     [(100, "d1", 1.0)], schema))
             finally:
                 monkeypatch.setattr(snapmod, "_commit_manifest", racing)
-        return real(spark_, p, version, manifest)
+        return real(p, version, manifest)
 
     monkeypatch.setattr(snapmod, "_commit_manifest", racing)
     v = snapshot_append(spark, path, spark.createDataFrame(
@@ -1491,8 +1330,8 @@ def test_snapshot_append_retry_rebases_on_concurrent_commit(
         (0,), (100,)}
     # the competitor's data files are carried BY REFERENCE (identical
     # entry paths), not rewritten
-    m1 = snapmod._load_manifest(spark, path, 1)
-    m2 = snapmod._load_manifest(spark, path, 2)
+    m1 = snapmod._manifest(path, 1)
+    m2 = snapmod._manifest(path, 2)
     p1 = {e["path"] for e in m1["files"]}
     p2 = {e["path"] for e in m2["files"]}
     assert p1 < p2
@@ -1525,17 +1364,17 @@ def test_snapshot_append_retry_replay_admitted_by_competitor(
     real = snapmod._commit_manifest
     state = {"raced": False}
 
-    def racing(spark_, p, version, manifest):
+    def racing(p, version, manifest):
         if not state["raced"]:
             state["raced"] = True
             monkeypatch.setattr(snapmod, "_commit_manifest", real)
             try:
-                snapshot_append(spark_, path, spark_.createDataFrame(
+                snapshot_append(spark, path, spark.createDataFrame(
                     [(100, "d1", 1.0)], schema),
                     source_batch=("s1", 7))
             finally:
                 monkeypatch.setattr(snapmod, "_commit_manifest", racing)
-        return real(spark_, p, version, manifest)
+        return real(p, version, manifest)
 
     monkeypatch.setattr(snapmod, "_commit_manifest", racing)
     v = snapshot_append(spark, path, spark.createDataFrame(
@@ -1680,9 +1519,10 @@ def test_as_of_respects_explicit_timezone_offset(spark, tmp_path,
 
 def test_append_retry_survives_transient_lock_contention(
         spark, tmp_path, monkeypatch):
-    """ConcurrentCommit WITHOUT a version advance (a lock briefly held
-    by a writer that hasn't published) retries the same commit after a
-    backoff instead of giving up — the ingest-loop shape."""
+    """ConcurrentCommit WITHOUT a version advance (S3 answers a PUT
+    racing another conditional PUT with 409 ConditionalRequestConflict
+    before the winner's version exists) retries the same commit after
+    a backoff instead of giving up — the ingest-loop shape."""
     from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources import snapshot_append
     schema = "id long, day string"
     path = str(tmp_path / "tbl")
@@ -1691,11 +1531,11 @@ def test_append_retry_survives_transient_lock_contention(
     real = snapmod._commit_manifest
     state = {"fails": 2}
 
-    def flaky(spark_, p, version, manifest):
+    def flaky(p, version, manifest):
         if state["fails"] > 0:
             state["fails"] -= 1
-            raise ConcurrentCommit("commit lock held; retry")
-        return real(spark_, p, version, manifest)
+            raise ConcurrentCommit("409 ConditionalRequestConflict")
+        return real(p, version, manifest)
 
     monkeypatch.setattr(snapmod, "_commit_manifest", flaky)
     v = snapshot_append(spark, path, spark.createDataFrame(

@@ -181,8 +181,8 @@ def test_streaming_refuses_rewrites_by_default(registered, tmp_path):
 
 
 def test_local_path_contract(registered, tmp_path):
-    """Unadapted schemes fail loudly at plan time, naming both
-    escape hatches (register_snapshot_filesystem / read_snapshot)."""
+    """Unadapted schemes fail loudly at plan time, naming
+    register_snapshot_filesystem."""
     spark = registered
     with pytest.raises(Exception,
                        match="no snapshot filesystem adapter"):
@@ -197,7 +197,7 @@ def test_batch_write_append_and_overwrite(registered, tmp_path):
     the library AND the data source, with stats recorded for
     zone-map pruning."""
     from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources.snapshots import (
-        _load_manifest, latest_version,
+        _manifest, latest_version,
     )
     spark = registered
     path = str(tmp_path / "tbl")
@@ -212,7 +212,7 @@ def test_batch_write_append_and_overwrite(registered, tmp_path):
     assert {(r["id"], r["day"], r["val"]) for r in lib.collect()} == \
         {(1, "d1", "a"), (2, "d2", "b"), (3, None, "c")}
 
-    m0 = _load_manifest(spark, path, 0)
+    m0 = _manifest(path, 0)
     files_v0 = {e["path"] for e in m0["files"]}
     assert all("stats" in e and "id" in e["stats"]
                for e in m0["files"])
@@ -223,7 +223,7 @@ def test_batch_write_append_and_overwrite(registered, tmp_path):
      .option("statsCols", "id")
      .mode("append").save(path))
     assert latest_version(spark, path) == 1
-    m1 = _load_manifest(spark, path, 1)
+    m1 = _manifest(path, 1)
     assert files_v0 <= {e["path"] for e in m1["files"]}, \
         "append must carry the previous files by reference"
     assert read_snapshot(spark, path).count() == 4
@@ -384,7 +384,7 @@ def test_overwrite_preserves_replay_markers(registered, tmp_path):
     parity): a replayed old stream batch stays a no-op after the
     replace."""
     from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources.snapshots import (
-        _load_manifest, latest_version,
+        _manifest, latest_version,
     )
     spark = registered
     path = str(tmp_path / "tbl")
@@ -395,7 +395,7 @@ def test_overwrite_preserves_replay_markers(registered, tmp_path):
                    _append_sources={"sinkx": 7})
     (spark.createDataFrame([(2, "b")], "id long, v string")
      .write.format("snapshot").mode("overwrite").save(path))
-    m = _load_manifest(spark, path, latest_version(spark, path))
+    m = _manifest(path, latest_version(spark, path))
     assert (m.get("append_sources") or {}).get("sinkx") == 7
 
 
@@ -1062,9 +1062,9 @@ def test_mock_scheme_write_read_roundtrip_sparkless(tmp_path):
         LongType, StringType, StructField, StructType,
     )
     from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources.spark_source import (
-        ConcurrentSnapshotWrite, SnapshotBatchWriter,
+        ConcurrentCommit, SnapshotBatchWriter,
         SnapshotPartitionedStreamReader, SnapshotReader,
-        _cas_publish, _manifest,
+        _commit_manifest, _manifest,
     )
     fs = _mock_fs(tmp_path)
     root = "mock://bucket/tbl"
@@ -1112,10 +1112,10 @@ def test_mock_scheme_write_read_roundtrip_sparkless(tmp_path):
     srdr.initialOffset()
     assert srdr.latestOffset() == {"version": 1, "index": 1}
     # the CAS is the adapter's conditional create: losing the race
-    # is the same loud ConcurrentSnapshotWrite as on local stores
+    # is the same loud ConcurrentCommit as on local stores
     m = _manifest(root, 1)
-    with pytest.raises(ConcurrentSnapshotWrite):
-        _cas_publish(root, 1, dict(m))
+    with pytest.raises(ConcurrentCommit):
+        _commit_manifest(root, 1, dict(m))
     # every byte moved through the adapter, none around it
     assert any(c[0] == "write_bytes" for c in fs.calls)
     assert any(c[0] == "open_in" for c in fs.calls)
@@ -1139,7 +1139,7 @@ def test_register_snapshot_table_adapter_export_path(
         LongType, StringType, StructField, StructType,
     )
     from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources import (
-        register_snapshot_table,
+        register_snapshot_table, snapshot_tags,
     )
     from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.sources.spark_source import (
         SnapshotBatchWriter,
@@ -1156,11 +1156,12 @@ def test_register_snapshot_table_adapter_export_path(
     exp = str(tmp_path / "exports")
     with pytest.raises(ValueError, match="export_path"):
         register_snapshot_table(spark, "cat_mock", root)
-    with pytest.raises(ValueError, match="protect"):
-        register_snapshot_table(spark, "cat_mock", root,
-                                export_path=exp, protect=True)
+    # protect=True tags the pinned version through the adapter
     info = register_snapshot_table(spark, "cat_mock", root,
-                                   export_path=exp)
+                                   export_path=exp, protect=True)
+    tag = "registered-" + os.path.basename(os.path.dirname(
+        info["location"]))
+    assert snapshot_tags(spark, root) == {tag: 0}
     assert info["link_mode"] == "copy"
     assert info["location"].startswith(exp)
     got = spark.sql("SELECT id, day FROM cat_mock ORDER BY id"

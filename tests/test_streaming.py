@@ -995,10 +995,9 @@ def test_snapshot_append_stream_builds_prunable_zone_maps(spark,
         checkpoint_dir=str(tmp_path / "ckpt"), stats_cols=["v"])
     q.awaitTermination(180)
 
-    m = snapmod._load_manifest(spark, path,
-                               snapmod.latest_version(spark, path))
+    m = snapmod._manifest(path, snapmod.latest_version(spark, path))
     assert m["stats_cols"] == ["v"]
-    entries = snapmod._manifest_entries(spark, path, m)
+    entries = snapmod._entries(path, m)
     assert all("v" in (e.get("stats") or {}) for e in entries)
 
     st = scan_pruning_stats(spark, path, [("v", ">=", 200.0)])
@@ -1021,8 +1020,7 @@ def test_snapshot_append_stream_builds_prunable_zone_maps(spark,
         path=path, partition_cols=["day"],
         checkpoint_dir=str(tmp_path / "ckpt2"), source="s2")
     q2.awaitTermination(180)
-    m2 = snapmod._load_manifest(spark, path,
-                                snapmod.latest_version(spark, path))
+    m2 = snapmod._manifest(path, snapmod.latest_version(spark, path))
     assert m2["stats_cols"] == ["v"]
     st2 = scan_pruning_stats(spark, path, [("v", ">=", 900.0)])
     assert st2["files_read"] == 1
